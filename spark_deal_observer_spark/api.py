@@ -63,7 +63,17 @@ def create_app(
                 if name not in REGISTRY:
                     self._send_json(404, {"error": f"unknown query {name!r}"})
                     return
-                limit = min(int(params.get("limit", [row_cap])[0]), row_cap)
+                raw_limit = params.get("limit", [str(row_cap)])[0]
+                try:
+                    limit = int(raw_limit)
+                except ValueError:
+                    limit = -1
+                if limit < 0:
+                    self._send_json(
+                        400, {"error": f"limit must be a non-negative integer, got {raw_limit!r}"}
+                    )
+                    return
+                limit = min(limit, row_cap)
                 try:
                     df = REGISTRY[name].fn(spark, sf_dir).limit(limit)
                     rows = [r.asDict(recursive=True) for r in df.collect()]

@@ -10,7 +10,8 @@ LRU cache; here the whole tick is ONE dataflow:
       → broadcast join against the peer dimension (the LRU cache's analog)
       → broadcast join against the payload dimension (the piece indexer)
       → state-transition column expressions
-      → merge_update back into the state table
+      → the attempted rows, which the caller merges into the state table
+        (`sink.merge_overwrite`, or `merge_update` over a frame)
 
 No per-row RPC, no Python in the loop — the dimension tables stand in for
 the external services exactly the way the reference's own test doubles do
@@ -23,8 +24,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from .merge import merge_update
 
 NOT_QUERIED = "PAYLOAD_CID_NOT_QUERIED_YET"
 UNRESOLVED = "PAYLOAD_CID_UNRESOLVED"
@@ -66,7 +65,11 @@ def resolve_tick(
     now: Column,
     max_deals: int | None = 1000,
 ) -> DataFrame:
-    """One enrichment tick: returns the post-merge state table.
+    """One enrichment tick: returns ONLY the attempted rows — one per
+    work-queue deal, so at most `max_deals` — in their post-transition
+    state and with the `deals` schema. Merge them by `id` to get the next
+    state table: `merge_update(deals, out, ["id"])` over frames, or
+    `sink.merge_overwrite(out, ["id"])` against a stored table.
 
     State transitions (resolve-payload-cids.js:40-51):
       payload found                        → RESOLVED, payload_cid set
@@ -92,15 +95,13 @@ def resolve_tick(
         .when(state == UNRESOLVED, TERMINAL)
         .otherwise(UNRESOLVED)
     )
-    updated = enriched.select(
+    return enriched.select(
         *[c for c in deals.columns if c not in
           ("payload_cid", "payload_retrievability_state", "last_payload_retrieval_attempt")],
         F.when(found, F.col("found_payload")).alias("payload_cid"),
         new_state.alias("payload_retrievability_state"),
         now.alias("last_payload_retrieval_attempt"),
     ).select(*deals.columns)
-
-    return merge_update(deals, updated, ["id"])
 
 
 def state_counts(deals: DataFrame) -> DataFrame:

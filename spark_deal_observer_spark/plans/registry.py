@@ -2331,7 +2331,8 @@ def q_resolve_state_tick(spark, sf_dir):
             "payload_cid", F.concat(F.lit("bafyres"), F.col("peer_id"), F.col("piece_cid"))
         )
     )
-    out = resolve_tick(deals, peers, pay, F.lit(REF_TS).cast("timestamp_ntz"), 1000)
+    attempted = resolve_tick(deals, peers, pay, F.lit(REF_TS).cast("timestamp_ntz"), 1000)
+    out = merge_update(deals, attempted, ["id"])
     return out.select(
         "id", "payload_cid", "payload_retrievability_state", "last_payload_retrieval_attempt"
     )

@@ -28,6 +28,7 @@ reference's layering.
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Callable, Sequence
 from typing import Any
 
@@ -39,6 +40,8 @@ from .sink import DealTableSink
 
 Poster = Callable[[list[dict[str, Any]]], dict[str, int]]
 DEFAULT_BATCH_SIZE = 100  # SPARK_API_SUBMIT_DEALS_BATCH_SIZE default
+
+log = logging.getLogger(__name__)
 
 
 def _batches(rows, size: int):
@@ -60,11 +63,13 @@ def submit_eligible(
     batch_size: int = DEFAULT_BATCH_SIZE,
     eligible: Callable[[DataFrame], DataFrame] = eligible_deals,
 ) -> dict[str, int]:
-    """One egress tick. Returns {'submitted': n, 'ingested': n, 'skipped': n}.
+    """One egress tick. Returns {'submitted': n, 'ingested': n, 'skipped': n,
+    'failed_batches': n}.
 
-    Failed POSTs skip the batch (logged by the caller via the returned
-    counts) and leave submitted_at NULL, so the next tick retries them —
-    the reference's semantics (spark-api-submit-deals.js:17-29).
+    A POST that raises skips its batch: the exception is logged, the batch
+    counts in `failed_batches`, and its deals keep submitted_at NULL, so
+    the next tick retries them — the reference's semantics
+    (spark-api-submit-deals.js:17-29).
 
     The whole read-eligible → POST → mark-submitted span holds the table
     lock: under the reference's concurrent three-loop deployment, an
@@ -94,7 +99,7 @@ def _submit_eligible_locked(
     deals = sink.read()
     todo = eligible(deals)
 
-    result = {"submitted": 0, "ingested": 0, "skipped": 0}
+    result = {"submitted": 0, "ingested": 0, "skipped": 0, "failed_batches": 0}
     ok_ids: list[int] = []
     for batch in _batches(todo.toLocalIterator(), batch_size):
         payload = [
@@ -110,8 +115,10 @@ def _submit_eligible_locked(
         ]
         try:
             resp = poster(payload)
-        except Exception:
-            continue  # batch skipped, not retried this pass (T7)
+        except Exception:  # batch skipped, not retried this pass (T7)
+            log.exception("egress: POST of %d deals failed, batch skipped", len(batch))
+            result["failed_batches"] += 1
+            continue
         result["submitted"] += len(batch)
         result["ingested"] += int(resp.get("ingested", len(batch)))
         result["skipped"] += int(resp.get("skipped", 0))
@@ -140,7 +147,8 @@ def submit_eligible_distributed(
 
     `poster` is serialized to the workers (it must be picklable and safe to
     call concurrently from N partitions). Partial failure keeps the
-    reference's semantics: a failed batch yields no ids, its deals stay
+    reference's semantics: a failed batch is logged (in the executor's log)
+    and counted in `failed_batches`, yields no ids, its deals stay
     unflagged, and the next tick retries them."""
 
     def post_partition(it):
@@ -162,37 +170,39 @@ def submit_eligible_distributed(
                 ]
                 try:
                     resp = poster(payload)
-                except Exception:
-                    continue  # batch skipped, not retried this pass (T7)
+                except Exception:  # batch skipped, not retried this pass (T7)
+                    log.exception("egress: POST of %d deals failed, batch skipped", len(chunk))
+                    # one id-less row carries the failure to the counters
+                    yield pd.DataFrame(
+                        {"id": [None], "ingested": [0], "skipped": [0], "failed": [1]}
+                    )
+                    continue
                 n = len(chunk)
                 # batch-level counters ride on the first row only, so a plain
                 # column sum downstream counts each batch once
                 ingested = [int(resp.get("ingested", n))] + [0] * (n - 1)
                 skipped = [int(resp.get("skipped", 0))] + [0] * (n - 1)
                 yield pd.DataFrame(
-                    {"id": chunk["id"], "ingested": ingested, "skipped": skipped}
+                    {"id": chunk["id"], "ingested": ingested, "skipped": skipped, "failed": 0}
                 )
 
     deals = sink.read()
     todo = eligible(deals)
-    ok = todo.mapInPandas(post_partition, "id long, ingested int, skipped int")
+    ok = todo.mapInPandas(post_partition, "id long, ingested int, skipped int, failed int")
     # Materialize the POSTing pass exactly ONCE and truncate its lineage:
     # both downstream consumers (the counter aggregate and the mark-submitted
     # semi-join) read the checkpointed result, so the poster can never fire
     # twice for one tick — and nothing row-shaped ever crosses to the driver
     # (per-row collect() here would bottleneck the driver at 100× the
-    # reference's eligible-deal volume; only three counters come back).
+    # reference's eligible-deal volume; only four counters come back).
     ok = ok.localCheckpoint(eager=True)
     counters = ok.agg(
-        F.count("*").alias("submitted"),
+        F.count("id").alias("submitted"),
         F.coalesce(F.sum("ingested"), F.lit(0)).alias("ingested"),
         F.coalesce(F.sum("skipped"), F.lit(0)).alias("skipped"),
+        F.coalesce(F.sum("failed"), F.lit(0)).alias("failed_batches"),
     ).collect()[0]
-    result = {
-        "submitted": int(counters["submitted"]),
-        "ingested": int(counters["ingested"]),
-        "skipped": int(counters["skipped"]),
-    }
+    result = {k: int(v) for k, v in counters.asDict().items()}
     if result["submitted"]:
         flag = now if now is not None else F.current_timestamp().cast("timestamp_ntz")
         updates = deals.join(F.broadcast(ok.select("id")), "id", "left_semi").withColumn(

@@ -9,8 +9,11 @@ read-modify-write — the tradeoff SURVEY.md §7 Phase 4 documents):
     parquet append is atomic-enough here (new part-files), and the anti-join
     makes replays idempotent — at-least-once delivery × keyed dedup =
     effectively-once, exactly the reference's guarantee.
-  * `merge_overwrite` — the UPDATE shapes (S7/S8): rewrite the table with
-    merge_update applied, staged to a temp dir then swapped.
+  * `merge_overwrite` — the UPDATE shapes (S7/S8): given ONLY the changed
+    rows, rewrite the table with merge_update applied, staged to a temp dir
+    then swapped. The updates are materialized once per write (`_once`), so
+    the plan that produced them (a work-queue top-k, a semi-join) runs once
+    however many times the write reads them.
 
 `PartitionedDealTableSink` is the 100 TB shape of the same interface: the
 table is partitioned by an epoch bucket (`activated_at_epoch DIV width`),
@@ -40,6 +43,15 @@ from ..operators.merge import DEAL_KEY, dedup_insert, merge_update
 from .atomic import gc_swap_debris
 from .atomic import swap_dir as _swap_dir
 from .concurrency import table_lock
+
+
+def _once(df: DataFrame) -> DataFrame:
+    """`df` materialized now, with its lineage cut. A write reads its input
+    more than once (the bucket probe, the merge's key side and its rows);
+    without this each read re-runs the input's whole plan — usually a scan
+    of the very table being rewritten. Call it inside the table lock: it
+    reads the live table, which the write swaps only afterwards."""
+    return df.localCheckpoint(eager=True)
 
 
 class DealTableSink:
@@ -91,18 +103,22 @@ class DealTableSink:
             new_rows = dedup_insert(batch, self.read(), self.key)
             new_rows.write.mode("append").parquet(self.path)
 
-    def merge_overwrite(self, updates: DataFrame, on: Sequence[str]) -> None:
-        """MERGE WHEN MATCHED THEN UPDATE via staged rewrite.
+    def _rewrite(self, rows: DataFrame) -> None:
+        """Stage `rows` as the new table, then swap it in.
 
         Swap ordering is restore-on-failure: the live dir is moved aside and
         put back if the staged rename fails, so the only window without a
         live table is a process kill between the two renames (documented
         local-FS assumption — see module docstring)."""
+        tmp = f"{self.path}__stage_{uuid.uuid4().hex[:8]}"
+        rows.write.mode("overwrite").parquet(tmp)
+        _swap_dir(tmp, self.path)
+
+    def merge_overwrite(self, updates: DataFrame, on: Sequence[str]) -> None:
+        """MERGE WHEN MATCHED THEN UPDATE via staged rewrite. `updates` holds
+        only the changed rows (e.g. `resolve_tick`'s output)."""
         with table_lock(self.path):
-            merged = merge_update(self.read(), updates, list(on))
-            tmp = f"{self.path}__stage_{uuid.uuid4().hex[:8]}"
-            merged.write.mode("overwrite").parquet(tmp)
-            _swap_dir(tmp, self.path)
+            self._rewrite(merge_update(self.read(), _once(updates), list(on)))
 
     def delete_keys(self, keys: DataFrame) -> None:
         """MERGE WHEN MATCHED THEN DELETE via staged rewrite: drop stored
@@ -111,12 +127,11 @@ class DealTableSink:
         side is a micro-batch → broadcast anti-join; idempotent (deleting
         an absent key is a no-op), so replays are safe."""
         with table_lock(self.path):
-            remaining = self.read().join(
-                keys.select(*self.key).dropDuplicates(self.key), self.key, "left_anti"
+            self._rewrite(
+                self.read().join(
+                    keys.select(*self.key).dropDuplicates(self.key), self.key, "left_anti"
+                )
             )
-            tmp = f"{self.path}__stage_{uuid.uuid4().hex[:8]}"
-            remaining.write.mode("overwrite").parquet(tmp)
-            _swap_dir(tmp, self.path)
 
     def count(self) -> int:
         return self.read().count() if self.exists() else 0
@@ -223,56 +238,49 @@ class PartitionedDealTableSink(DealTableSink):
             result[bucket] = want
         return result
 
+    def _rewrite_buckets(self, rows: DataFrame, buckets: list[int]) -> None:
+        """Stage `rows` (which must hold the complete new content of
+        `buckets`) partitioned by bucket, then swap each bucket's directory;
+        a bucket left with no rows is removed."""
+        tmp = f"{self.path}__stage_{uuid.uuid4().hex[:8]}"
+        rows.write.mode("overwrite").partitionBy(self.PCOL).parquet(tmp)
+        try:
+            for b in buckets:
+                part = f"{self.PCOL}={b}"
+                staged_part = os.path.join(tmp, part)
+                live = os.path.join(self.path, part)
+                if os.path.exists(staged_part):
+                    _swap_dir(staged_part, live)
+                elif os.path.exists(live):
+                    shutil.rmtree(live)  # every row of the bucket deleted
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+
     def merge_overwrite(self, updates: DataFrame, on: Sequence[str]) -> None:
-        """Partition-scoped MERGE: stage the merged version of ONLY the
-        partitions the updates intersect, then swap those directories."""
+        """Partition-scoped MERGE: `updates` holds only the changed rows
+        (e.g. `resolve_tick`'s output). They are evaluated once — the bucket
+        probe and the staged write share one materialized copy — and only
+        the partitions they intersect are read, merged and swapped."""
         from pyspark.sql import functions as F
 
-        updates = self._with_bucket(updates)
         with table_lock(self.path):
+            updates = _once(self._with_bucket(updates))
             buckets = self._buckets_of(updates)
             base = self._read_raw().where(F.col(self.PCOL).isin(buckets))
-            merged = merge_update(base, updates, list(on))
-            tmp = f"{self.path}__stage_{uuid.uuid4().hex[:8]}"
-            merged.write.mode("overwrite").partitionBy(self.PCOL).parquet(tmp)
-            try:
-                for b in buckets:
-                    part = f"{self.PCOL}={b}"
-                    staged_part = os.path.join(tmp, part)
-                    if os.path.exists(staged_part):
-                        _swap_dir(staged_part, os.path.join(self.path, part))
-                    else:
-                        # merged away entirely (possible only under key deletes)
-                        live = os.path.join(self.path, part)
-                        if os.path.exists(live):
-                            shutil.rmtree(live)
-            finally:
-                shutil.rmtree(tmp, ignore_errors=True)
+            self._rewrite_buckets(merge_update(base, updates, list(on)), buckets)
 
     def delete_keys(self, keys: DataFrame) -> None:
         """Partition-scoped key delete: rewrite ONLY the epoch buckets the
         keys intersect (keys carry activated_at_epoch — it is part of
         DEAL_KEY — so the bucket set is derivable and the rewrite stays
-        O(batch-epoch-range), never O(table))."""
+        O(batch-epoch-range), never O(table)). The keys are evaluated once,
+        like merge_overwrite's updates."""
         from pyspark.sql import functions as F
 
-        keys = self._with_bucket(
-            keys.select(*self.key).dropDuplicates(self.key)
-        )
         with table_lock(self.path):
+            keys = _once(self._with_bucket(keys.select(*self.key).dropDuplicates(self.key)))
             buckets = self._buckets_of(keys)
             base = self._read_raw().where(F.col(self.PCOL).isin(buckets))
-            remaining = base.join(keys.drop(self.PCOL), self.key, "left_anti")
-            tmp = f"{self.path}__stage_{uuid.uuid4().hex[:8]}"
-            remaining.write.mode("overwrite").partitionBy(self.PCOL).parquet(tmp)
-            try:
-                for b in buckets:
-                    part = f"{self.PCOL}={b}"
-                    staged_part = os.path.join(tmp, part)
-                    live = os.path.join(self.path, part)
-                    if os.path.exists(staged_part):
-                        _swap_dir(staged_part, live)
-                    elif os.path.exists(live):
-                        shutil.rmtree(live)  # every row of the bucket deleted
-            finally:
-                shutil.rmtree(tmp, ignore_errors=True)
+            self._rewrite_buckets(
+                base.join(keys.drop(self.PCOL), self.key, "left_anti"), buckets
+            )

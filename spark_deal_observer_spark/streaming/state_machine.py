@@ -1,8 +1,9 @@
 """Streaming keyed retry state machine (reference T5), on Spark's stateful
 streaming API.
 
-The batch formulation (operators/state.py::resolve_tick) rewrites the state
-table each tick; this is the streaming-native alternative: per-deal state
+The batch formulation (operators/state.py::resolve_tick, merged by the
+sink) rewrites the state table's touched partitions each tick; this is the
+streaming-native alternative: per-deal state
 lives in Spark's state store, keyed by deal id, and each micro-batch of
 resolution attempts drives the transition
 

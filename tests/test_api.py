@@ -67,3 +67,14 @@ def test_unknown_query_404(api):
         raise AssertionError("expected HTTPError")
     except urllib.error.HTTPError as e:
         assert e.code == 404
+
+
+@pytest.mark.parametrize("limit", ["abc", "-1", "1.5"])
+def test_bad_limit_is_a_400_json_error(api, limit):
+    """A malformed or negative `limit` gets a JSON 400, not a dropped
+    connection or an unchecked DataFrame.limit."""
+    with pytest.raises(urllib.error.HTTPError) as err:
+        _get(f"{api}/query?name=eligible_deals&limit={limit}")
+    assert err.value.code == 400
+    assert err.value.headers["Content-Type"] == "application/json"
+    assert "limit" in json.loads(err.value.read())["error"]

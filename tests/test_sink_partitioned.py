@@ -10,6 +10,8 @@ import os
 from conftest import SF_SMALL
 from pyspark.sql import functions as F
 
+from spark_deal_observer_spark.operators.merge import merge_update
+from spark_deal_observer_spark.operators.state import resolve_tick
 from spark_deal_observer_spark.plans.deals import REF_TS, deals_df
 from spark_deal_observer_spark.streaming.egress import submit_eligible
 from spark_deal_observer_spark.streaming.sink import PartitionedDealTableSink
@@ -168,3 +170,82 @@ def test_delete_keys_rewrites_only_intersected_partitions(spark, tmp_path):
     # replay: deleting already-absent keys changes nothing
     sink.delete_keys(dead)
     assert sink.read().count() == n_all - n_dead
+
+
+def _counting_filter(spark):
+    """(accumulator, column-predicate UDF): the UDF passes every row and
+    adds one to the accumulator per row it sees, so the accumulator counts
+    how many times the plan beneath it was evaluated, row for row."""
+    seen = spark.sparkContext.accumulator(0)
+
+    def keep(_v):
+        seen.add(1)
+        return True
+
+    return seen, F.udf(keep, "boolean")
+
+
+def test_merge_overwrite_equals_merge_update_over_whole_table(spark, tmp_path):
+    """Handing the sink ONLY the attempted rows of an enrichment tick
+    yields exactly the table a whole-table merge_update gives, even when
+    those rows span several epoch buckets."""
+    deals = deals_df(spark, SF_SMALL)
+    sink = PartitionedDealTableSink(spark, str(tmp_path / "table"))
+    sink.append_dedup(deals)
+    before = sink.read().localCheckpoint()  # pin rows: the swap replaces the files
+
+    peers = (
+        before.where(F.col("miner_id") % 3 != 0).select("miner_id").dropDuplicates()
+        .withColumn("peer_id", F.concat(F.lit("peer"), F.col("miner_id").cast("string")))
+    )
+    pays = (
+        before.join(peers, "miner_id").where(F.col("client_id") % 2 == 0)
+        .select("peer_id", "piece_cid").dropDuplicates()
+        .withColumn("payload_cid", F.concat(F.lit("bafyres"), F.col("piece_cid")))
+    )
+    now = F.lit(REF_TS).cast("timestamp_ntz")
+    updates = resolve_tick(before, peers, pays, now, max_deals=300).localCheckpoint()
+    n_buckets = updates.select(
+        (F.col("activated_at_epoch") / sink.bucket_width).cast("int")
+    ).distinct().count()
+    assert n_buckets >= 2
+    assert 0 < updates.count() < before.count()
+
+    sink.merge_overwrite(updates, ["id"])
+    got, want = sink.read(), merge_update(before, updates, ["id"])
+    assert got.count() == want.count() == before.count()
+    assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
+
+
+def test_merge_overwrite_evaluates_updates_once(spark, tmp_path):
+    """The bucket probe and the staged write share one materialized copy
+    of `updates`: the plan that produced them runs once per write."""
+    deals = deals_df(spark, SF_SMALL)
+    sink = PartitionedDealTableSink(spark, str(tmp_path / "table"))
+    sink.append_dedup(deals)
+    now = F.lit(REF_TS).cast("timestamp_ntz")
+    pinned = (
+        sink.read().where(F.col("activated_at_epoch") < 4622200)
+        .withColumn("submitted_at", now).localCheckpoint()
+    )
+    seen, keep = _counting_filter(spark)
+
+    sink.merge_overwrite(pinned.where(keep("id")), ["id"])
+    assert seen.value == pinned.count() > 0
+    assert sink.read().where(F.col("submitted_at") == now).count() >= seen.value
+
+
+def test_delete_keys_evaluates_keys_once(spark, tmp_path):
+    deals = deals_df(spark, SF_SMALL)
+    sink = PartitionedDealTableSink(spark, str(tmp_path / "table"))
+    sink.append_dedup(deals)
+    n_all = sink.count()
+    pinned = (
+        deals.where(F.col("miner_id") % 2 == 0).select(*sink.key).dropDuplicates()
+        .localCheckpoint()
+    )
+    seen, keep = _counting_filter(spark)
+
+    sink.delete_keys(pinned.where(keep("miner_id")))
+    assert seen.value == pinned.count() > 0
+    assert sink.count() == n_all - seen.value

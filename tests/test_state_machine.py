@@ -9,6 +9,7 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
+from spark_deal_observer_spark.operators.merge import merge_update
 from spark_deal_observer_spark.operators.state import (
     NOT_QUERIED,
     RESOLVED,
@@ -54,8 +55,8 @@ def dims(spark):
 def run(spark, rows, max_deals=1000):
     deals = mkdeals(spark, rows)
     peers, payloads = dims(spark)
-    out = resolve_tick(deals, peers, payloads, F.lit(NOW).cast("timestamp_ntz"), max_deals)
-    return {r.id: r for r in out.collect()}
+    attempted = resolve_tick(deals, peers, payloads, F.lit(NOW).cast("timestamp_ntz"), max_deals)
+    return {r.id: r for r in merge_update(deals, attempted, ["id"]).collect()}
 
 
 def test_first_attempt_resolves(spark):
@@ -120,3 +121,26 @@ def test_max_deals_bounds_work_oldest_first(spark):
     got = [r.id for r in q.collect()]
     # oldest (smallest activated_at_epoch) first → highest ids here
     assert got == [9, 8, 7]
+
+
+def test_resolve_tick_returns_only_the_work_queue(spark):
+    """The tick's output is the attempted rows alone — min(queue,
+    max_deals) of them, every one from the work queue and stamped `now` —
+    not the merged table: untouched rows (backoff, terminal, resolved,
+    beyond the bound) never reach the caller's write."""
+    now = F.lit(NOW).cast("timestamp_ntz")
+    queued = [(i, 1000 - i, 1 + i % 3, 1, "baga1", None, NOT_QUERIED, None) for i in range(6)]
+    idle = [
+        (10, 1, 2, 1, "baga9", None, UNRESOLVED, RECENT),
+        (11, 1, 1, 1, "baga1", "bafyX", RESOLVED, OLD),
+        (12, 1, 1, 1, "baga1", None, TERMINAL, OLD),
+    ]
+    deals = mkdeals(spark, queued + idle)
+    peers, payloads = dims(spark)
+    for max_deals, want in ((4, 4), (1000, 6), (None, 6)):
+        queue = {r.id for r in work_queue(deals, now, max_deals).collect()}
+        out = resolve_tick(deals, peers, payloads, now, max_deals).collect()
+        assert len(out) == want == len(queue)
+        assert {r.id for r in out} == queue
+        assert all(r.last_payload_retrieval_attempt == NOW for r in out)
+        assert out[0].__fields__ == deals.columns

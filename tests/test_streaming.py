@@ -4,6 +4,7 @@ cross-batch dedup (T6), bounded egress batches with partial failure (T7)."""
 from __future__ import annotations
 
 import datetime as dt
+import logging
 
 import pytest
 from conftest import SF_SMALL
@@ -62,7 +63,7 @@ def test_ingest_end_to_end_idempotent(spark, dirs):
     assert sink.count() == first
 
 
-def test_egress_partial_failure_then_retry(spark, dirs):
+def test_egress_partial_failure_then_retry(spark, dirs, caplog):
     deals = deals_df(spark, SF_SMALL)
     sink = DealTableSink(spark, dirs["table"])
     sink.append_dedup(deals)
@@ -77,9 +78,14 @@ def test_egress_partial_failure_then_retry(spark, dirs):
         return {"ingested": len(payload), "skipped": 0}
 
     now = F.lit(REF_TS).cast("timestamp_ntz")
-    res1 = submit_eligible(sink, flaky_poster, now=now)
+    with caplog.at_level(logging.ERROR, logger="spark_deal_observer_spark.streaming.egress"):
+        res1 = submit_eligible(sink, flaky_poster, now=now)
     n_eligible = sum(calls)
     assert res1["submitted"] == n_eligible - calls[1]  # failed batch skipped
+    assert res1["failed_batches"] == 1
+    # the skipped batch's exception is logged with its traceback
+    (failure,) = [r for r in caplog.records if r.exc_info]
+    assert isinstance(failure.exc_info[1], ConnectionError)
     assert sink.count() == stored  # merge rewrites, never grows
 
     # next tick retries only the failed batch's deals
@@ -91,6 +97,7 @@ def test_egress_partial_failure_then_retry(spark, dirs):
 
     res2 = submit_eligible(sink, ok_poster, now=now)
     assert res2["submitted"] == calls[1]
+    assert res2["failed_batches"] == 0
     assert sum(calls2) == calls[1]
 
     # third tick: nothing left
@@ -293,6 +300,7 @@ def test_egress_distributed_partial_failure(spark, dirs):
 
     res1 = submit_eligible_distributed(sink, poster, now=now, batch_size=7)
     assert res1["submitted"] > 0
+    assert res1["failed_batches"] > 0 and res_ref["failed_batches"] > 0
     flagged = sink.read().where(F.col("submitted_at") == now).count()
     assert flagged == res1["submitted"] == res1["ingested"]
 
