@@ -328,7 +328,7 @@ def main() -> None:
     for name in sorted(timings, key=lambda n: -timings[n]):
         entry = len(json.dumps({name: timings[name]}, separators=(",", ":")))
         if budget - entry < 0:
-            break
+            continue
         budget -= entry
         summary["queries"][name] = timings[name]
     print(json.dumps(summary, separators=(",", ":")))

@@ -332,7 +332,7 @@ def histogram_quantile_audit(events: DataFrame) -> DataFrame:
     # `percentile` dropped, once with it). The always-true guard
     # (`n >= 1`: every group has ≥1 non-null value by the filter below;
     # `size(qs) >= 0`: percentile of a non-empty group is a non-null
-    # 13-element array) references n and qs, keeping the aggregate output
+    # 3-element array) references n and qs, keeping the aggregate output
     # identical on both branches — ONE bounds pass, ReusedExchange pinned
     # in tests/test_plans.py. Values unchanged (the guard filters nothing).
     binned = (

@@ -1,6 +1,6 @@
-"""Change-data-capture audit feed over the deal-table sinks.
+"""Change-data-capture audit feed over the deal-table sink.
 
-The merge sinks apply upserts; this wrapper derives each tick's CHANGE SET
+The merge sink applies upserts; this wrapper derives each tick's CHANGE SET
 — which keys were added, which changed and which FIELDS changed — before
 delegating the write, and appends it to an audit log partitioned by
 batch_id. `snapshot_diff` (plans/registry.py) is the batch form of the same
@@ -13,7 +13,7 @@ of what each tick did to the table).
 Scale posture:
   * the diff reads the stored table ONCE per tick through a semi-join on
     the batch's keys — the batch side broadcasts, the table side is a
-    scan-stage filter (partition-pruned under PartitionedDealTableSink),
+    scan-stage filter (partition-pruned by the sink's epoch buckets),
     so the audit costs O(batch), never O(table);
   * the batch is localCheckpoint'ed once and feeds both the diff and the
     delegated merge — one evaluation of the upstream plan per tick;
@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .atomic import SnapshotStore
-from .sink import DealTableSink
+from .sink import PartitionedDealTableSink
 
 
 class ChangeFeedSink:
@@ -40,7 +40,7 @@ class ChangeFeedSink:
     def __init__(
         self,
         spark: SparkSession,
-        sink: DealTableSink,
+        sink: PartitionedDealTableSink,
         out_path: str,
         compare_cols: Sequence[str] | None = None,
         compensate_reverts: bool = False,

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..plans.deals import DEAL_SELECT_EXPRS
-from .sink import DealTableSink, PartitionedDealTableSink
+from .sink import PartitionedDealTableSink
 
 # Finality lag: 940 epochs × 30 s ≈ 7 h 50 m (deal-observer-backend.js:29-34).
 FINALITY_LAG = "470 minutes"
@@ -70,15 +70,12 @@ def start_ingest(
     available_now: bool = False,
     processing_time: str = "10 seconds",
     max_files_per_trigger: int | None = None,
-    partitioned: bool = True,
 ) -> StreamingQuery:
-    """Start the ingest query writing into a deal-table sink.
-
-    Defaults to the epoch-bucket-partitioned sink: each micro-batch's
-    anti-join reads and appends only the partitions the batch intersects —
-    O(batch) per tick regardless of table size."""
-    sink_cls = PartitionedDealTableSink if partitioned else DealTableSink
-    sink = sink_cls(spark, table_dir)
+    """Start the ingest query writing into the epoch-partitioned deal
+    table: each micro-batch's anti-join reads and appends only the
+    partitions the batch intersects — O(batch) per tick regardless of
+    table size."""
+    sink = PartitionedDealTableSink(spark, table_dir)
     stream = deals_stream(read_event_stream(spark, source_dir, max_files_per_trigger))
     # observe() = the telemetry hook (reference S11): per-batch row counts
     # surface in StreamingQueryProgress without a second pass.

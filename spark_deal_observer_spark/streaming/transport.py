@@ -3,9 +3,8 @@
 The reference wraps every outbound RPC in `pRetry(..., {retries: 5})` with
 exponential backoff (backend/lib/rpc-service/service.js:19-44) and the
 piece-indexer lookup likewise (piece-indexer-service.js:22-25). This module
-is the engine's analog: a picklable callable wrapper usable both driver-side
-(`submit_eligible`) and inside executors (`submit_eligible_distributed`'s
-mapInPandas closure serializes it with the poster).
+is the engine's analog: a callable wrapper around the egress poster
+(`submit_eligible(sink, with_retries(poster), ...)`).
 
 Per-CALL retry composes with the egress loop's per-BATCH skip (T7): a batch
 is skipped for the tick only after its call has exhausted the retry budget,
@@ -40,9 +39,8 @@ class RetriesExhausted(Exception):
 class with_retries:
     """Wrap `fn` with capped-exponential-backoff retries + full jitter.
 
-    A class (not a closure) so the wrapper pickles cleanly into executor
-    tasks. Delay for attempt k is `uniform(0, min(base * 2**k, max_delay))`
-    — AWS-style full jitter, which decorrelates a fleet of executors all
+    Delay for attempt k is `uniform(0, min(base * 2**k, max_delay))` —
+    AWS-style full jitter, which decorrelates a fleet of observers all
     retrying against the same struggling endpoint.
     """
 

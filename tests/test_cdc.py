@@ -9,19 +9,22 @@ from pyspark.sql import functions as F
 
 from spark_deal_observer_spark.plans.deals import REF_TS, deals_df
 from spark_deal_observer_spark.streaming.cdc import ChangeFeedSink
-from spark_deal_observer_spark.streaming.sink import DealTableSink
+from spark_deal_observer_spark.streaming.sink import PartitionedDealTableSink
 
 
 def _frame(spark):
     return deals_df(spark, SF_SMALL).select(
-        "id", "payload_retrievability_state", "last_payload_retrieval_attempt"
+        "id",
+        "activated_at_epoch",  # the sink's partition bucket derives from it
+        "payload_retrievability_state",
+        "last_payload_retrieval_attempt",
     )
 
 
 def test_change_feed_audits_adds_changes_and_replay(spark, tmp_path):
     deals = _frame(spark).localCheckpoint()
     first = deals.where(F.col("id") % 3 != 0)
-    sink = DealTableSink(spark, str(tmp_path / "table"), key=["id"])
+    sink = PartitionedDealTableSink(spark, str(tmp_path / "table"), key=["id"])
     feed = ChangeFeedSink(spark, sink, str(tmp_path / "feed"))
 
     # tick 0: empty table -> every key audits as added
@@ -39,6 +42,7 @@ def test_change_feed_audits_adds_changes_and_replay(spark, tmp_path):
         F.col("payload_retrievability_state") == "PAYLOAD_CID_UNRESOLVED"
     ).select(
         "id",
+        "activated_at_epoch",
         F.lit("PAYLOAD_CID_RESOLVED").alias("payload_retrievability_state"),
         F.lit(REF_TS).cast("timestamp_ntz").alias("last_payload_retrieval_attempt"),
     )
@@ -90,7 +94,7 @@ def test_change_feed_compensates_reverts_opt_in(spark, tmp_path):
         .withColumn("reverted", F.lit(False))
         .localCheckpoint()
     )
-    sink = DealTableSink(spark, str(tmp_path / "table"), key=["id"])
+    sink = PartitionedDealTableSink(spark, str(tmp_path / "table"), key=["id"])
     feed = ChangeFeedSink(
         spark, sink, str(tmp_path / "feed"), compensate_reverts=True
     )
@@ -117,7 +121,7 @@ def test_change_feed_compensates_reverts_opt_in(spark, tmp_path):
     assert sink.read().count() == n_all - n_rev
 
     # default-off feed on a fresh table: reverted rows upsert flag-only
-    sink2 = DealTableSink(spark, str(tmp_path / "table2"), key=["id"])
+    sink2 = PartitionedDealTableSink(spark, str(tmp_path / "table2"), key=["id"])
     feed2 = ChangeFeedSink(spark, sink2, str(tmp_path / "feed2"))
     feed2.process_batch(deals, batch_id=0)
     feed2.process_batch(revert, batch_id=1)

@@ -166,30 +166,38 @@ def test_deal_sink_append_heals_partial_append(spark, tmp_path):
     part files landed, the rest didn't. Redelivery must complete the
     batch without duplicating the rows whose files made it in (the
     anti-join self-heal at whole-file granularity)."""
-    from spark_deal_observer_spark.streaming.sink import DealTableSink
+    from spark_deal_observer_spark.streaming.sink import (
+        PartitionedDealTableSink,
+    )
 
     deals = load_table(spark, SF_SMALL, "events").select(
         F.col("event_id").alias("deal_id"),
+        F.col("event_id").alias("activated_at_epoch"),
         F.col("event_type").alias("kind"),
     )
     first = deals.where(F.col("deal_id") % 2 == 0)
     second = deals.where(F.col("deal_id") % 2 == 1)
     path = str(tmp_path / "table")
-    sink = DealTableSink(spark, path, key=["deal_id"])
+    sink = PartitionedDealTableSink(
+        spark, path, key=["deal_id"], bucket_width=1000
+    )
     sink.append_dedup(first)
 
     # crash mid-append of `second`: exactly half its rows land as a
-    # committed part file inside the table dir (no marker semantics for
-    # appends — parquet append is new-files-only)
+    # committed part file inside their partition dir (no marker semantics
+    # for appends — parquet append is new-files-only)
     partial = second.where(F.col("deal_id") % 4 == 1)
     ptmp = str(tmp_path / "partial")
     partial.coalesce(1).write.mode("overwrite").parquet(ptmp)
     part = next(f for f in os.listdir(ptmp) if f.endswith(".parquet"))
     shutil.copy(
-        os.path.join(ptmp, part), os.path.join(path, "torn-" + part)
+        os.path.join(ptmp, part),
+        os.path.join(path, "epoch_bucket=0", "torn-" + part),
     )
 
-    restarted = DealTableSink(spark, path, key=["deal_id"])
+    restarted = PartitionedDealTableSink(
+        spark, path, key=["deal_id"], bucket_width=1000
+    )
     restarted.append_dedup(second)  # redelivery
     got = [
         (r["deal_id"], r["kind"]) for r in restarted.read().collect()
@@ -200,14 +208,19 @@ def test_deal_sink_append_heals_partial_append(spark, tmp_path):
 def test_deal_sink_gc_restores_lost_live_dir_and_sweeps_orphans(
     spark, tmp_path
 ):
-    from spark_deal_observer_spark.streaming.sink import DealTableSink
+    from spark_deal_observer_spark.streaming.sink import (
+        PartitionedDealTableSink,
+    )
 
     deals = load_table(spark, SF_SMALL, "events").select(
         F.col("event_id").alias("deal_id"),
+        F.col("event_id").alias("activated_at_epoch"),
         F.col("event_type").alias("kind"),
     )
     path = str(tmp_path / "table")
-    sink = DealTableSink(spark, path, key=["deal_id"])
+    sink = PartitionedDealTableSink(
+        spark, path, key=["deal_id"], bucket_width=1000
+    )
     sink.append_dedup(deals)
     n = sink.count()
 
@@ -218,7 +231,9 @@ def test_deal_sink_gc_restores_lost_live_dir_and_sweeps_orphans(
     os.rename(path, f"{path}__old_cafef00d")
     assert not os.path.exists(path)
 
-    restarted = DealTableSink(spark, path, key=["deal_id"])
+    restarted = PartitionedDealTableSink(
+        spark, path, key=["deal_id"], bucket_width=1000
+    )
     assert restarted.count() == n  # backup restored, not deleted
     assert not os.path.exists(f"{path}__stage_deadbeef")
     assert not os.path.exists(f"{path}__old_cafef00d")

@@ -5,6 +5,8 @@ guarantees (deal-observer-backend.js:165-173)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from conftest import SF_SMALL
@@ -22,7 +24,7 @@ from spark_deal_observer_spark.plans.deals import REF_TS
 from spark_deal_observer_spark.sources.tables import load_table
 from spark_deal_observer_spark.streaming.egress import submit_eligible
 from spark_deal_observer_spark.streaming.ingest import start_ingest
-from spark_deal_observer_spark.streaming.sink import DealTableSink
+from spark_deal_observer_spark.streaming.sink import PartitionedDealTableSink
 
 
 @pytest.mark.slow  # r10 test tier: see pytest.ini
@@ -33,7 +35,7 @@ def test_three_loops_end_to_end(spark, tmp_path):
     load_table(spark, SF_SMALL, "events").write.mode("overwrite").parquet(source)
     q = start_ingest(spark, source, table, ckpt, available_now=True)
     q.awaitTermination(120)
-    sink = DealTableSink(spark, table)
+    sink = PartitionedDealTableSink(spark, table)
     stored = sink.count()
     assert stored > 0
     assert sink.read().where(
@@ -115,6 +117,13 @@ def test_three_loops_end_to_end(spark, tmp_path):
     res2 = submit_eligible(sink, lambda p: {"ingested": len(p)}, now=now1)
     assert res2["submitted"] == 0
 
+    # -- layout: every loop's write kept the table epoch-partitioned -------
+    entries = os.listdir(table)
+    assert not [e for e in entries if e.endswith(".parquet")]  # no flat part files
+    parts = [e for e in entries if os.path.isdir(os.path.join(table, e))]
+    assert parts and all(p.startswith("epoch_bucket=") for p in parts), parts
+    assert "epoch_bucket" not in sink.read().columns
+
 
 @pytest.mark.slow  # r10 test tier: see pytest.ini
 def test_three_loops_concurrent_soak(spark, tmp_path):
@@ -126,7 +135,7 @@ def test_three_loops_concurrent_soak(spark, tmp_path):
     same state table — ingest as the file-source query, enrichment and
     egress as rate-source-clocked tick loops — serialized per tick by
     streaming/concurrency.table_lock. Invariants at the end: no lost
-    updates (every ingested key present exactly once despite full-table
+    updates (every ingested key present exactly once despite partition
     merge rewrites interleaving with appends), no deal both submitted
     and unresolved, and the egress counters agree with the flags in the
     table."""
@@ -161,7 +170,7 @@ def test_three_loops_concurrent_soak(spark, tmp_path):
         "append"
     ).parquet(source)
 
-    sink = DealTableSink(spark, table)
+    sink = PartitionedDealTableSink(spark, table)
     now1 = F.lit(REF_TS).cast("timestamp_ntz")
     errors: list = []
     enrich_ticks, egress_results, seen_counts = [], [], []
@@ -225,7 +234,7 @@ def test_three_loops_concurrent_soak(spark, tmp_path):
 
     q_ingest = start_ingest(
         spark, source, table, ck_i,
-        processing_time="1 second", partitioned=False,
+        processing_time="1 second",
     )
     q_enrich = rate_loop("soak_enrich", ck_e, enrich_tick)
     q_egress = rate_loop("soak_egress", ck_g, egress_tick)

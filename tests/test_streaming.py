@@ -16,7 +16,7 @@ from spark_deal_observer_spark.plans.deals import REF_TS, deals_df
 from spark_deal_observer_spark.sources.tables import load_table
 from spark_deal_observer_spark.streaming.egress import submit_eligible
 from spark_deal_observer_spark.streaming.ingest import start_ingest
-from spark_deal_observer_spark.streaming.sink import DealTableSink
+from spark_deal_observer_spark.streaming.sink import PartitionedDealTableSink
 
 
 @pytest.fixture()
@@ -42,7 +42,7 @@ def test_ingest_end_to_end_idempotent(spark, dirs):
         available_now=True, max_files_per_trigger=1,
     )
     _drain(q)
-    sink = DealTableSink(spark, dirs["table"])
+    sink = PartitionedDealTableSink(spark, dirs["table"])
     first = sink.count()
     assert first == n_keys
 
@@ -65,7 +65,7 @@ def test_ingest_end_to_end_idempotent(spark, dirs):
 
 def test_egress_partial_failure_then_retry(spark, dirs, caplog):
     deals = deals_df(spark, SF_SMALL)
-    sink = DealTableSink(spark, dirs["table"])
+    sink = PartitionedDealTableSink(spark, dirs["table"])
     sink.append_dedup(deals)
     stored = sink.count()
 
@@ -107,7 +107,7 @@ def test_egress_partial_failure_then_retry(spark, dirs, caplog):
 
 def test_egress_marks_submitted_at(spark, dirs):
     deals = deals_df(spark, SF_SMALL)
-    sink = DealTableSink(spark, dirs["table"])
+    sink = PartitionedDealTableSink(spark, dirs["table"])
     sink.append_dedup(deals)
     now = F.lit(REF_TS).cast("timestamp_ntz")
     res = submit_eligible(sink, lambda p: {"ingested": len(p)}, now=now)
@@ -116,91 +116,6 @@ def test_egress_marks_submitted_at(spark, dirs):
     )
     assert marked.count() == res["submitted"]
     assert res["ingested"] == res["submitted"]
-
-
-@pytest.mark.parametrize("api", ["applyInPandasWithState", "transformWithState"])
-def test_streaming_state_machine_transitions(spark, tmp_path, api):
-    """T5 as keyed streaming state: NOT_QUERIED→UNRESOLVED→(backoff gate)
-    →TERMINAL, NOT_QUERIED→RESOLVED, absorbing states — across restarts of
-    the query (state survives via checkpoint). Parameterized over BOTH
-    stateful APIs (VERDICT r7 #4): the transformWithStateInPandas variant
-    runs the identical shared fold but its state client needs protobuf —
-    absent here (and installs are forbidden), so the param skips with the
-    verified reason; it runs for real wherever protobuf exists."""
-    import pandas as pd
-
-    from spark_deal_observer_spark.operators.state import RESOLVED, TERMINAL, UNRESOLVED
-    from spark_deal_observer_spark.streaming.state_machine import (
-        ATTEMPT_SCHEMA,
-        resolution_state_stream,
-        resolution_state_stream_tws,
-        tws_available,
-    )
-
-    if api == "transformWithState":
-        if not tws_available():
-            pytest.skip(
-                "transformWithStateInPandas state client needs protobuf "
-                "(pyspark.sql.streaming.proto imports google.protobuf) — "
-                "not installed in this environment"
-            )
-        build = resolution_state_stream_tws
-    else:
-        build = resolution_state_stream
-
-    src = tmp_path / "attempts"
-    ckpt = str(tmp_path / "ckpt")
-    src.mkdir()
-    t0 = dt.datetime(2026, 8, 1, 0, 0, 0)
-
-    def write_batch(name, rows):
-        pdf = pd.DataFrame(rows, columns=["id", "attempt_ts", "found_payload"])
-        spark.createDataFrame(pdf, schema=ATTEMPT_SCHEMA).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(src / name))
-
-    collected = []
-
-    def run_and_collect(name):
-        collected.clear()
-        stream = spark.readStream.schema(ATTEMPT_SCHEMA).parquet(str(src / "*"))
-        q = (
-            build(stream)
-            .writeStream.foreachBatch(
-                lambda batch, _id: collected.extend(r.asDict() for r in batch.collect())
-            )
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
-        return {r["id"]: r for r in collected}
-
-    # batch 1: deal 1 misses (→UNRESOLVED), deal 2 resolves (→RESOLVED)
-    write_batch("b1", [(1, t0, None), (2, t0, "bafyFOUND")])
-    out = run_and_collect("sm1")
-    assert out[1]["payload_retrievability_state"] == UNRESOLVED
-    assert out[2]["payload_retrievability_state"] == RESOLVED
-    assert out[2]["payload_cid"] == "bafyFOUND"
-
-    # batch 2 (new query run, same checkpoint — state survives):
-    #   deal 1 retried after 1 day → inside backoff, ignored (no output row)
-    #   deal 2 gets another attempt → absorbing, ignored
-    write_batch("b2", [(1, t0 + dt.timedelta(days=1), None), (2, t0, None)])
-    out = run_and_collect("sm2")
-    assert out == {}
-
-    # batch 3: deal 1 retried after 4 days and still missing → TERMINAL
-    write_batch("b3", [(1, t0 + dt.timedelta(days=4), None)])
-    out = run_and_collect("sm3")
-    assert out[1]["payload_retrievability_state"] == TERMINAL
-    assert out[1]["payload_cid"] is None
-
-    # batch 4: even a successful attempt cannot leave TERMINAL
-    write_batch("b4", [(1, t0 + dt.timedelta(days=8), "bafyLATE")])
-    out = run_and_collect("sm4")
-    assert out == {}
 
 
 def test_windowed_counts_finalize_and_drop_late(spark, tmp_path):
@@ -273,52 +188,6 @@ def test_windowed_counts_finalize_and_drop_late(spark, tmp_path):
     assert len(collected) == n_before
 
 
-def test_egress_distributed_partial_failure(spark, dirs):
-    """Executor-side egress: batches post from worker partitions; a
-    deterministically failing batch stays unflagged and retries next tick."""
-    from spark_deal_observer_spark.streaming.egress import (
-        submit_eligible,
-        submit_eligible_distributed,
-    )
-
-    deals = deals_df(spark, SF_SMALL)
-    sink = DealTableSink(spark, dirs["table"])
-    sink.append_dedup(deals)
-    now = F.lit(REF_TS).cast("timestamp_ntz")
-
-    # poster pickled to workers: fails any batch containing a minerId
-    # divisible by 5 (content-determined — no driver-side call counters)
-    def poster(payload):
-        if any(int(p["minerId"][2:]) % 5 == 0 for p in payload):
-            raise ConnectionError("spark-api 500")
-        return {"ingested": len(payload), "skipped": 0}
-
-    # reference totals from the driver-side variant on a parallel sink
-    ref_sink = DealTableSink(spark, dirs["table"] + "_ref")
-    ref_sink.append_dedup(deals)
-    res_ref = submit_eligible(ref_sink, poster, now=now, batch_size=7)
-
-    res1 = submit_eligible_distributed(sink, poster, now=now, batch_size=7)
-    assert res1["submitted"] > 0
-    assert res1["failed_batches"] > 0 and res_ref["failed_batches"] > 0
-    flagged = sink.read().where(F.col("submitted_at") == now).count()
-    assert flagged == res1["submitted"] == res1["ingested"]
-
-    # batch composition differs between the two variants (partitioning), but
-    # both must leave the failing deals unflagged and retry-able
-    res2 = submit_eligible_distributed(
-        sink, lambda p: {"ingested": len(p)}, now=now, batch_size=7
-    )
-    total = res1["submitted"] + res2["submitted"]
-    ref_total = res_ref["submitted"] + submit_eligible(
-        ref_sink, lambda p: {"ingested": len(p)}, now=now, batch_size=7
-    )["submitted"]
-    assert total == ref_total  # every eligible deal submitted exactly once
-    assert submit_eligible_distributed(sink, lambda p: {"ingested": len(p)}, now=now)[
-        "submitted"
-    ] == 0
-
-
 def test_telemetry_listener_records_observed_metrics(spark, dirs):
     """S11: the observe() hook + StreamingQueryListener pair records per-batch
     ingest counters without a second pass over the data."""
@@ -351,35 +220,6 @@ def test_telemetry_listener_records_observed_metrics(spark, dirs):
         assert emitted  # the fire-and-forget emit seam saw the same points
     finally:
         spark.streams.removeListener(rec)
-
-
-def test_egress_distributed_posts_exactly_once_per_tick(spark, dirs, tmp_path):
-    """The distributed egress materializes the POSTing mapInPandas ONCE
-    (localCheckpoint): the counter aggregate and the mark-submitted
-    semi-join are both actions over the checkpointed result, so neither
-    re-executes the poster — no deal is ever POSTed twice in one tick."""
-    from spark_deal_observer_spark.streaming.egress import submit_eligible_distributed
-
-    deals = deals_df(spark, SF_SMALL)
-    sink = DealTableSink(spark, dirs["table"])
-    sink.append_dedup(deals)
-    now = F.lit(REF_TS).cast("timestamp_ntz")
-    log = str(tmp_path / "posts.log")
-
-    def poster(payload):
-        with open(log, "a") as f:
-            for p in payload:
-                f.write(f"{p['minerId']}/{p['pieceCid']}\n")
-        return {"ingested": len(payload), "skipped": 0}
-
-    res = submit_eligible_distributed(sink, poster, now=now, batch_size=7)
-    assert res["submitted"] > 0
-    with open(log) as f:
-        posted = [ln for ln in f.read().splitlines() if ln]
-    # a re-executed poster stage would double the log relative to the counter
-    assert len(posted) == res["submitted"], (len(posted), res["submitted"])
-    flagged = sink.read().where(F.col("submitted_at") == now).count()
-    assert flagged == res["submitted"]
 
 
 def test_streaming_session_windows_merge_finalize_drop_late(spark, tmp_path):

@@ -10,10 +10,7 @@ from conftest import SF_SMALL
 from pyspark.sql import functions as F
 
 from spark_deal_observer_spark.plans.deals import REF_TS, deals_df
-from spark_deal_observer_spark.streaming.egress import (
-    submit_eligible,
-    submit_eligible_distributed,
-)
+from spark_deal_observer_spark.streaming.egress import submit_eligible
 from spark_deal_observer_spark.streaming.sink import PartitionedDealTableSink
 from spark_deal_observer_spark.streaming.transport import (
     RetriesExhausted,
@@ -94,29 +91,3 @@ def test_egress_retried_poster_submits_in_one_tick(spark, tmp_path):
     assert res["submitted"] == expected > 0
     assert submit_eligible(sink, lambda p: {"ingested": len(p)}, now=now)["submitted"] == 0
 
-
-def test_distributed_egress_with_pickled_retry_wrapper(spark, tmp_path):
-    """with_retries must survive serialization into executor tasks."""
-    deals = deals_df(spark, SF_SMALL)
-    sink = PartitionedDealTableSink(spark, str(tmp_path / "table"))
-    sink.append_dedup(deals)
-    now = F.lit(REF_TS).cast("timestamp_ntz")
-
-    from spark_deal_observer_spark.plans.deals import eligible_deals
-
-    expected = eligible_deals(sink.read()).count()
-
-    seen = {"calls": 0}
-
-    def flaky_first_call(payload):
-        # nested => cloudpickle serializes it by value into executor tasks;
-        # state is per-task, so each task's first POST fails and the in-call
-        # retry (same wrapper instance) recovers it
-        seen["calls"] += 1
-        if seen["calls"] == 1:
-            raise ConnectionError("cold start")
-        return {"ingested": len(payload), "skipped": 0}
-
-    poster = with_retries(flaky_first_call, sleep=lambda _s: None)
-    res = submit_eligible_distributed(sink, poster, now=now, batch_size=50)
-    assert res["submitted"] == expected > 0
