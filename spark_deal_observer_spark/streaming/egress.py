@@ -56,7 +56,8 @@ def submit_eligible(
     eligible: Callable[[DataFrame], DataFrame] = eligible_deals,
 ) -> dict[str, int]:
     """One egress tick. Returns {'submitted': n, 'ingested': n, 'skipped': n,
-    'failed_batches': n}.
+    'failed_batches': n}, all zero with no POST while the table does not
+    exist yet.
 
     A POST that raises skips its batch: the exception is logged, the batch
     counts in `failed_batches`, and its deals keep submitted_at NULL, so
@@ -84,10 +85,11 @@ def _submit_eligible_locked(
     batch_size: int,
     eligible: Callable[[DataFrame], DataFrame],
 ) -> dict[str, int]:
+    result = {"submitted": 0, "ingested": 0, "skipped": 0, "failed_batches": 0}
+    if not sink.exists():  # ticked before ingest's first commit: no table yet
+        return result
     deals = sink.read()
     todo = eligible(deals)
-
-    result = {"submitted": 0, "ingested": 0, "skipped": 0, "failed_batches": 0}
     ok_ids: list[int] = []
     for batch in _batches(todo.toLocalIterator(), batch_size):
         payload = [

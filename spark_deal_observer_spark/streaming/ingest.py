@@ -2,16 +2,25 @@
 
 Reference loop (backend/bin/deal-observer-backend.js:43-74): every 10 s,
 read new epochs from the chain (bounded by finality lag and a max replay
-window), decode, dedup-insert. The Spark-native shape (SURVEY.md §2.7):
+window), decode, dedup-insert. The Spark-native shape (SURVEY.md §2.7) is
+a stateless projection:
 
-  file/Kafka source  →  event-time watermark (finality lag T2)
-                     →  dropDuplicatesWithinWatermark (in-flight dedup)
-                     →  deal reshape (same DEAL_SELECT_EXPRS as batch)
+  file/Kafka source  →  deal reshape (same DEAL_SELECT_EXPRS as batch)
                      →  foreachBatch append_dedup (idempotent sink, T6)
+
+The keyed sink is the only dedup, like the reference's ON CONFLICT DO
+NOTHING: the reshape is deterministic per event row, so a re-delivered
+event yields the same DEAL_KEY, which the sink drops. No event is dropped
+for lateness; the finality bound (T2, the reference's fetch bound
+head − 940) is the producer's job, not a stream stage.
 
 The checkpoint replaces the reference's MAX(activated_at_epoch) resume
 cursor (T3): a restarted query resumes from the last committed source
 offsets, and replayed batches are no-ops thanks to the keyed anti-join.
+A checkpoint written by the earlier stateful (watermark-dedup) query does
+not resume: Spark 4.1 raises statefulOperatorNotMatchInStateMetadataError.
+Give it a new checkpoint location; the full source replay that follows
+appends nothing through the keyed sink.
 `trigger(processingTime='10 seconds')` is the production trigger; tests use
 `availableNow` to drain deterministically. `max_files_per_trigger` is the
 backpressure bound (T8, the reference's 1999-epoch replay cap analog).
@@ -25,9 +34,6 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..plans.deals import DEAL_SELECT_EXPRS
 from .sink import PartitionedDealTableSink
-
-# Finality lag: 940 epochs × 30 s ≈ 7 h 50 m (deal-observer-backend.js:29-34).
-FINALITY_LAG = "470 minutes"
 
 EVENTS_DDL = (
     "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, "
@@ -46,21 +52,6 @@ def read_event_stream(
     return reader.parquet(source_dir)
 
 
-def deals_stream(events: DataFrame, watermark: str = FINALITY_LAG) -> DataFrame:
-    """Event stream → deduplicated deal rows (same derivation as batch).
-
-    Watermarks require an instant-typed event-time column, so the NTZ `ts`
-    is cast (session tz is pinned UTC) into a scratch column that exists
-    only for the watermark/dedup stage."""
-    deduped = (
-        events.withColumn("__event_time", F.col("ts").cast("timestamp"))
-        .withWatermark("__event_time", watermark)
-        .dropDuplicatesWithinWatermark(["event_id"])
-        .drop("__event_time")
-    )
-    return deduped.selectExpr(*DEAL_SELECT_EXPRS)
-
-
 def start_ingest(
     spark: SparkSession,
     source_dir: str,
@@ -76,10 +67,12 @@ def start_ingest(
     partitions the batch intersects — O(batch) per tick regardless of
     table size."""
     sink = PartitionedDealTableSink(spark, table_dir)
-    stream = deals_stream(read_event_stream(spark, source_dir, max_files_per_trigger))
+    events = read_event_stream(spark, source_dir, max_files_per_trigger)
     # observe() = the telemetry hook (reference S11): per-batch row counts
     # surface in StreamingQueryProgress without a second pass.
-    stream = stream.observe("ingest", F.count(F.lit(1)).alias("rows"))
+    stream = events.selectExpr(*DEAL_SELECT_EXPRS).observe(
+        "ingest", F.count(F.lit(1)).alias("rows")
+    )
 
     writer = stream.writeStream.queryName("ingest").outputMode("append").foreachBatch(
         lambda batch, _id: sink.append_dedup(batch)

@@ -18,3 +18,18 @@ def spark():
 
     spark = get_spark("tests", shuffle_partitions=8)
     yield spark
+
+
+def pytest_terminal_summary(terminalreporter):
+    """Make the default tier's gap visible: pytest.ini's `-m "not slow"`
+    deselects the crash, replay and soak tests on every plain run."""
+    slow = [
+        item
+        for item in terminalreporter.stats.get("deselected", [])
+        if item.get_closest_marker("slow")
+    ]
+    if slow:
+        terminalreporter.write_line(
+            f"{len(slow)} slow-tier tests deselected; run them with: "
+            'pytest tests/ -m "slow or not slow"'
+        )

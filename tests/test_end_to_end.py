@@ -149,19 +149,12 @@ def test_three_loops_concurrent_soak(spark, tmp_path):
     from spark_deal_observer_spark.streaming.concurrency import table_span
     from spark_deal_observer_spark.streaming.ingest import DEAL_SELECT_EXPRS
 
-    from pyspark.sql.window import Window
-
-    # Slices must be TIME-ORDERED (like real chain ingest): the ingest
-    # stream's dedup watermark advances to max(ts) − lag after each
-    # slice, so a time-INTERLEAVED slicing (event_id % k) makes most of
-    # every later slice arrive below the watermark and drop as late —
-    # correct streaming semantics, wrong fixture (observed: 412/1000).
+    # Slices interleave in time (by arrival, not by ts): the ingest
+    # stream keeps no watermark, so no event is dropped for lateness.
     n_slices = 5
     ev = (
         load_table(spark, SF_SMALL, "events")
-        .withColumn(
-            "__slice", F.ntile(n_slices).over(Window.orderBy("ts", "event_id"))
-        )
+        .withColumn("__slice", F.col("event_id") % n_slices + 1)
         .localCheckpoint()
     )
     expected = ev.selectExpr(*DEAL_SELECT_EXPRS).dropDuplicates(list(DEAL_KEY))
@@ -210,8 +203,6 @@ def test_three_loops_concurrent_soak(spark, tmp_path):
     def egress_tick(_batch, _id):
         try:
             with table_span(table):
-                if not sink.exists():
-                    return
                 res = submit_eligible(sink, lambda p: {"ingested": len(p)}, now=now1)
             with lock_stats:
                 egress_results.append(res)

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 import logging
+import os
 
 import pytest
 from conftest import SF_SMALL
@@ -15,7 +16,7 @@ from spark_deal_observer_spark.operators.merge import DEAL_KEY
 from spark_deal_observer_spark.plans.deals import REF_TS, deals_df
 from spark_deal_observer_spark.sources.tables import load_table
 from spark_deal_observer_spark.streaming.egress import submit_eligible
-from spark_deal_observer_spark.streaming.ingest import start_ingest
+from spark_deal_observer_spark.streaming.ingest import EVENTS_DDL, start_ingest
 from spark_deal_observer_spark.streaming.sink import PartitionedDealTableSink
 
 
@@ -61,6 +62,45 @@ def test_ingest_end_to_end_idempotent(spark, dirs):
     )
     _drain(q)
     assert sink.count() == first
+
+
+def test_ingest_keeps_late_events_and_drops_redeliveries(spark, dirs):
+    """The keyed sink is the only dedup, like the reference's ON CONFLICT
+    DO NOTHING: events 10 h older than everything already ingested are
+    stored (nothing is dropped for lateness), while an event re-delivered
+    across runs and one duplicated within a file are each stored once."""
+    t = dt.datetime(2026, 8, 1, 12, 0, 0)
+
+    def event(eid, ts):
+        return (eid, ts, eid, "purchase", 1.0 + eid, "{}")
+
+    def ingest(rows):
+        spark.createDataFrame(rows, EVENTS_DDL).coalesce(1).write.mode(
+            "append"
+        ).parquet(dirs["source"])
+        _drain(start_ingest(
+            spark, dirs["source"], dirs["table"], dirs["ckpt"], available_now=True
+        ))
+
+    first = [event(i, t) for i in range(1, 11)]
+    ingest(first)
+    late = [event(i, t - dt.timedelta(hours=10)) for i in range(11, 21)]
+    ingest(late + [first[0], late[0]])  # same checkpoint, one new file
+
+    stored = PartitionedDealTableSink(spark, dirs["table"]).read()
+    assert stored.count() == 20
+    assert stored.dropDuplicates(list(DEAL_KEY)).count() == 20
+    assert sorted(r.id for r in stored.select("id").collect()) == list(range(1, 21))
+
+
+def test_egress_before_first_ingest_commit_is_a_zero_tick(spark, dirs):
+    """Egress may tick before ingest has committed anything: on an empty
+    table directory it returns zero counts and never calls the poster."""
+    os.makedirs(dirs["table"])
+    posts = []
+    res = submit_eligible(PartitionedDealTableSink(spark, dirs["table"]), posts.append)
+    assert res == {"submitted": 0, "ingested": 0, "skipped": 0, "failed_batches": 0}
+    assert posts == []
 
 
 def test_egress_partial_failure_then_retry(spark, dirs, caplog):
