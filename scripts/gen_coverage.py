@@ -101,7 +101,7 @@ def main() -> None:
         "arithmetic; the slot re-verified green, 1.13M melted rows);",
         "r8 — zero new bugs for the first time (50/50 in 701 s): the",
         "rounding/overflow class the prior rounds kept hitting is now fuzzed",
-        "up front by plans/roundfuzz.py, and every rounding site uses the",
+        "up front by tests/roundfuzz.py, and every rounding site uses the",
         "shortest-repr VARCHAR round-trip template (functions/rounding.py).",
         "",
     ]

@@ -269,55 +269,9 @@ LOWDUP_QUERIES = [
 ]
 
 
-def probe_decade(spark) -> None:
-    """--probe: the incremental-dedup decade done honestly.
-
-    Timing the REGISTERED dedup_incremental across ×N id-shifted corpora
-    measures candidate-verify volume, which grows with duplicate density
-    × corpus by SEMANTICS (the standing §4 exclusion), and the synthetic
-    fixture is duplicate-dense, so the pair store at 100× outgrows one
-    box's spill budget. The production claim worth measuring is the
-    per-TICK shape of continuous-ingestion dedup (streaming/
-    dedup_ingest.py): a FIXED incoming batch band-probed against the
-    accumulated signature store. So: build the store per corpus size
-    (reported — the linear part), then time the probe tick of the SAME
-    base-corpus batch against each store."""
-    from spark_deal_observer_spark.operators import models
-    from spark_deal_observer_spark.operators.models import disk_checkpoint
-    from spark_deal_observer_spark.sources.tables import load_table
-    from spark_deal_observer_spark.streaming.dedup_ingest import band_keys
-
-    batch = load_table(spark, SRC, "documents").where("doc_id % 10 = 0")
-    rows = []
-    for label, d in (("1x", SRC), ("10x", DST), ("100x", DST100)):
-        models.clear()
-        t0 = time.perf_counter()
-        store = disk_checkpoint(
-            band_keys(load_table(spark, d, "documents")), f"probe_store_{label}"
-        )
-        build_s = time.perf_counter() - t0
-        ticks = []
-        for _ in range(3):
-            t1 = time.perf_counter()
-            bk = band_keys(batch)
-            n_hit = (
-                bk.join(store, ["band", "key"], "left_semi")
-                .select("doc_id")
-                .distinct()
-                .count()
-            )
-            ticks.append(time.perf_counter() - t1)
-        rows.append((label, build_s, min(ticks), n_hit, store.count()))
-        print(f"DONE probe {label} build={build_s:.2f} tick={min(ticks):.2f}", flush=True)
-    print("\n| store | build sec | probe tick sec (fixed batch) | batch hits | store rows |")
-    print("|---|---|---|---|---|")
-    for label, b, t, h, n in rows:
-        print(f"| {label} | {b:.2f} | {t:.2f} | {h} | {n} |")
-
-
 def setsim_probe_decade(spark) -> None:
-    """--setsim-probe: the EXACT incremental-dedup decade, same
-    fixed-batch-vs-grown-store shape as --probe but through the prefix
+    """--setsim-probe: the EXACT incremental-dedup decade — a FIXED
+    incoming batch probed against a grown store through the prefix
     index, over the LOWDUP corpora — the id-shifted protocol is excluded
     for the exact tier by the standing quadratic-semantics rule: unlike
     the LSH band SEMI-join (density-insensitive), the exact probe's
@@ -325,9 +279,9 @@ def setsim_probe_decade(spark) -> None:
     id-shifted copies mean ~N× true matches per batch doc (measured: the
     id-shifted 10× tick skew-straggled on hot shingles). Per-copy salted
     corpora hold duplicate density at the base rate, so the decade
-    measures STORE-GROWTH cost, which is the production claim. The exact
-    tier's per-tick growth vs the LSH tier's quantifies what
-    losslessness costs at each store size."""
+    measures STORE-GROWTH cost, which is the production claim. Set
+    against the LSH tier's recorded per-tick growth (SCALE.md), it
+    quantifies what losslessness costs at each store size."""
     from spark_deal_observer_spark.operators import models
     from spark_deal_observer_spark.operators.dedup import (
         _setsim_sets,
@@ -362,59 +316,6 @@ def setsim_probe_decade(spark) -> None:
     print("|---|---|---|---|---|")
     for label, b, t, h, n in rows:
         print(f"| {label} | {b:.2f} | {t:.2f} | {h} | {n} |")
-
-
-
-
-def cluster_probe_decade(spark) -> None:
-    """--cluster-probe: the cluster-MAINTENANCE decade — a FIXED batch
-    folded into a grown corpus clustering through the supernode
-    contraction (streaming/cluster_maint.py), over the LOWDUP corpora
-    (bucket membership tracks duplicate density, so the id-shifted
-    protocol is excluded like the exact pair family). Build = the sink's
-    first tick over the whole corpus (full CC — what the incremental path
-    amortizes away); tick = folding the same base-corpus batch into each
-    store, re-run 3x against the same batch_id (strictly-below reads make
-    redeliveries bit-identical, so each re-run does identical work). The
-    tick includes the full label-snapshot rewrite — the honest price of a
-    maintained artifact; label rows are reported so the O(labels) write
-    is attributable."""
-    import shutil
-    import tempfile
-
-    from spark_deal_observer_spark.operators import models
-    from spark_deal_observer_spark.sources.tables import load_table
-    from spark_deal_observer_spark.streaming.cluster_maint import ClusterMaintSink
-
-    batch = load_table(spark, SRC, "documents").where("doc_id % 10 = 0")
-    rows = []
-    for label, d in (("1x", SRC), ("10x", DST_LD10), ("100x", DST_LD100)):
-        models.clear()
-        base = tempfile.mkdtemp(prefix=f"cluster_probe_{label}_")
-        sink = ClusterMaintSink(spark, f"{base}/bands", f"{base}/labels")
-        corpus = load_table(spark, d, "documents").where("doc_id % 10 != 0")
-        t0 = time.perf_counter()
-        sink.process_batch(corpus, batch_id=0)
-        build_s = time.perf_counter() - t0
-        n_labels = sink.read_labels().count()
-        ticks = []
-        for _ in range(3):
-            models.clear()  # the batch's signature pass is per-tick work
-            t1 = time.perf_counter()
-            sink.process_batch(batch, batch_id=1)
-            ticks.append(time.perf_counter() - t1)
-        n_after = sink.read_labels().count()
-        rows.append((label, build_s, min(ticks), n_labels, n_after))
-        print(
-            f"DONE cluster-probe {label} build={build_s:.2f} "
-            f"tick={min(ticks):.2f}",
-            flush=True,
-        )
-        shutil.rmtree(base, ignore_errors=True)
-    print("\n| store | cluster build sec | fold tick sec | corpus label rows | labels after fold |")
-    print("|---|---|---|---|---|")
-    for label, b, t, n0, n1 in rows:
-        print(f"| {label} | {b:.2f} | {t:.2f} | {n0} | {n1} |")
 
 
 PUBLISH_QUERIES = [
@@ -484,14 +385,12 @@ def main() -> None:
     skew = "--skew" in args
     x100 = "--x100" in args
     lowdup = "--lowdup" in args
-    probe = "--probe" in args
     setsim = "--setsim-probe" in args
-    cluster = "--cluster-probe" in args
     publish = "--publish-decade" in args
     args = [
         a
         for a in args
-        if a not in ("--skew", "--x100", "--lowdup", "--probe", "--setsim-probe", "--cluster-probe", "--publish-decade")
+        if a not in ("--skew", "--x100", "--lowdup", "--setsim-probe", "--publish-decade")
     ]
     if lowdup:
         names = args or LOWDUP_QUERIES
@@ -508,9 +407,9 @@ def main() -> None:
         synthesize(con)
     if skew:
         synthesize_skew(con)
-    if x100 or probe:
+    if x100:
         synthesize(con, DST100, 100)
-    if setsim or cluster:
+    if setsim:
         synthesize(con, DST_LD10, 10, salt=True)
         synthesize(con, DST_LD100, 100, salt=True)
     if lowdup:
@@ -519,8 +418,8 @@ def main() -> None:
         # dense: ~1.5M base pairs), and the 100x store build's array
         # shuffle (~150M candidate verifies) exceeds one box's spill
         # budget — measured: >39 GB of shuffle before ENOSPC. The 100x
-        # point for incremental ingestion is --probe (fixed batch vs
-        # grown store), which is the per-tick production claim anyway.
+        # point for incremental ingestion is --setsim-probe (fixed batch
+        # vs grown store), which is the per-tick production claim anyway.
         synthesize(con, DST_LD10, 10, salt=True)
 
     from spark_deal_observer_spark.plans.registry import REGISTRY
@@ -533,14 +432,8 @@ def main() -> None:
     if publish:
         publish_decade(spark, x100=x100)
         return
-    if probe:
-        probe_decade(spark)
-        return
     if setsim:
         setsim_probe_decade(spark)
-        return
-    if cluster:
-        cluster_probe_decade(spark)
         return
 
     if lowdup:

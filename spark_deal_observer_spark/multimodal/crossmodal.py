@@ -166,19 +166,19 @@ def crossmodal_cell_moments(docs: DataFrame) -> DataFrame:
     build (global n_tab, local n_tab, and the registered moments query —
     which, unpublished, re-ran it on every WARM bench run too: ~4 s/run
     at sf0.1). Every one of those consumers is a pure function of the
-    per-cell abelian moment families (kind, cell, i, j, v) that the
-    streaming maintainer already sum-merges — so build THAT table once
-    per corpus snapshot and derive everything else from it:
+    per-cell abelian moment families (kind, cell, i, j, v) of
+    streaming/crossmodal_maint.py::batch_local_moments — so build THAT
+    table once per corpus snapshot and derive everything else from it:
 
       global moments  = Σ_cells          (exact integer sums)
       global W        : num = n·S − T·sy, den = D      (read_w identity)
       local  W        : num_c = n·S_c − T_c·sy, den_c = D_c
       xstats (pvec)   : sx_i = T_i, m = n  (zero x-components add 0)
 
-    Each identity is the one tests/test_streaming_crossmodal.py pins
-    bit-identical against the direct training join; the direct plans are
-    kept as `_w_direct_plan`/`_local_w_direct_plan` and equality is
-    re-pinned per build in tests/test_crossmodal.py."""
+    The direct training joins are kept as
+    `_w_direct_plan`/`_local_w_direct_plan`, and
+    tests/test_crossmodal.py::test_moment_derived_w_equals_direct pins
+    each derived map bit-identical to them."""
     from ..operators.models import published
     from ..streaming.crossmodal_maint import batch_local_moments
 
@@ -207,8 +207,8 @@ def crossmodal_projection(docs: DataFrame) -> DataFrame:
     """The published 4096-row linear map: (i, j, w6) with
     w6 = ROUND(Σ_train xi·ycn_j / Σ_train xi², 6) — derived from the
     published moments via num = n·S − T·sy, den = D (the exact-integer
-    identity CrossmodalMomentSink.read_w uses, pinned bit-identical to
-    the direct training join by tests/test_streaming_crossmodal.py and
+    identity of streaming/crossmodal_maint.py, pinned bit-identical to
+    the direct training join by
     tests/test_crossmodal.py::test_moment_derived_w_equals_direct)."""
     from ..operators.models import published
 

@@ -161,34 +161,6 @@ def train_stats(docs: DataFrame) -> DataFrame:
     )
 
 
-def trained_model(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(stats, weights): the full published model for out-of-corpus scoring."""
-    feats = _features(docs)
-    wdf = published(
-        docs, "clf_model", (D_FEAT, N_ITER, LR, QUALITY_THRESHOLD), lambda: _fit(feats)
-    )
-    return train_stats(docs), wdf
-
-
-def score_with_model(
-    batch_docs: DataFrame, stats: DataFrame, wdf: DataFrame
-) -> DataFrame:
-    """Score ANY document batch with an already-trained model: raw features
-    in the scan stage, TRAIN-time standardization stats and the weight
-    vector broadcast in — no aggregation over the batch, no refit; the
-    streaming micro-batch scoring path (`streaming/scoring.py`)."""
-    feats = standardize(raw_features(batch_docs), stats)
-    prob = F.round(
-        F.lit(1.0) / (F.lit(1.0) + F.exp(-(F.expr(_DOT_SPARK) + F.col("b")))), 6
-    )
-    return feats.crossJoin(F.broadcast(wdf)).select(
-        "doc_id",
-        prob.alias("prob"),
-        (prob >= 0.5).alias("predicted"),
-        F.col("y").alias("label"),
-    )
-
-
 def _fit(feats: DataFrame) -> DataFrame:
     """N_ITER in-plan GD steps; returns the 1-row (w double[D_FEAT], b) model."""
     spark = feats.sparkSession

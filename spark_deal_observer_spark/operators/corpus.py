@@ -665,8 +665,7 @@ DSIR_TOP_K = 50
 
 def _dsir_bucket_counts(src: DataFrame, extra: tuple[str, ...]) -> DataFrame:
     """(doc_id, *extra, bucket, c): hashed uni+bigram feature bucket counts
-    of a (doc_id, *extra, text) table — the shared feature extractor under
-    both DSIR training and online scoring.
+    of a (doc_id, *extra, text) table — the DSIR feature extractor.
 
     Features are token unigrams plus token bigrams (bigrams contain a
     space so the two classes can never collide; the degenerate <2-token
@@ -797,30 +796,6 @@ def _dsir_model_build(docs: DataFrame) -> tuple[DataFrame, float]:
     return (
         lm.select("bucket", delta.alias("delta")).localCheckpoint(eager=True),
         default,
-    )
-
-
-def score_with_dsir(
-    batch: DataFrame, delta_df: DataFrame, default_delta: float
-) -> DataFrame:
-    """(doc_id, logw): score ANY (doc_id, text) batch under a trained DSIR
-    model — the online half of train-once/score-forever. Per batch: the
-    scan-stage feature extractor, one broadcast join against the DSIR_M-row
-    delta table (LEFT: buckets never seen in training fall back to the
-    smoothed default), one per-doc aggregate. No corpus access, no refit."""
-    b = _dsir_bucket_counts(batch.select("doc_id", "text"), ())
-    return (
-        b.join(F.broadcast(delta_df), "bucket", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.round(
-                F.sum(
-                    F.col("c")
-                    * F.coalesce(F.col("delta"), F.lit(float(default_delta)))
-                ),
-                4,
-            ).alias("logw")
-        )
     )
 
 

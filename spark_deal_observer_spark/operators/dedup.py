@@ -1092,10 +1092,8 @@ def incremental_dedup(
     Output: one row per batch doc with ≥1 candidate —
     (batch_doc, match_doc, jaccard, is_dup) where match_doc is the
     best-scoring corpus doc (ties broken by min doc_id) and
-    is_dup = jaccard ≥ threshold (the admit/reject decision the
-    ingestion sink applies). The CONTINUOUS form of this contract is
-    streaming/dedup_ingest.py::NearDupIngestSink — same band-probe
-    against the accumulated store, per micro-batch."""
+    is_dup = jaccard ≥ threshold (the admit/reject decision an
+    ingestion sink would apply)."""
     inter = pair_intersections(docs)
     is_batch_a = F.col("doc_a") % batch_mod == 0
     is_batch_b = F.col("doc_b") % batch_mod == 0
@@ -1308,9 +1306,8 @@ def dedup_lines_ttl(
     docs: DataFrame, ttl_batches: int = 3, batch_docs: int = 100
 ) -> DataFrame:
     """(doc_id, n_lines, n_kept, clean_text): SLIDING-WINDOW line dedup —
-    the batch twin of the bounded-state streaming tier
-    (streaming/line_dedup.py::BoundedLineDedupIngestSink), making its
-    TTL recall trade oracle-checkable. Documents are bucketed into
+    a bounded-state line store's TTL recall trade, made
+    oracle-checkable. Documents are bucketed into
     ingestion batches (batch = doc_id DIV `batch_docs`, the doc_id-ordered
     arrival the streaming equality test pins) and a line occurrence is
     dropped iff its most recent PRIOR occurrence — kept or dropped; the
@@ -1711,27 +1708,15 @@ def setsim_probe(
             "tok",
             F.col("doc_id").alias("match_doc"),
             F.col("n").alias("nb"),
-            *(
-                [F.col("rn").alias("rb")]
-                if "rn" in postings.columns
-                else []
-            ),
+            F.col("rn").alias("rb"),
         ),
         "tok",
     ).where(
         F.least("na", "nb") >= F.lit(threshold) * F.greatest("na", "nb")
     )
-    if "rn" in postings.columns:
-        # positional filter: needs positions under the SHARED global
-        # order — available when the store was prefixed by this index's
-        # own df order. The sink's full-postings store carries no rn
-        # (value-order probe, see streaming/setsim_ingest.py) and takes
-        # the plain distinct path.
-        cands = _positional_candidates(
-            joined, "batch_doc", "match_doc", threshold
-        )
-    else:
-        cands = joined.select("batch_doc", "match_doc").distinct()
+    # positional filter: positions are under the SHARED global order —
+    # the postings were prefixed by this index's own df order
+    cands = _positional_candidates(joined, "batch_doc", "match_doc", threshold)
     a = batch_sets.select(F.col("doc_id").alias("batch_doc"), F.col("sh").alias("sh_a"))
     b = corpus_sets.select(F.col("doc_id").alias("match_doc"), F.col("sh").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
@@ -1776,8 +1761,7 @@ def setsim_incremental(
     banded-LSH probe, so the two queries over the SAME split quantify
     precisely what the LSH index trades away (every `incremental_dedup`
     is_dup row at this threshold must appear here; the reverse can
-    fail — pinned in tests). The CONTINUOUS form is
-    streaming/setsim_ingest.py::SetSimIngestSink."""
+    fail — pinned in tests)."""
     # ONE published shingle artifact; both sides are filters over it
     # (publishing per-subset repaid the md5 pass twice — 95 → 24 s cold
     # at sf0.1 together with the positional filter). The probe RESULT is
@@ -1911,13 +1895,10 @@ def fold_clusters(
     delta_edges: DataFrame, prior_labels: DataFrame, max_iter: int = 25
 ) -> DataFrame:
     """Supernode contraction → delta CC → expand: fold new edges into an
-    established (doc_id, cluster) label map. THE shared construction —
-    the batch `incremental_clusters` and the streaming ClusterMaintSink
-    both call this, so their equality proofs (full-graph CC oracle;
-    streamed-vs-batch test) pin one implementation, not two copies that
-    could drift. Exactness argument: prior labels are component-MIN doc
-    ids, so the contracted fixpoint's min over (labels ∪ new node ids)
-    equals the global component min."""
+    established (doc_id, cluster) label map — `incremental_clusters`'
+    construction, pinned by the full-graph CC oracle. Exactness argument:
+    prior labels are component-MIN doc ids, so the contracted fixpoint's
+    min over (labels ∪ new node ids) equals the global component min."""
     la = prior_labels.select(
         F.col("doc_id").alias("doc_a"), F.col("cluster").alias("ca")
     )

@@ -244,9 +244,7 @@ def event_anomaly_zscore(events: DataFrame) -> DataFrame:
 
 def score_hourly_anomalies(hourly: DataFrame) -> DataFrame:
     """The z-score window over any (event_type, bucket_ts, n_events)
-    hourly table — shared by the batch query above and the streaming
-    monitor (streaming/anomaly.py), which scores the incrementally
-    maintained rollup with identical arithmetic."""
+    hourly table — the scoring half of the batch query above."""
     over = (
         "OVER (PARTITION BY event_type ORDER BY bucket_ts"
         f" ROWS BETWEEN {ANOM_WINDOW} PRECEDING AND 1 PRECEDING)"
@@ -313,10 +311,8 @@ def event_ewma_forecast(events: DataFrame) -> DataFrame:
 
 def score_hourly_ewma(hourly: DataFrame) -> DataFrame:
     """The EWMA/forecast window over any (event_type, bucket_ts,
-    n_events) hourly table — shared by the batch query above and the
-    streaming monitor (streaming/forecast.py), which scores the
-    incrementally maintained rollup with identical arithmetic (the
-    anomaly monitor's pattern).
+    n_events) hourly table — the scoring half of the batch query above
+    (the anomaly scorer's pattern).
 
     r9: the unrolled weight terms are generated as ONE SQL string per
     expression (the oracle generator's pattern) instead of a Column-
@@ -630,10 +626,8 @@ def densify_hourly(hourly: DataFrame) -> DataFrame:
 
 def score_hourly_cusum(dense: DataFrame) -> DataFrame:
     """The CUSUM windows over any DENSE (event_type, bucket_ts,
-    n_events) table — shared by the batch query above and the streaming
-    monitor (streaming/cusum.py), which re-scores the incrementally
-    maintained rollup with identical arithmetic (the forecast monitor's
-    pattern), so streamed == batch is definitional."""
+    n_events) table — the scoring half of the batch query above (the
+    forecast scorer's pattern)."""
     # Sigma moments in DECIMAL(38,0): the oracle promotes to HUGEINT, and
     # past ~3e9 events per type sx*sx (and the per-row square) exceed LONG
     # range — same scale-dependent class as crossmodal's p aggregation, so

@@ -610,7 +610,7 @@ def sq_topk_oracle(query_vec_id: int = 0, k: int = 10) -> str:
 
 
 # ---------------------------------------------------------------------------
-# incremental index maintenance (the batch twin of streaming/ann_index.py)
+# incremental index maintenance
 # ---------------------------------------------------------------------------
 
 INC_SPLIT = 400  # embeddings 0..INC_SPLIT-1 = indexed corpus snapshot
@@ -643,12 +643,11 @@ def ann_incremental(
     n_iter: int = 2,
 ) -> DataFrame:
     """Fold NEW vectors into the published IVF-PQ index WITHOUT
-    retraining the quantizers — the batch twin of
-    `streaming/ann_index.py::AnnIndexMaintenanceSink`, and the production
-    shape of continuous vector ingestion: the coarse quantizer and PQ
-    codebooks are trained once per corpus snapshot (vec_id < `split_id`,
-    the indexed baseline), every later arrival (vec_id >= `split_id`) is
-    ENCODED against the frozen models (one broadcast argmax-cosine cell
+    retraining the quantizers — the production shape of continuous
+    vector ingestion: the coarse quantizer and PQ codebooks are trained
+    once per corpus snapshot (vec_id < `split_id`, the indexed
+    baseline), every later arrival (vec_id >= `split_id`) is ENCODED
+    against the frozen models (one broadcast argmax-cosine cell
     assignment + one broadcast argmin-L2 code assignment — pointwise and
     deterministic, which is what makes this oracle-checkable), and a
     centroid-drift statistic (the `embedding_source_drift` arithmetic

@@ -52,8 +52,8 @@ def cms_cells(docs: DataFrame) -> DataFrame:
     the sketch sums are identical (Σ per-token counts = per-occurrence
     increments). sum-per-(d, cell) is the CMS merge — associative and
     commutative but, unlike the HLL's max, NOT idempotent: re-merging a
-    replayed batch double-counts (streaming/frequency.py pairs the merge
-    with a processed-batch ledger for exactly that reason)."""
+    replayed batch double-counts, so a streamed merge needs a
+    processed-batch ledger."""
     tok_counts = (
         docs.select(F.explode(F.expr(tokens_sql("spark", "text"))).alias("token"))
         .groupBy("token")
@@ -200,8 +200,8 @@ def hll_registers(events: DataFrame, key: str = "event_type") -> DataFrame:
     """(key, bucket, rho): the per-group register table — the sketch's
     entire state, ≤ |groups|·1024 rows. max-per-(key, bucket) IS the
     merge, which makes it idempotent: merging the same batch twice is a
-    no-op, so at-least-once replay yields exactly the once-only registers
-    (streaming/cardinality.py leans on this)."""
+    no-op, so at-least-once replay yields exactly the once-only
+    registers."""
     h, bucket, rho = _hll_pre("spark")
     return (
         events.selectExpr(key, f"{h} AS h")

@@ -2165,8 +2165,7 @@ def q_dedup_setsim_incremental(spark, sf_dir):
     """EXACT incremental dedup: the deterministic batch split probed
     through the corpus-side prefix index (lossless), over the SAME split
     as the banded-LSH `dedup_incremental` — the pair of queries
-    quantifies exactly what the LSH probe trades for its smaller state.
-    Continuous form: streaming/setsim_ingest.py."""
+    quantifies exactly what the LSH probe trades for its smaller state."""
     return dd.setsim_incremental(_t(spark, sf_dir, "documents"))
 
 
@@ -3143,10 +3142,9 @@ def q_ann_incremental(spark, sf_dir):
     indexed corpus snapshot (vec_id < 400), later arrivals are encoded
     against the FROZEN models (pointwise, deterministic — the property
     that makes the fold oracle-checkable), and the embedding-centroid
-    drift statistic rides along as the retrain trigger. The batch twin of
-    streaming/ann_index.py::AnnIndexMaintenanceSink; at 100 TB, training
-    stays one offline pass per snapshot and each increment touches only
-    the new rows."""
+    drift statistic rides along as the retrain trigger. At 100 TB,
+    training stays one offline pass per snapshot and each increment
+    touches only the new rows."""
     return pq.ann_incremental(_t(spark, sf_dir, "embeddings"))
 
 
@@ -6228,12 +6226,12 @@ def q_crossmodal_local_retrieval(spark, sf_dir):
 @register("crossmodal_moments", crossmodal_moments_oracle())
 def q_crossmodal_moments(spark, sf_dir):
     """The five abelian raw-moment families the trained cross-modal map
-    is a pure function of (num_ij = n·S_ij − T_i·sy_j, den_i = D_i) —
-    the state the streaming maintainer (streaming/crossmodal_maint.py)
-    sum-merges per tick, value-gated here as exact integers (emitted as
-    strings: S_ij exceeds BIGINT at sf0.1 magnitudes, and string digits
-    compare exactly at any width). tests/test_streaming_crossmodal.py
-    pins streamed ≡ batch W bit-identity on top of these moments.
+    is a pure function of (num_ij = n·S_ij − T_i·sy_j, den_i = D_i;
+    streaming/crossmodal_maint.py), value-gated here as exact integers
+    (emitted as strings: S_ij exceeds BIGINT at sf0.1 magnitudes, and
+    string digits compare exactly at any width).
+    tests/test_crossmodal.py pins the derived W bit-identical to the
+    direct training join on top of these moments.
 
     r9 OPTIMIZATION: the global families are exact cell-sums of the
     published per-cell moments artifact (each doc is in exactly one

@@ -1,79 +1,21 @@
-"""Shared crash-safety protocol for every stateful foreachBatch sink.
+"""Stage-and-swap of whole directories, and its restart hygiene.
 
-Every stateful sink here persists state as `<base>/<prefix>=<id>`
-directories written by Spark jobs plus (for non-idempotent merges) a
-small JSON ledger. The last two rounds' defects — same-batch-id replay
-crashes, O(ticks) ledger growth, mark-after-swap double-count windows,
-read-before-any-batch errors — were each a PER-SINK divergence of the
-same four rules, so the rules live here once and the sinks delegate:
+`swap_dir` replaces a live directory with a staged one by two renames.
+A crash between them leaves the live directory MISSING and its
+`__old_*` backup as the only copy; `gc_swap_debris` restores the newest
+backup and sweeps orphaned `__stage_*` dirs. The deal sink
+(streaming/sink.py) swaps its epoch-bucket partitions this way.
 
-  * SELECTION (`committed_ids` / `SnapshotStore.ids`): restart recovery
-    and snapshot selection must only ever see COMMITTED directories.
-    Spark's commit protocol makes contents appear via per-file renames
-    and writes the `_SUCCESS` marker LAST — a crash mid-commit leaves a
-    directory that EXISTS but is not committed (some files, no marker).
-    A torn directory picked as "latest applied" would make the ledger
-    skip the crashed batch's redelivery (lost data) or feed partial
-    state into a merge.
-  * STRICTLY-BELOW REPLAY READS (`SnapshotStore.read_prior`): a tick
-    merging accumulated state must read the snapshot with the largest id
-    STRICTLY below its own batch_id, never "latest". Reading latest
-    breaks replay determinism (a redelivery sees state its first
-    delivery advanced) and crash-loops a same-batch-id restart (Spark
-    refuses to overwrite `snapshot=N` while reading `snapshot=N`).
-    Strictly-below reads make redeliveries bit-identical by
-    construction — effectively-once with no ledger at all when the
-    state write itself is deterministic.
-  * HIGH-WATER LEDGER (`JsonLedger`): sinks whose merge is NOT
-    idempotent (sum-merges) must skip replayed ids before touching
-    state. The durable mark is a single integer plus an exception set
-    of out-of-order ids above it — O(1) on the sequential ids
-    Structured Streaming actually delivers, never the O(ticks) id list
-    that a long-lived stream would grow without bound.
-  * WRITE-AHEAD INTENT (`JsonLedger.set_pending`): when the state write
-    is an in-place partition swap (not a fresh `<prefix>=<id>` dir),
-    the ledger must record {batch_id, staged dir, partitions}
-    atomically BEFORE the swap and clear it atomically WITH the seen
-    mark. Mark-after-swap double-counts on a crash between them;
-    mark-before-stage loses the batch. Construction-time recovery
-    completes any pending swap (idempotent: each partition is either
-    still staged or already live).
-
-Stage-and-swap of whole directories (`swap_dir`) and its restart
-hygiene (`gc_swap_debris`) round out the protocol: torn live dirs heal
-by restoring the newest `__old_*` backup; orphaned stages are swept.
-
-Chaos-tested in tests/test_crash_recovery.py; the shared contract is
-pinned in tests/test_snapshot_store.py.
+Pinned in tests/test_atomic.py; the sink's crash tests are in
+tests/test_crash_recovery.py.
 """
 
 from __future__ import annotations
 
 import glob
-import json
 import os
 import shutil
 import uuid
-
-from pyspark.sql import DataFrame, SparkSession
-
-
-def committed_ids(base: str, prefix: str) -> list[int]:
-    """Sorted ids of committed `<prefix>=<id>` dirs under `base` — dirs
-    carrying the `_SUCCESS` marker Spark writes at job commit. Torn dirs
-    (crash between file moves and the marker) are excluded."""
-    if not os.path.isdir(base):
-        return []
-    out = []
-    for d in os.listdir(base):
-        if not d.startswith(f"{prefix}="):
-            continue
-        sid = d.split("=", 1)[1]
-        if sid.isdigit() and os.path.exists(
-            os.path.join(base, d, "_SUCCESS")
-        ):
-            out.append(int(sid))
-    return sorted(out)
 
 
 def swap_dir(staged: str, live: str) -> None:
@@ -113,158 +55,3 @@ def gc_swap_debris(live: str) -> None:
         os.rename(olds.pop(), live)
     for d in olds:
         shutil.rmtree(d, ignore_errors=True)
-
-
-class SnapshotStore:
-    """Directory-per-id parquet state store with committed-only
-    selection and strictly-below replay reads — the one implementation
-    of the snapshot rules every stateful sink shares (cardinality
-    registers, CMS sketches, line-hash stores, transition counts,
-    per-batch report/doc partitions)."""
-
-    def __init__(self, spark: SparkSession, base: str, prefix: str = "snapshot"):
-        self.spark = spark
-        self.base = base
-        self.prefix = prefix
-
-    def path(self, sid: int) -> str:
-        return os.path.join(self.base, f"{self.prefix}={sid}")
-
-    def ids(self) -> list[int]:
-        return committed_ids(self.base, self.prefix)
-
-    def latest_id(self) -> int | None:
-        ids = self.ids()
-        return ids[-1] if ids else None
-
-    def prior_id(self, batch_id: int) -> int | None:
-        """Largest committed id STRICTLY below `batch_id` (see module
-        docstring: the replay-determinism read rule)."""
-        prior = [i for i in self.ids() if i < batch_id]
-        return max(prior) if prior else None
-
-    def read(self, sid: int) -> DataFrame:
-        return self.spark.read.parquet(self.path(sid))
-
-    def _read_id(self, sid: int | None, schema: str | None) -> DataFrame | None:
-        if sid is None:
-            if schema is None:
-                return None
-            # pre-ingest reads return an EMPTY TYPED frame, not an
-            # AnalysisException — every consumer needs the same fix
-            return self.spark.createDataFrame([], schema)
-        return self.read(sid)
-
-    def read_latest(self, schema: str | None = None) -> DataFrame | None:
-        return self._read_id(self.latest_id(), schema)
-
-    def read_prior(
-        self, batch_id: int, schema: str | None = None
-    ) -> DataFrame | None:
-        return self._read_id(self.prior_id(batch_id), schema)
-
-    def write(self, df: DataFrame, sid: int) -> None:
-        """Overwrite `<prefix>=<sid>` — the idempotent replay unit: a
-        redelivered batch overwrites its own directory with (by the
-        strictly-below read rule) bit-identical rows, healing any torn
-        state the crash left."""
-        df.write.mode("overwrite").parquet(self.path(sid))
-
-    def read_all(self) -> DataFrame:
-        """Union of every COMMITTED id dir, with the id re-derived as a
-        partition column (per-batch report/doc layouts). Torn dirs (crash
-        mid-commit) are excluded — a glob would surface their partial
-        rows as if final until the redelivery overwrites them."""
-        ids = self.ids()
-        if not ids:
-            # preserve the no-data error shape of an empty glob read
-            return self.spark.read.option("basePath", self.base).parquet(
-                os.path.join(self.base, f"{self.prefix}=*")
-            )
-        return self.spark.read.option("basePath", self.base).parquet(
-            *[self.path(i) for i in ids]
-        )
-
-    def gc(self, keep: int) -> None:
-        """Delete id dirs (torn ones included) beyond the newest `keep`.
-        Run AFTER the tick's snapshot is durable, so a crash between
-        write and GC only leaves extra (harmless) snapshots."""
-        if not os.path.isdir(self.base):
-            return
-        ids = sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(self.base)
-            if d.startswith(f"{self.prefix}=") and d.split("=", 1)[1].isdigit()
-        )
-        for sid in ids[:-keep] if keep > 0 else ids:
-            shutil.rmtree(self.path(sid), ignore_errors=True)
-
-
-class JsonLedger:
-    """Durable processed-batch ledger: high-water mark + exception set +
-    at most one pending write-ahead intent, in one atomically-replaced
-    JSON file.
-
-    `seen(id)` is `id <= high_water or id in extra`; marking a seen id
-    folds the contiguous prefix above the mark into it, so on the
-    sequential ids Structured Streaming delivers the file stays O(1) —
-    never the O(ticks) id list (the r5 'seen' defect). Legacy bare-list
-    and {"seen": [...]} files load transparently and compact on the
-    first write. Structured Streaming replays ids in order, so ids at
-    or below a restored high-water mark are always genuinely applied.
-    """
-
-    def __init__(self, path: str):
-        self.path = path
-
-    def _load(self) -> dict:
-        if not os.path.exists(self.path):
-            return {"high_water": -1, "extra": [], "pending": None}
-        data = json.load(open(self.path))
-        if isinstance(data, list):  # oldest format: bare id list
-            data = {"seen": data, "pending": None}
-        if "seen" in data:  # r5 format: explicit id list
-            hw, extra = -1, set(data["seen"])
-            while hw + 1 in extra:
-                hw += 1
-                extra.discard(hw)
-            return {
-                "high_water": hw,
-                "extra": sorted(extra),
-                "pending": data.get("pending"),
-            }
-        return data
-
-    def _save(self, state: dict) -> None:
-        os.makedirs(os.path.dirname(self.path), exist_ok=True)
-        tmp = self.path + ".tmp"
-        json.dump(state, open(tmp, "w"))
-        os.replace(tmp, self.path)  # atomic on POSIX
-
-    def seen(self, batch_id: int) -> bool:
-        st = self._load()
-        return batch_id <= st["high_water"] or batch_id in set(st["extra"])
-
-    def mark_seen(self, batch_id: int) -> None:
-        """Record `batch_id` as applied and clear any pending intent —
-        one atomic write, so 'swap done' and 'intent cleared' can never
-        be observed apart."""
-        st = self._load()
-        hw, extra = st["high_water"], set(st["extra"])
-        if batch_id > hw:
-            extra.add(batch_id)
-        while hw + 1 in extra:
-            hw += 1
-            extra.discard(hw)
-        self._save({"high_water": hw, "extra": sorted(extra), "pending": None})
-
-    def set_pending(self, intent: dict) -> None:
-        """Atomically record the write-ahead intent. After this write
-        the batch is COMMITTED: recovery completes its swap and marks it
-        seen, so the redelivery is skipped instead of double-merged."""
-        st = self._load()
-        st["pending"] = intent
-        self._save(st)
-
-    def pending(self) -> dict | None:
-        return self._load()["pending"]

@@ -32,8 +32,6 @@ from __future__ import annotations
 
 import os
 import threading
-from collections.abc import Iterator
-from contextlib import contextmanager
 
 _LOCKS: dict[str, threading.RLock] = {}
 _REGISTRY_GUARD = threading.Lock()
@@ -49,9 +47,3 @@ def table_lock(path: str) -> threading.RLock:
             lock = _LOCKS[key] = threading.RLock()
         return lock
 
-
-@contextmanager
-def table_span(path: str) -> Iterator[None]:
-    """Context manager form for multi-call tick spans."""
-    with table_lock(path):
-        yield

@@ -1,42 +1,33 @@
-"""Streaming maintenance of the cross-modal projection map.
+"""Per-batch raw moments of the cross-modal projection map.
 
 The batch map (multimodal/crossmodal.py::crossmodal_projection) trains
-W = D⁻¹·Xᵀ·Y_c over all paired docs; a live pipeline ingesting new
-documents can't re-scan the corpus per tick. The key identity: W is a
-pure function of five ABELIAN raw moments —
+W = D⁻¹·Xᵀ·Y_c over all paired docs. The key identity: W is a pure
+function of five ABELIAN raw moments —
 
     S_ij = Σ_d xi_di·yi_dj   T_i = Σ_d xi_di   D_i = Σ_d xi_di²
     sy_j = Σ_d yi_dj          n   = |paired docs|
 
 because centering distributes:  num_ij = Σ_d xi_di·(n·yi_dj − sy_j)
 = n·S_ij − T_i·sy_j  and  den_i = D_i.  Every moment is an exact
-scaled-int sum (DECIMAL(38,0)), so the incrementally-maintained map is
-not approximately but BIT-IDENTICALLY the batch map — the same
-streamed ≡ batch equation the dedup/CC sinks pin, here for a trained
-model (tests/test_streaming_crossmodal.py).
+scaled-int sum (DECIMAL(38,0)), so moments summed over any split of the
+corpus give not approximately but BIT-IDENTICALLY the batch map
+(tests/test_crossmodal.py::test_moment_derived_w_equals_direct pins the
+global and local maps; test_moments_query_equals_batch_fold pins the
+sums).
 
-Sink discipline is the house pattern (streaming/frequency.py): the
-moment merge (groupBy sum) is associative/commutative but NOT
-idempotent, so a processed-batch ledger drops replays before they touch
-state; snapshots are durable per batch and the latest snapshot id is the
-restart high-water mark.
-
-Scale posture: per tick the plan is one batch-sized embedding pass, one
-batch-sized media decode, a dim²-row partial-moment aggregate (map-side
+Scale posture: per batch the plan is one batch-sized embedding pass, one
+batch-sized media decode and a dim²-row partial-moment aggregate (map-side
 combined — the shuffle carries ≤ |kinds|·dim² rows regardless of batch
-size), and a (kind,i,j) sum-merge against the stored ≤ 5·dim² moment
-rows. Deriving W from moments is a broadcast-sized join — no corpus
-scan anywhere after ingest.
+size). multimodal/crossmodal.py publishes the per-cell moments of the
+whole corpus once and derives every map from them.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.rounding import round6_sql  # noqa: F401  (oracle twin lives here)
 from ..multimodal.crossmodal import XMODAL_TRAIN_MOD, _media_rows, _text_rows
-from .atomic import SnapshotStore
 
 _DEC = "decimal(38,0)"
 
@@ -81,89 +72,14 @@ def batch_moments(docs: DataFrame) -> DataFrame:
     return s.unionByName(t).unionByName(d).unionByName(sy).unionByName(n)
 
 
-class CrossmodalMomentSink:
-    """foreachBatch body: ledger-guarded moment sum-merge; `read_w()`
-    derives the CURRENT trained map from the latest snapshot."""
-
-    def __init__(self, spark: SparkSession, out_path: str):
-        self.spark = spark
-        self._snaps = SnapshotStore(spark, f"{out_path}/moments")
-        self._last: int | None = self._snaps.latest_id()
-        self._applied: set[int] = set()
-
-    def _is_applied(self, batch_id: int) -> bool:
-        if self._last is not None and batch_id <= self._last:
-            return True
-        return batch_id in self._applied
-
-    def process_batch(self, batch: DataFrame, batch_id: int = 0) -> None:
-        if self._is_applied(batch_id):
-            return  # sum-merge is not idempotent: drop replays up front
-        if batch.isEmpty():
-            self._applied.add(batch_id)
-            return
-        part = batch_moments(batch)
-        if self._last is not None:
-            part = (
-                self._snaps.read(self._last)
-                .unionByName(part)
-                .groupBy("kind", "i", "j")
-                .agg(F.sum("v").alias("v"))
-            )
-        self._snaps.write(part, batch_id)
-        self._last = batch_id
-        self._applied = {i for i in self._applied if i > batch_id}
-
-    def read_w(self) -> DataFrame:
-        """(i, j, w6) — bit-identical to crossmodal_projection over the
-        union of all ingested batches: num = n·S_ij − T_i·sy_j and
-        den = D_i are the exact integers the batch trainer sums.
-
-        Before any batch has been applied there is no moment state, so
-        the trained map is the empty relation — return it typed instead
-        of passing sid=None into SnapshotStore (which surfaced as an
-        opaque parquet-path AnalysisException; r8 ADVICE #3)."""
-        if self._last is None:
-            return self.spark.createDataFrame(
-                [], "i int, j int, w6 double"
-            )
-        m = self._snaps.read(self._last)
-        s = m.where("kind = 'S'").select("i", "j", F.col("v").alias("s"))
-        t = m.where("kind = 'T'").select("i", F.col("v").alias("t"))
-        d = m.where("kind = 'D'").select("i", F.col("v").alias("den"))
-        sy = m.where("kind = 'sy'").select("j", F.col("v").alias("sy"))
-        n = m.where("kind = 'n'").select(F.col("v").alias("n"))
-        return (
-            s.join(F.broadcast(t), "i")
-            .join(F.broadcast(d), "i")
-            .join(F.broadcast(sy), "j")
-            .crossJoin(F.broadcast(n))
-            .select(
-                "i",
-                "j",
-                F.when(F.col("den") == 0, F.lit(0.0))
-                .otherwise(
-                    F.round(
-                        (F.col("n") * F.col("s") - F.col("t") * F.col("sy")).cast(
-                            "double"
-                        )
-                        / F.col("den").cast("double"),
-                        6,
-                    )
-                )
-                .alias("w6"),
-            )
-        )
-
-
 def batch_local_moments(docs: DataFrame) -> DataFrame:
     """(kind, cell, i, j, v): the per-cell moment families of the
     LENGTH-ROUTED local maps (crossmodal.crossmodal_local_projection).
     Fixed-cut routing is a pure per-doc function, so S/T/D simply gain a
     `cell` group key and stay exact abelian sums; the y-side moments
     (sy, n) are GLOBAL (the local maps center y globally) and ride with
-    cell = −1. Streamed ≡ batch bit-identity therefore carries over
-    unchanged — the r9 extension VERDICT r8 #4 predicted."""
+    cell = −1. Split ≡ whole bit-identity therefore carries over
+    unchanged."""
     from ..multimodal.crossmodal import _doc_cells
 
     x = _text_rows(docs).where(F.col("doc_id") % XMODAL_TRAIN_MOD == 0)
@@ -206,62 +122,3 @@ def batch_local_moments(docs: DataFrame) -> DataFrame:
         "v",
     )
     return s.unionByName(t).unionByName(d).unionByName(sy).unionByName(n)
-
-
-class CrossmodalLocalMomentSink(CrossmodalMomentSink):
-    """The local-map maintainer: same ledger/snapshot discipline, with
-    `cell` in the merge key. `read_w()` returns (cell, i, j, w6) —
-    bit-identical to crossmodal_local_projection over the ingested union
-    (num_c = n·S_c − T_c·sy, den_c = D_c; all exact DECIMAL(38,0))."""
-
-    def process_batch(self, batch: DataFrame, batch_id: int = 0) -> None:
-        if self._is_applied(batch_id):
-            return
-        if batch.isEmpty():
-            self._applied.add(batch_id)
-            return
-        part = batch_local_moments(batch)
-        if self._last is not None:
-            part = (
-                self._snaps.read(self._last)
-                .unionByName(part)
-                .groupBy("kind", "cell", "i", "j")
-                .agg(F.sum("v").alias("v"))
-            )
-        self._snaps.write(part, batch_id)
-        self._last = batch_id
-        self._applied = {i for i in self._applied if i > batch_id}
-
-    def read_w(self) -> DataFrame:
-        if self._last is None:
-            return self.spark.createDataFrame(
-                [], "cell int, i int, j int, w6 double"
-            )
-        m = self._snaps.read(self._last)
-        s = m.where("kind = 'S'").select("cell", "i", "j", F.col("v").alias("s"))
-        t = m.where("kind = 'T'").select("cell", "i", F.col("v").alias("t"))
-        d = m.where("kind = 'D'").select("cell", "i", F.col("v").alias("den"))
-        sy = m.where("kind = 'sy'").select("j", F.col("v").alias("sy"))
-        n = m.where("kind = 'n'").select(F.col("v").alias("n"))
-        return (
-            s.join(F.broadcast(t), ["cell", "i"])
-            .join(F.broadcast(d), ["cell", "i"])
-            .join(F.broadcast(sy), "j")
-            .crossJoin(F.broadcast(n))
-            .select(
-                "cell",
-                "i",
-                "j",
-                F.when(F.col("den") == 0, F.lit(0.0))
-                .otherwise(
-                    F.round(
-                        (F.col("n") * F.col("s") - F.col("t") * F.col("sy")).cast(
-                            "double"
-                        )
-                        / F.col("den").cast("double"),
-                        6,
-                    )
-                )
-                .alias("w6"),
-            )
-        )

@@ -20,10 +20,10 @@ Retry-inside, batch-skip-outside, exactly the reference's layering.
 from __future__ import annotations
 
 import logging
-from collections.abc import Callable, Sequence
+from collections.abc import Callable
 from typing import Any
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..plans.deals import eligible_deals
@@ -53,7 +53,6 @@ def submit_eligible(
     *,
     now: Column | None = None,
     batch_size: int = DEFAULT_BATCH_SIZE,
-    eligible: Callable[[DataFrame], DataFrame] = eligible_deals,
 ) -> dict[str, int]:
     """One egress tick. Returns {'submitted': n, 'ingested': n, 'skipped': n,
     'failed_batches': n}, all zero with no POST while the table does not
@@ -71,55 +70,41 @@ def submit_eligible(
     the span lock serializes ticks, and its reentrancy makes the nested
     merge_overwrite acquisition free (streaming/concurrency.py).
     """
-    with table_lock(sink.path):
-        return _submit_eligible_locked(
-            sink, poster, now=now, batch_size=batch_size, eligible=eligible
-        )
-
-
-def _submit_eligible_locked(
-    sink: PartitionedDealTableSink,
-    poster: Poster,
-    *,
-    now: Column | None,
-    batch_size: int,
-    eligible: Callable[[DataFrame], DataFrame],
-) -> dict[str, int]:
     result = {"submitted": 0, "ingested": 0, "skipped": 0, "failed_batches": 0}
-    if not sink.exists():  # ticked before ingest's first commit: no table yet
-        return result
-    deals = sink.read()
-    todo = eligible(deals)
-    ok_ids: list[int] = []
-    for batch in _batches(todo.toLocalIterator(), batch_size):
-        payload = [
-            {
-                "minerId": f"f0{r['miner_id']}",
-                "clientId": f"f0{r['client_id']}",
-                "pieceCid": r["piece_cid"],
-                "pieceSize": str(r["piece_size"]),  # bigint→string (F10)
-                "payloadCid": r["payload_cid"],
-                "expiresAt": r["expires_at"].isoformat(),
-            }
-            for r in batch
-        ]
-        try:
-            resp = poster(payload)
-        except Exception:  # batch skipped, not retried this pass (T7)
-            log.exception("egress: POST of %d deals failed, batch skipped", len(batch))
-            result["failed_batches"] += 1
-            continue
-        result["submitted"] += len(batch)
-        result["ingested"] += int(resp.get("ingested", len(batch)))
-        result["skipped"] += int(resp.get("skipped", 0))
-        ok_ids.extend(int(r["id"]) for r in batch)
+    with table_lock(sink.path):
+        if not sink.exists():  # ticked before ingest's first commit: no table yet
+            return result
+        deals = sink.read()
+        ok_ids: list[int] = []
+        for batch in _batches(eligible_deals(deals).toLocalIterator(), batch_size):
+            payload = [
+                {
+                    "minerId": f"f0{r['miner_id']}",
+                    "clientId": f"f0{r['client_id']}",
+                    "pieceCid": r["piece_cid"],
+                    "pieceSize": str(r["piece_size"]),  # bigint→string (F10)
+                    "payloadCid": r["payload_cid"],
+                    "expiresAt": r["expires_at"].isoformat(),
+                }
+                for r in batch
+            ]
+            try:
+                resp = poster(payload)
+            except Exception:  # batch skipped, not retried this pass (T7)
+                log.exception("egress: POST of %d deals failed, batch skipped", len(batch))
+                result["failed_batches"] += 1
+                continue
+            result["submitted"] += len(batch)
+            result["ingested"] += int(resp.get("ingested", len(batch)))
+            result["skipped"] += int(resp.get("skipped", 0))
+            ok_ids.extend(int(r["id"]) for r in batch)
 
-    if ok_ids:
-        ids_df = sink.spark.createDataFrame([(i,) for i in ok_ids], "id LONG")
-        flag = now if now is not None else F.current_timestamp().cast("timestamp_ntz")
-        updates = (
-            deals.join(F.broadcast(ids_df), "id", "left_semi")
-            .withColumn("submitted_at", flag)
-        )
-        sink.merge_overwrite(updates.select(*deals.columns), ["id"])
-    return result
+        if ok_ids:
+            ids_df = sink.spark.createDataFrame([(i,) for i in ok_ids], "id LONG")
+            flag = now if now is not None else F.current_timestamp().cast("timestamp_ntz")
+            updates = (
+                deals.join(F.broadcast(ids_df), "id", "left_semi")
+                .withColumn("submitted_at", flag)
+            )
+            sink.merge_overwrite(updates.select(*deals.columns), ["id"])
+        return result

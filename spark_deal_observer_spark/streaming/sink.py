@@ -3,7 +3,7 @@
 The reference's single mutable PostgreSQL table becomes one parquet
 directory partitioned by an epoch bucket
 (`epoch_bucket = activated_at_epoch DIV bucket_width`), maintained by
-three write shapes (no Delta in this environment, so MERGE is
+two write shapes (no Delta in this environment, so MERGE is
 read-modify-write — the tradeoff SURVEY.md §7 Phase 4 documents):
 
   * `append_dedup` — the ON-CONFLICT-DO-NOTHING ingest sink (T6): anti-join
@@ -15,15 +15,14 @@ read-modify-write — the tradeoff SURVEY.md §7 Phase 4 documents):
   * `merge_overwrite` — the UPDATE shapes (S7/S8): given ONLY the changed
     rows, rewrite the partitions they intersect with merge_update applied,
     staged to a temp dir then swapped per partition.
-  * `delete_keys` — the revert-compensation DELETE, scoped the same way.
 
-Every shape first computes the batch's bucket set (micro-batches are
-epoch-contiguous, so it's a handful of values) and prunes the stored-table
-read to those partitions — O(batch), not O(table), per tick. The updates
-and keys of a rewrite are materialized once per write (`_once`), so the
-plan that produced them (a work-queue top-k, a semi-join) runs once
-however many times the write reads them. With a Delta/Iceberg catalog the
-write shapes become native MERGE.
+Both shapes first compute the batch's bucket set (micro-batches are
+epoch-contiguous, so it's a handful of values) and prune the stored-table
+read to those partitions — O(batch), not O(table), per tick. A merge's
+updates are materialized once per write (`_once`), so the plan that
+produced them (a work-queue top-k, a semi-join) runs once however many
+times the write reads them. With a Delta/Iceberg catalog the write shapes
+become native MERGE.
 
 Durability note: the staged-swap uses `os.rename`, which is atomic on a
 local POSIX filesystem but NOT on object storage (S3/GCS "rename" is
@@ -183,53 +182,24 @@ class PartitionedDealTableSink:
             result[bucket] = want
         return result
 
-    def _rewrite_buckets(self, rows: DataFrame, buckets: list[int]) -> None:
-        """Stage `rows` (which must hold the complete new content of
-        `buckets`) partitioned by bucket, then swap each bucket's directory;
-        a bucket left with no rows is removed."""
-        tmp = f"{self.path}__stage_{uuid.uuid4().hex[:8]}"
-        rows.write.mode("overwrite").partitionBy(self.PCOL).parquet(tmp)
-        try:
-            for b in buckets:
-                part = f"{self.PCOL}={b}"
-                staged_part = os.path.join(tmp, part)
-                live = os.path.join(self.path, part)
-                if os.path.exists(staged_part):
-                    _swap_dir(staged_part, live)
-                elif os.path.exists(live):
-                    shutil.rmtree(live)  # every row of the bucket deleted
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-
     def merge_overwrite(self, updates: DataFrame, on: Sequence[str]) -> None:
         """Partition-scoped MERGE: `updates` holds only the changed rows
         (e.g. `resolve_tick`'s output). They are evaluated once — the bucket
         probe and the staged write share one materialized copy — and only
-        the partitions they intersect are read, merged and swapped."""
+        the partitions they intersect are read, merged, staged and swapped.
+        merge_update keeps every update row, so each of those buckets has
+        a staged directory."""
         with table_lock(self.path):
             updates = _once(self._with_bucket(updates))
             buckets = self._buckets_of(updates)
             base = self._read_raw().where(F.col(self.PCOL).isin(buckets))
-            self._rewrite_buckets(merge_update(base, updates, list(on)), buckets)
-
-    def delete_keys(self, keys: DataFrame) -> None:
-        """MERGE WHEN MATCHED THEN DELETE, partition-scoped: drop stored rows
-        whose key matches `keys` (the revert-compensation write shape;
-        default pipelines never call this — see ChangeFeedSink), rewriting
-        ONLY the epoch buckets the keys intersect. `keys` must carry
-        `activated_at_epoch` (it is part of DEAL_KEY, and a narrower key
-        such as `id` still needs it for the bucket), so the rewrite stays
-        O(batch-epoch-range), never O(table). The keys are evaluated once,
-        like merge_overwrite's updates; deleting an absent key is a no-op,
-        so replays are safe."""
-        with table_lock(self.path):
-            keys = _once(
-                self._with_bucket(keys)
-                .select(*self.key, self.PCOL)
-                .dropDuplicates(self.key)
-            )
-            buckets = self._buckets_of(keys)
-            base = self._read_raw().where(F.col(self.PCOL).isin(buckets))
-            self._rewrite_buckets(
-                base.join(keys.drop(self.PCOL), self.key, "left_anti"), buckets
-            )
+            tmp = f"{self.path}__stage_{uuid.uuid4().hex[:8]}"
+            merge_update(base, updates, list(on)).write.mode(
+                "overwrite"
+            ).partitionBy(self.PCOL).parquet(tmp)
+            try:
+                for b in buckets:
+                    part = f"{self.PCOL}={b}"
+                    _swap_dir(os.path.join(tmp, part), os.path.join(self.path, part))
+            finally:
+                shutil.rmtree(tmp, ignore_errors=True)

@@ -154,7 +154,7 @@ RATIO_ORACLE_LEGACY = (
 RATIO_ORACLE_NAIVE = "ROUND(CAST(num AS DOUBLE) / den, 6)"
 # The canonical template (functions/rounding.py): round the double's own
 # shortest repr — Spark's exact semantics at any magnitude < 1e21.
-from ..functions.rounding import round6_sql as _round6_sql  # noqa: E402
+from spark_deal_observer_spark.functions.rounding import round6_sql as _round6_sql  # noqa: E402
 
 RATIO_ORACLE_SHORTEST = _round6_sql("CAST(num AS DOUBLE) / den")
 

@@ -1,104 +1,15 @@
-"""Round-5 regression tests for the r4 advisor findings: same-batch-id
-redelivery of the cardinality sink (the read-while-overwriting crash
-loop), the frequency ledger's O(batch_id) restart materialization, the
-transition monitor's pre-first-batch read, global_prefix_sum under NULL
-range partitions / non-bigint value types, and a plan-shape pin for the
+"""Round-5 regression tests for the r4 advisor findings:
+global_prefix_sum under NULL range partitions / non-bigint value types,
+label propagation's early exit, and a plan-shape pin for the
 quality_gate pushdown barrier (the ~20×-per-row HOF re-evaluation must
 not silently return under a Spark upgrade)."""
 
 from __future__ import annotations
 
-import pytest
-
 from conftest import SF_SMALL
 from pyspark.sql import functions as F
 
 from spark_deal_observer_spark.sources.tables import load_table
-
-
-def _splits(events, n=3):
-    return [events.where(F.col("event_id") % n == i) for i in range(n)]
-
-
-@pytest.mark.slow  # r10 test tier: see pytest.ini
-def test_cardinality_same_batch_id_redelivery(spark, tmp_path):
-    """Restart replay redelivers the LAST delivered batch under its OWN
-    id: the sink resumes with _last_snapshot == batch_id, and a
-    latest-snapshot merge would read snapshot=N while overwriting
-    snapshot=N — Spark refuses ('Cannot overwrite a path that is also
-    being read from') and the stream wedges in a crash loop. The
-    strictly-below read must make the redelivery bit-identical instead."""
-    from spark_deal_observer_spark.streaming.cardinality import (
-        CardinalityMonitorSink,
-    )
-
-    events = load_table(spark, SF_SMALL, "events")
-    parts = _splits(events)
-    path = str(tmp_path / "card")
-    s1 = CardinalityMonitorSink(spark, path)
-    s1.process_batch(parts[0], batch_id=0)
-    s1.process_batch(parts[1], batch_id=1)
-    before = {
-        (r["event_type"], r["bucket"]): r["rho"]
-        for r in s1._registers().collect()
-    }
-
-    # process restart: fresh instance, Structured Streaming redelivers
-    # the in-flight batch under the SAME id
-    s2 = CardinalityMonitorSink(spark, path)
-    s2.process_batch(parts[1], batch_id=1)  # crashed before the fix
-    after = {
-        (r["event_type"], r["bucket"]): r["rho"]
-        for r in s2._registers().collect()
-    }
-    assert after == before
-
-
-def test_frequency_restart_ledger_is_highwater_mark(spark, tmp_path):
-    """Restart recovery must keep the applied-batch ledger as an int
-    high-water mark — a long-running stream's ids reach millions and
-    set(range(id)) is O(batch_id) memory for what is one comparison.
-    Replays at or below the mark are still dropped before the
-    non-idempotent sum-merge."""
-    from spark_deal_observer_spark.streaming.frequency import (
-        FrequencyMonitorSink,
-    )
-
-    docs = load_table(spark, SF_SMALL, "documents")
-    parts = [docs.where(F.col("doc_id") % 3 == i) for i in range(3)]
-    path = str(tmp_path / "freq")
-    f1 = FrequencyMonitorSink(spark, path)
-    # sparse, LARGE batch ids (checkpoint offsets survive restarts and
-    # only grow): the ledger must not materialize their range
-    f1.process_batch(parts[0], batch_id=0)
-    f1.process_batch(parts[1], batch_id=5_000_017)
-
-    f2 = FrequencyMonitorSink(spark, path)
-    assert f2._last_snapshot == 5_000_017
-    assert f2._applied == set()  # O(1) restart state, not set(range(...))
-    before = {(r["d"], r["cell"]): r["cnt"] for r in f2._sketch().collect()}
-    f2.process_batch(parts[1], batch_id=5_000_017)  # pre-restart replay
-    f2.process_batch(parts[0], batch_id=0)
-    after = {(r["d"], r["cell"]): r["cnt"] for r in f2._sketch().collect()}
-    assert after == before
-
-
-def test_transitions_read_matrix_before_any_batch(spark, tmp_path):
-    """read_matrix before the first processed batch must return an EMPTY
-    frame with the report schema (not throw on a snapshot=None path), and
-    batch ids past the old 1e9 sentinel must not be silently excluded."""
-    from spark_deal_observer_spark.streaming.transitions import (
-        TransitionMonitorSink,
-    )
-
-    sink = TransitionMonitorSink(spark, str(tmp_path / "tm"))
-    empty = sink.read_matrix()
-    assert empty.columns == ["prev_type", "next_type", "n", "p"]
-    assert empty.count() == 0
-
-    events = load_table(spark, SF_SMALL, "events")
-    sink.process_batch(events, batch_id=10**9 + 7)
-    assert sink.read_matrix().count() > 0
 
 
 def test_prefix_sum_null_partition_and_double_type(spark):

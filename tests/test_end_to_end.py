@@ -146,7 +146,7 @@ def test_three_loops_concurrent_soak(spark, tmp_path):
         str(tmp_path / d) for d in ("source", "table", "ck_i", "ck_e", "ck_g")
     )
     from spark_deal_observer_spark.operators.merge import DEAL_KEY
-    from spark_deal_observer_spark.streaming.concurrency import table_span
+    from spark_deal_observer_spark.streaming.concurrency import table_lock
     from spark_deal_observer_spark.streaming.ingest import DEAL_SELECT_EXPRS
 
     # Slices interleave in time (by arrival, not by ts): the ingest
@@ -173,7 +173,7 @@ def test_three_loops_concurrent_soak(spark, tmp_path):
 
     def enrich_tick(_batch, _id):
         try:
-            with table_span(table):
+            with table_lock(table):
                 if not sink.exists():
                     return
                 deals = sink.read()
@@ -202,7 +202,7 @@ def test_three_loops_concurrent_soak(spark, tmp_path):
 
     def egress_tick(_batch, _id):
         try:
-            with table_span(table):
+            with table_lock(table):
                 res = submit_eligible(sink, lambda p: {"ingested": len(p)}, now=now1)
             with lock_stats:
                 egress_results.append(res)
@@ -242,7 +242,7 @@ def test_three_loops_concurrent_soak(spark, tmp_path):
                 done_enrich = len(enrich_ticks) >= 3
                 done_egress = sum(r["submitted"] for r in egress_results) > 0
             # reads race the merge swaps like any other loop: take the lock
-            with table_span(table):
+            with table_lock(table):
                 n_now = sink.count()
             if done_enrich and done_egress and n_now == n_expected:
                 # one more enrichment+egress round over the final table

@@ -156,35 +156,6 @@ def test_table_profile_matches_direct_aggregates(spark):
             assert row.min_str <= row.max_str
 
 
-# -- streaming model scoring -------------------------------------------------
-
-
-def test_stream_scoring_matches_offline_and_trains_once(spark, tmp_path):
-    """Micro-batch scoring with the published model must (a) reproduce the
-    offline scores for the same docs, (b) reuse ONE model artifact across
-    batches, (c) replay idempotently."""
-    from spark_deal_observer_spark.streaming.scoring import ModelScoringSink
-
-    docs = _docs(spark)
-    sink = ModelScoringSink(spark, docs, str(tmp_path / "scores"))
-    sink2 = ModelScoringSink(spark, docs, str(tmp_path / "scores2"))
-    assert sink.weights is sink2.weights  # published artifact, not a refit
-
-    b1 = docs.where("doc_id < 50")
-    b2 = docs.where("doc_id >= 50 AND doc_id < 80")
-    sink.process_batch(b1, 0)
-    sink.process_batch(b2, 1)
-    got = {r.doc_id: r.prob for r in sink.read_scores().collect()}
-    offline = {
-        r.doc_id: r.prob
-        for r in classifier_scores(docs).where("doc_id < 80").collect()
-    }
-    assert got == offline
-
-    sink.process_batch(b1, 0)  # at-least-once replay of batch 0
-    assert sink.read_scores().count() == len(offline)
-
-
 # -- count-min sketch / DLQ decode -------------------------------------------
 
 
@@ -247,47 +218,6 @@ def test_dlq_decode_routes_instead_of_dropping(spark):
     assert len(out) == 1 and out[0].dlq_reason is not None
 
 
-def test_stream_scoring_wiring_end_to_end(spark, tmp_path):
-    """Drive ModelScoringSink through a REAL Structured Streaming query:
-    file source → foreachBatch, checkpointed restart scores only new
-    arrivals, and every score matches the offline batch query."""
-    from spark_deal_observer_spark.streaming.scoring import ModelScoringSink
-
-    docs = _docs(spark)
-    sink = ModelScoringSink(spark, docs, str(tmp_path / "scores"))
-    src = tmp_path / "stream_src"
-    ckpt = str(tmp_path / "ckpt")
-    src.mkdir()
-    schema = "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
-
-    def arrive(name, pred):
-        docs.where(pred).coalesce(1).write.mode("overwrite").parquet(str(src / name))
-
-    def run():
-        stream = spark.readStream.schema(schema).parquet(str(src / "*"))
-        q = (
-            stream.writeStream.foreachBatch(sink.process_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    arrive("a1", "doc_id < 40")
-    run()
-    n1 = sink.read_scores().count()
-    assert n1 == docs.where("doc_id < 40").count()
-
-    arrive("a2", "doc_id >= 40 AND doc_id < 70")
-    run()  # checkpointed restart → only a2 scored (appended as a new batch)
-    got = {r.doc_id: r.prob for r in sink.read_scores().collect()}
-    offline = {
-        r.doc_id: r.prob
-        for r in classifier_scores(docs).where("doc_id < 70").collect()
-    }
-    assert got == offline
-
-
 def test_artifact_store_is_lru_bounded(spark):
     """Publishing more artifacts than MAX_ARTIFACTS evicts the oldest; a
     re-request after eviction retrains rather than erroring."""
@@ -303,71 +233,6 @@ def test_artifact_store_is_lru_bounded(spark):
     assert sorted(r.cell for r in again.collect()) == sorted(
         r.cell for r in first.collect()
     )
-
-
-def test_drift_monitor_flags_shifted_batches_only(spark, tmp_path):
-    """A batch drawn from the baseline corpus scores ≈0 PSI; a batch whose
-    texts are truncated (token-count distribution shifted hard left)
-    scores much higher; replay is idempotent; baseline is published once."""
-    import pyspark.sql.functions as F
-
-    from spark_deal_observer_spark.streaming.drift import DriftMonitorSink
-
-    docs = _docs(spark)
-    sink = DriftMonitorSink(spark, docs, str(tmp_path / "drift"))
-    sink2 = DriftMonitorSink(spark, docs, str(tmp_path / "drift2"))
-    assert sink.baseline is sink2.baseline  # published artifact
-
-    ok_batch = docs.where("doc_id < 250")
-    shifted = docs.withColumn(
-        "text", F.expr("array_join(slice(split(text, ' '), 1, 3), ' ')")
-    )
-    sink.process_batch(ok_batch, 0)
-    sink.process_batch(shifted, 1)
-    rep = {r.batch_id: r for r in sink.read_report().collect()}
-    assert rep[0].psi < 0.05, rep[0]
-    assert rep[1].psi > 0.5, rep[1]
-    assert rep[0].n_docs == 250 and rep[1].n_docs == 500
-
-    sink.process_batch(ok_batch, 0)  # replay
-    assert sink.read_report().count() == 2
-
-
-def test_drift_monitor_wiring_end_to_end(spark, tmp_path):
-    """DriftMonitorSink through a real Structured Streaming query:
-    checkpointed restart monitors only new arrivals; the shifted arrival
-    is the one that alarms."""
-    import pyspark.sql.functions as F
-
-    from spark_deal_observer_spark.streaming.drift import DriftMonitorSink
-
-    docs = _docs(spark)
-    sink = DriftMonitorSink(spark, docs, str(tmp_path / "drift"))
-    src = tmp_path / "stream_src"
-    ckpt = str(tmp_path / "ckpt")
-    src.mkdir()
-    schema = "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
-
-    def run():
-        stream = spark.readStream.schema(schema).parquet(str(src / "*"))
-        q = (
-            stream.writeStream.foreachBatch(sink.process_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    docs.where("doc_id < 200").coalesce(1).write.parquet(str(src / "a1"))
-    run()
-    shifted = docs.withColumn(
-        "text", F.expr("array_join(slice(split(text, ' '), 1, 3), ' ')")
-    )
-    shifted.coalesce(1).write.parquet(str(src / "a2"))
-    run()  # restart from checkpoint → only a2 is monitored
-    rep = sorted(sink.read_report().collect(), key=lambda r: r.batch_id)
-    assert len(rep) == 2
-    assert rep[0].psi < 0.05 < rep[1].psi
 
 
 def test_probe_ttl_caches_liveness(spark, monkeypatch):

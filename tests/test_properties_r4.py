@@ -1,5 +1,5 @@
 """Round-4 property tests: published quality floors for the trained ANN
-tiers, and the empty-batch contract of the drift monitor."""
+tiers, and invariants of the round-4 catalog operators."""
 
 from __future__ import annotations
 
@@ -38,22 +38,6 @@ def test_ann_tiers_meet_published_recall_floors(spark):
     assert set(rows) == set(RECALL_FLOORS)
     for method, floor in RECALL_FLOORS.items():
         assert rows[method] >= floor, (method, rows[method], floor)
-
-
-def test_drift_monitor_skips_empty_batch_division(spark, tmp_path):
-    """An empty micro-batch must produce an explicit (0, 0.0) report row,
-    never a NULL psi from the tot=0 division."""
-    from spark_deal_observer_spark.sources.tables import load_table
-    from spark_deal_observer_spark.streaming.drift import DriftMonitorSink
-
-    docs = load_table(spark, SF_ORACLE, "documents")
-    sink = DriftMonitorSink(spark, docs, str(tmp_path / "drift"))
-    sink.process_batch(docs.limit(50), batch_id=0)
-    sink.process_batch(docs.limit(0), batch_id=1)
-    rows = {r["batch_id"]: r for r in sink.read_report().collect()}
-    assert rows[1]["n_docs"] == 0
-    assert rows[1]["psi"] == 0.0
-    assert rows[0]["psi"] is not None
 
 
 def test_lsh_candidate_recall_floor(spark):
@@ -279,48 +263,6 @@ def test_curation_report_covers_corpus_with_consistent_verdicts(spark):
         assert r["reason"] == expect, r
 
 
-def test_dsir_stream_scoring_matches_offline_and_handles_unseen_vocab(spark, tmp_path):
-    """DSIR micro-batch scoring with the published model must (a) reproduce
-    the offline log weights for raw-pool docs, (b) score held-out text
-    whose features were never seen in training via the smoothed default
-    delta (finite, non-null), and (c) replay idempotently."""
-    from pyspark.sql import functions as F
-
-    from spark_deal_observer_spark.operators.corpus import DSIR_TARGET_SOURCES
-    from spark_deal_observer_spark.sources.tables import load_table
-    from spark_deal_observer_spark.streaming.scoring import DsirScoringSink
-
-    docs = load_table(spark, SF_ORACLE, "documents")
-    sink = DsirScoringSink(spark, docs, str(tmp_path / "dsir"))
-
-    raw = docs.where(~F.col("source").isin(*DSIR_TARGET_SOURCES))
-    b1 = raw.where("doc_id < 100").select("doc_id", "text")
-    unseen = spark.createDataFrame(
-        [(10**9, "qqqxyzzy glorbulax qqqxyzzy fnordwick glorbulax")],
-        "doc_id long, text string",
-    )
-    sink.process_batch(b1, 0)
-    sink.process_batch(unseen, 1)
-
-    got = {r["doc_id"]: r["logw"] for r in sink.read_scores().collect()}
-    # offline weights for the same docs: the full scored pool rides the
-    # published artifact (k = pool size exposes every raw doc's logw)
-    from spark_deal_observer_spark.operators.corpus import dsir_importance_sample
-
-    offline = {
-        r["doc_id"]: r["logw"]
-        for r in dsir_importance_sample(docs, k=raw.count()).collect()
-        if r["doc_id"] < 100
-    }
-    for d, w in offline.items():
-        assert abs(got[d] - w) < 1e-3, (d, got[d], w)
-    assert got[10**9] is not None and got[10**9] == got[10**9]  # finite
-    assert 10**9 not in offline
-
-    sink.process_batch(b1, 0)  # at-least-once replay of batch 0
-    assert sink.read_scores().count() == len(offline) + 1
-
-
 def test_global_prefix_sum_matches_naive_window(spark):
     """The two-phase prefix sum must equal the naive single-partition
     global window exactly — on unsorted input, across many partitions,
@@ -422,52 +364,6 @@ def test_mmr_rerank_is_more_diverse_than_topk(spark):
         return sum(r["s"] for r in rows) / len(rows)
 
     assert mean_pairwise(ids) <= mean_pairwise(pool_ids[:MMR_K]) + 1e-9
-
-
-def test_streaming_budget_admission_spends_once_and_recovers(spark, tmp_path):
-    """The streaming budget gate must (a) admit each batch's descending-
-    quality prefix under the REMAINING budget, (b) never overspend across
-    batches, (c) ignore a replayed batch (admission consumes budget — the
-    ledger must drop it before state), and (d) recover ledger + consumed
-    total from its own output on restart."""
-    from pyspark.sql import functions as F
-
-    from spark_deal_observer_spark.sources.tables import load_table
-    from spark_deal_observer_spark.streaming.admission import BudgetAdmissionSink
-
-    docs = load_table(spark, SF_ORACLE, "documents")
-    b1 = docs.where("doc_id < 200")
-    b2 = docs.where("doc_id >= 200 AND doc_id < 400")
-    b1_tokens = int(
-        b1.agg(F.sum(F.expr("size(filter(split(text, ' '), t -> length(t) > 0))"))).first()[0]
-    )
-    budget = b1_tokens + 500  # batch 1 fits whole; batch 2 gets ~500 tokens
-    sink = BudgetAdmissionSink(spark, budget, str(tmp_path / "adm"))
-    sink.process_batch(b1, 0)
-    sink.process_batch(b2, 1)
-    rows = sink.read_admitted().collect()
-    got_b1 = [r for r in rows if r["doc_id"] < 200]
-    got_b2 = [r for r in rows if r["doc_id"] >= 200]
-    assert sum(r["n_tokens"] for r in got_b1) == b1_tokens  # all admitted
-    total = sum(r["n_tokens"] for r in rows)
-    assert total <= budget
-    assert got_b2, "batch 2 should admit at least one doc"
-    # batch-2 admission is its quality prefix under the remainder
-    b2_sorted = sorted(got_b2, key=lambda r: (-r["quality_score"], r["doc_id"]))
-    cum = 0
-    for r in b2_sorted:
-        cum += r["n_tokens"]
-        assert cum <= budget - b1_tokens
-    # replay: ledger drops it, nothing double-spends
-    sink.process_batch(b1, 0)
-    assert sink.read_admitted().count() == len(rows)
-    # restart recovery: a fresh sink on the same path knows the ledger and
-    # the consumed total — an exhausted budget admits nothing more
-    sink2 = BudgetAdmissionSink(spark, budget, str(tmp_path / "adm"))
-    assert sink2._consumed == total and sink2._applied == {0, 1}
-    sink2.process_batch(docs.where("doc_id >= 400 AND doc_id < 600"), 2)
-    extra = sink2.read_admitted().where("doc_id >= 400").collect()
-    assert sum(r["n_tokens"] for r in extra) <= budget - total
 
 
 def test_label_propagation_groups_nodes(spark):

@@ -8,17 +8,18 @@ downstream family IF a reorg handler ever flips `reverted` rows to
 retracted:
 
 1. counts / rollups — abelian-group state: merging the NEGATED partials
-   of the reverted rows through the rollup sink's existing sum-merge
+   of the reverted rows through an hourly rollup's union+sum merge
    yields bit-exactly the recomputed retained-only aggregate. A
-   `retract_batch` entrypoint is a sign flip away; no history rescan.
+   retraction is a sign flip away; no history rescan.
 2. dedup clusters — NOT retraction-compatible: removing a bridge doc
    SPLITS a component, so "cluster(all) minus the reverted doc" keeps
    A,C merged where cluster(retained) separates them. Compensation must
    recompute affected components (the supernode-contraction incremental
    path already scopes that work to touched components).
-3. CDC feed — the snapshot-diff classification carries the retraction
-   signal downstream as `removed` ops keyed by deal id, so consumers
-   learn WHICH keys to compensate from the audit log alone.
+3. change feed — a snapshot diff (full-outer join of old and new state)
+   carries the retraction signal downstream as `removed` ops keyed by
+   deal id, so consumers learn WHICH keys to compensate from the diff
+   alone.
 
 SCALE.md §r8 records the design conclusions.
 """
@@ -36,7 +37,7 @@ REVERTED = "event_type = 'error'"  # the engine's reverted derivation (plans/dea
 
 
 def _rollup(events):
-    """The HourlyRollupSink partial shape (rollup_sink._partials)."""
+    """Hourly (event_type, bucket_ts) partials: event count and value sum."""
     return events.groupBy(
         "event_type", trunc_ntz("hour", "ts").alias("bucket_ts")
     ).agg(F.count("*").alias("n_events"), F.sum("value").alias("sum_value"))

@@ -20,7 +20,7 @@ from pathlib import Path
 import duckdb
 import pytest
 
-from spark_deal_observer_spark.plans import roundfuzz as rf
+import roundfuzz as rf
 
 SRC = Path(__file__).resolve().parent.parent / "spark_deal_observer_spark"
 
@@ -161,7 +161,7 @@ def test_no_legacy_decimal_templates_in_source():
     pat = re.compile(r"DECIMAL\(\d+,12\)")
     offenders = []
     for p in SRC.rglob("*.py"):
-        if p.name in ("roundfuzz.py", "rounding.py"):  # harness + history doc
+        if p.name == "rounding.py":  # history doc
             continue
         for i, line in enumerate(p.read_text().splitlines(), 1):
             if pat.search(line):
@@ -194,7 +194,6 @@ ROUND6_INVENTORY = {
     "multimodal/media.py": (2, "palette-index/pixel-delta means bounded by 8-bit range"),
     "multimodal/crossmodal.py": (2, "whitened regression coefficient (global + per-length-cell local map twin); |w6| < 1e3 empirically, < 1e6 structurally"),
     "plans/registry.py": (5, "event-value quantiles (< 1e4) + readability ratios (|flesch| < 1e6 for degenerate docs) + novelty fractions"),
-    "plans/roundfuzz.py": (1, "the harness's own ratio template"),
 }
 
 

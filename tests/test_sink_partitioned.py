@@ -133,45 +133,6 @@ def test_compact_collapses_small_files_and_preserves_data(spark, tmp_path):
     assert _files(sink.path) == after_files
 
 
-def test_delete_keys_rewrites_only_intersected_partitions(spark, tmp_path):
-    """delete_keys (the revert-compensation write shape) is partition-
-    scoped like merge_overwrite: untouched epoch buckets keep identical
-    file sets, deleted keys are gone, and deleting absent keys is a
-    no-op (replay safety)."""
-    deals = deals_df(spark, SF_SMALL)
-    sink = PartitionedDealTableSink(spark, str(tmp_path / "table"))
-    sink.append_dedup(deals)
-    n_all = sink.read().count()
-
-    dead = deals.where(
-        (F.col("activated_at_epoch") < MID_EPOCH) & (F.col("miner_id") % 2 == 0)
-    )
-    n_dead = dead.count()
-    assert n_dead > 0
-    before = _files(sink.path)
-    hi_parts = {
-        p for p in before
-        if int(p.split("=")[1]) >= MID_EPOCH // sink.bucket_width
-    }
-    assert hi_parts, "expected untouched high buckets"
-
-    sink.delete_keys(dead)
-    after = _files(sink.path)
-    assert sink.read().count() == n_all - n_dead
-    assert (
-        sink.read()
-        .join(dead.select(*sink.key), sink.key, "left_semi")
-        .count()
-        == 0
-    )
-    for p in hi_parts:  # untouched buckets byte-identical
-        assert after[p] == before[p], p
-
-    # replay: deleting already-absent keys changes nothing
-    sink.delete_keys(dead)
-    assert sink.read().count() == n_all - n_dead
-
-
 def _counting_filter(spark):
     """(accumulator, column-predicate UDF): the UDF passes every row and
     adds one to the accumulator per row it sees, so the accumulator counts
@@ -235,17 +196,3 @@ def test_merge_overwrite_evaluates_updates_once(spark, tmp_path):
     assert sink.read().where(F.col("submitted_at") == now).count() >= seen.value
 
 
-def test_delete_keys_evaluates_keys_once(spark, tmp_path):
-    deals = deals_df(spark, SF_SMALL)
-    sink = PartitionedDealTableSink(spark, str(tmp_path / "table"))
-    sink.append_dedup(deals)
-    n_all = sink.count()
-    pinned = (
-        deals.where(F.col("miner_id") % 2 == 0).select(*sink.key).dropDuplicates()
-        .localCheckpoint()
-    )
-    seen, keep = _counting_filter(spark)
-
-    sink.delete_keys(pinned.where(keep("miner_id")))
-    assert seen.value == pinned.count() > 0
-    assert sink.count() == n_all - seen.value

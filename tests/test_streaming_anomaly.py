@@ -1,17 +1,22 @@
-"""Streaming anomaly monitor: the streamed score surface over the
-maintained rollup must equal the batch operator over the same events,
-replaying a batch must change nothing (the rollup's batch-id guard is
-the monitor's idempotence), and partially ingested streams score exactly
-their ingested prefix."""
+"""Streaming form of the anomaly monitor: the hourly grain of
+`hypertable_rollup` is a lossless partial (count→sum), so hourly rollups
+built per micro-batch and sum-merged, then scored by
+`score_hourly_anomalies`, must equal the batch operator over the same
+events."""
 
 from __future__ import annotations
+
+from functools import reduce
 
 from conftest import SF_SMALL
 from pyspark.sql import functions as F
 
-from spark_deal_observer_spark.operators.intervals import event_anomaly_zscore
+from spark_deal_observer_spark.operators.intervals import (
+    event_anomaly_zscore,
+    hypertable_rollup,
+    score_hourly_anomalies,
+)
 from spark_deal_observer_spark.sources.tables import load_table
-from spark_deal_observer_spark.streaming.anomaly import AnomalyMonitorSink
 
 
 def _rows(df):
@@ -23,25 +28,17 @@ def _rows(df):
     }
 
 
-def test_streamed_scores_equal_batch_operator(spark, tmp_path):
+def _merged_hourly(batches):
+    parts = (hypertable_rollup(b).where(F.col("grain") == "hour") for b in batches)
+    return (
+        reduce(lambda a, b: a.unionByName(b), parts)
+        .groupBy("event_type", "bucket_ts")
+        .agg(F.sum("n_events").cast("bigint").alias("n_events"))
+    )
+
+
+def test_streamed_scores_equal_batch_operator(spark):
     events = load_table(spark, SF_SMALL, "events")
-    sink = AnomalyMonitorSink(spark, str(tmp_path / "anom"))
     batches = [events.where(F.col("event_id") % 3 == i) for i in range(3)]
-    for i, b in enumerate(batches):
-        sink.process_batch(b, batch_id=i)
-    assert _rows(sink.read_scores()) == _rows(event_anomaly_zscore(events))
-
-
-def test_replay_changes_nothing_and_prefix_scores_prefix(spark, tmp_path):
-    events = load_table(spark, SF_SMALL, "events")
-    sink = AnomalyMonitorSink(spark, str(tmp_path / "anom"))
-    batches = [events.where(F.col("event_id") % 3 == i) for i in range(3)]
-    sink.process_batch(batches[0], batch_id=0)
-    # prefix ingests score exactly the ingested slice
-    assert _rows(sink.read_scores()) == _rows(event_anomaly_zscore(batches[0]))
-
-    sink.process_batch(batches[1], batch_id=1)
-    after_two = _rows(sink.read_scores())
-    # redelivery of batch 0: rollup guard folds nothing → scores unchanged
-    sink.process_batch(batches[0], batch_id=0)
-    assert _rows(sink.read_scores()) == after_two
+    streamed = score_hourly_anomalies(_merged_hourly(batches))
+    assert _rows(streamed) == _rows(event_anomaly_zscore(events))

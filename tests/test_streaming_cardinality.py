@@ -1,163 +1,67 @@
-"""Streaming HLL cardinality monitor: the accumulated register state must
-equal the batch-mode registers over the union of all batches (merge
-associativity), and re-processing a delivered batch must change nothing
-(merge idempotence = effectively-once under at-least-once delivery)."""
+"""Streaming form of the HLL cardinality sketch: the register table IS
+the sketch's whole state and max-per-(key, bucket) IS its merge, so
+registers built per micro-batch and max-merged must equal the batch-mode
+registers over the union of all batches (merge associativity), and
+merging a redelivered or empty batch must change nothing (merge
+idempotence = effectively-once under at-least-once delivery, no ledger
+needed)."""
 
 from __future__ import annotations
+
+from functools import reduce
 
 from conftest import SF_SMALL
 from pyspark.sql import functions as F
 
 from spark_deal_observer_spark.operators.sketches import hll_estimate, hll_registers
 from spark_deal_observer_spark.sources.tables import load_table
-from spark_deal_observer_spark.streaming.cardinality import CardinalityMonitorSink
 
 
 def _splits(events, n=3):
     return [events.where(F.col("event_id") % n == i) for i in range(n)]
 
 
-def test_streamed_registers_match_batch(spark, tmp_path):
-    events = load_table(spark, SF_SMALL, "events")
-    sink = CardinalityMonitorSink(spark, str(tmp_path / "card"))
-    for i, b in enumerate(_splits(events)):
-        sink.process_batch(b, batch_id=i)
+def _merge(*regs):
+    return (
+        reduce(lambda a, b: a.unionByName(b), regs)
+        .groupBy("event_type", "bucket")
+        .agg(F.max("rho").alias("rho"))
+    )
 
-    streamed = {
-        (r["event_type"], r["bucket"]): r["rho"]
-        for r in sink._registers().collect()
-    }
-    batch = {
-        (r["event_type"], r["bucket"]): r["rho"]
-        for r in hll_registers(events).collect()
-    }
-    assert streamed == batch
 
-    # the final report row per group equals the batch-mode estimate
-    last = {
-        r["event_type"]: r["distinct_est"]
-        for r in sink.read_report().where(F.col("batch_id") == 2).collect()
-    }
-    expect = {
+def _cells(regs):
+    return {(r["event_type"], r["bucket"]): r["rho"] for r in regs.collect()}
+
+
+def _est(regs):
+    return {
         r["event_type"]: round(r["est"], 4)
-        for r in hll_estimate(hll_registers(events), ["event_type"]).collect()
+        for r in hll_estimate(regs, ["event_type"]).collect()
     }
-    assert last == expect
 
 
-def test_replayed_batch_is_idempotent(spark, tmp_path):
+def test_streamed_registers_match_batch(spark):
+    events = load_table(spark, SF_SMALL, "events")
+    streamed = _merge(*(hll_registers(b) for b in _splits(events)))
+    batch = hll_registers(events)
+    assert _cells(streamed) == _cells(batch)
+    # the estimate read off the merged state equals the batch-mode estimate
+    assert _est(streamed) == _est(batch)
+
+
+def test_replayed_batch_is_idempotent(spark):
     events = load_table(spark, SF_SMALL, "events")
     first, second, _ = _splits(events)
-    sink = CardinalityMonitorSink(spark, str(tmp_path / "card2"))
-    sink.process_batch(first, batch_id=0)
-    sink.process_batch(second, batch_id=1)
-    before = {
-        (r["event_type"], r["bucket"]): r["rho"]
-        for r in sink._registers().collect()
-    }
+    state = _merge(hll_registers(first), hll_registers(second))
+    before = _cells(state)
     # at-least-once delivery: batch 1 arrives again
-    sink.process_batch(second, batch_id=2)
-    after = {
-        (r["event_type"], r["bucket"]): r["rho"]
-        for r in sink._registers().collect()
-    }
+    after = _cells(_merge(state, hll_registers(second)))
     assert before == after
 
 
-def test_empty_batch_keeps_state_and_reports(spark, tmp_path):
+def test_empty_batch_keeps_state_and_reports(spark):
     events = load_table(spark, SF_SMALL, "events")
-    sink = CardinalityMonitorSink(spark, str(tmp_path / "card3"))
-    sink.process_batch(events, batch_id=0)
-    est0 = {
-        r["event_type"]: r["distinct_est"]
-        for r in sink.read_report().where(F.col("batch_id") == 0).collect()
-    }
-    empty = events.where(F.lit(False))
-    sink.process_batch(empty, batch_id=1)
-    est1 = {
-        r["event_type"]: r["distinct_est"]
-        for r in sink.read_report().where(F.col("batch_id") == 1).collect()
-    }
-    assert est0 == est1
-
-
-# ---------------------------------------------------------------------------
-# CMS frequency monitor: the non-idempotent contrast
-# ---------------------------------------------------------------------------
-
-
-def test_streamed_cms_matches_batch_and_ledger_blocks_replay(spark, tmp_path):
-    from spark_deal_observer_spark.operators.sketches import (
-        cms_cells,
-        cms_probe_estimates,
-    )
-    from spark_deal_observer_spark.streaming.frequency import FrequencyMonitorSink
-
-    docs = load_table(spark, SF_SMALL, "documents")
-    parts = [docs.where(F.col("doc_id") % 3 == i) for i in range(3)]
-    sink = FrequencyMonitorSink(spark, str(tmp_path / "freq"))
-    for i, b in enumerate(parts):
-        sink.process_batch(b, batch_id=i)
-
-    streamed = {
-        (r["d"], r["cell"]): r["cnt"] for r in sink._sketch().collect()
-    }
-    batch = {(r["d"], r["cell"]): r["cnt"] for r in cms_cells(docs).collect()}
-    assert streamed == batch
-
-    est_stream = {
-        r["token"]: r["cms_est"]
-        for r in sink.read_report().where(F.col("batch_id") == 2).collect()
-    }
-    est_batch = {
-        r["token"]: r["cms_est"]
-        for r in cms_probe_estimates(cms_cells(docs), spark).collect()
-    }
-    assert est_stream == est_batch
-
-    # sum-merge is NOT idempotent: the ledger must drop the replay before
-    # it reaches the state
-    sink.process_batch(parts[1], batch_id=1)
-    after = {(r["d"], r["cell"]): r["cnt"] for r in sink._sketch().collect()}
-    assert after == batch
-
-
-def test_restart_recovers_durable_state(spark, tmp_path):
-    """A NEW sink instance over the same path must resume from the last
-    durable snapshot (not restart from empty), and — for the
-    non-idempotent CMS — must treat replayed pre-restart batch ids as
-    already applied."""
-    from spark_deal_observer_spark.operators.sketches import cms_cells
-    from spark_deal_observer_spark.streaming.frequency import FrequencyMonitorSink
-
-    events = load_table(spark, SF_SMALL, "events")
-    docs = load_table(spark, SF_SMALL, "documents")
-    ev_parts = _splits(events)
-    doc_parts = [docs.where(F.col("doc_id") % 3 == i) for i in range(3)]
-
-    card_path, freq_path = str(tmp_path / "c"), str(tmp_path / "f")
-    s1 = CardinalityMonitorSink(spark, card_path)
-    f1 = FrequencyMonitorSink(spark, freq_path)
-    for i in range(2):
-        s1.process_batch(ev_parts[i], batch_id=i)
-        f1.process_batch(doc_parts[i], batch_id=i)
-
-    # process restart: fresh instances over the same paths
-    s2 = CardinalityMonitorSink(spark, card_path)
-    f2 = FrequencyMonitorSink(spark, freq_path)
-    f2.process_batch(doc_parts[1], batch_id=1)  # replay from before restart
-    s2.process_batch(ev_parts[2], batch_id=2)
-    f2.process_batch(doc_parts[2], batch_id=2)
-
-    batch_regs = {
-        (r["event_type"], r["bucket"]): r["rho"]
-        for r in hll_registers(events).collect()
-    }
-    got_regs = {
-        (r["event_type"], r["bucket"]): r["rho"]
-        for r in s2._registers().collect()
-    }
-    assert got_regs == batch_regs
-    batch_cells = {(r["d"], r["cell"]): r["cnt"] for r in cms_cells(docs).collect()}
-    got_cells = {(r["d"], r["cell"]): r["cnt"] for r in f2._sketch().collect()}
-    assert got_cells == batch_cells
+    state = hll_registers(events)
+    merged = _merge(state, hll_registers(events.where(F.lit(False))))
+    assert _cells(merged) == _cells(state)
+    assert _est(merged) == _est(state)

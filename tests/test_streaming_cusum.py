@@ -1,16 +1,23 @@
-"""Streaming CUSUM monitor: the streamed changepoint surface over the
-maintained rollup must equal the batch operator over the same events,
-and replaying a batch must change nothing (the rollup's
-write-ahead-intent ledger is the monitor's idempotence)."""
+"""Streaming form of the CUSUM monitor: the hourly grain of
+`hypertable_rollup` is a lossless partial (count→sum), so hourly rollups
+built per micro-batch, sum-merged, densified and scored by
+`score_hourly_cusum` must equal the batch operator over the same
+events."""
 
 from __future__ import annotations
+
+from functools import reduce
 
 from conftest import SF_SMALL
 from pyspark.sql import functions as F
 
-from spark_deal_observer_spark.operators.intervals import event_cusum_changepoint
+from spark_deal_observer_spark.operators.intervals import (
+    densify_hourly,
+    event_cusum_changepoint,
+    hypertable_rollup,
+    score_hourly_cusum,
+)
 from spark_deal_observer_spark.sources.tables import load_table
-from spark_deal_observer_spark.streaming.cusum import CusumMonitorSink
 
 
 def _rows(df):
@@ -23,41 +30,17 @@ def _rows(df):
     }
 
 
-def test_streamed_cusum_equals_batch_operator(spark, tmp_path):
+def _merged_hourly(batches):
+    parts = (hypertable_rollup(b).where(F.col("grain") == "hour") for b in batches)
+    return (
+        reduce(lambda a, b: a.unionByName(b), parts)
+        .groupBy("event_type", "bucket_ts")
+        .agg(F.sum("n_events").cast("bigint").alias("n_events"))
+    )
+
+
+def test_streamed_cusum_equals_batch_operator(spark):
     events = load_table(spark, SF_SMALL, "events")
-    sink = CusumMonitorSink(spark, str(tmp_path / "cu"))
     batches = [events.where(F.col("event_id") % 3 == i) for i in range(3)]
-    for i, b in enumerate(batches):
-        sink.process_batch(b, batch_id=i)
-    assert _rows(sink.read_cusum()) == _rows(event_cusum_changepoint(events))
-
-
-def test_replay_changes_nothing(spark, tmp_path):
-    events = load_table(spark, SF_SMALL, "events")
-    sink = CusumMonitorSink(spark, str(tmp_path / "cu2"))
-    batches = [events.where(F.col("event_id") % 3 == i) for i in range(3)]
-    for i, b in enumerate(batches):
-        sink.process_batch(b, batch_id=i)
-    before = _rows(sink.read_cusum())
-    sink.process_batch(batches[1], batch_id=1)  # at-least-once redelivery
-    assert _rows(sink.read_cusum()) == before
-    # restart (fresh instance over the same state) + replay: still fixed
-    sink2 = CusumMonitorSink(spark, str(tmp_path / "cu2"))
-    sink2.process_batch(batches[2], batch_id=2)
-    assert _rows(sink2.read_cusum()) == before
-
-
-def test_empty_batch_and_pre_ingest_views(spark, tmp_path):
-    events = load_table(spark, SF_SMALL, "events")
-    sink = CusumMonitorSink(spark, str(tmp_path / "cu3"))
-    # pre-ingest: empty TYPED frame (the forecast.read_forecast rule)
-    empty = sink.read_cusum()
-    assert empty.count() == 0
-    assert [f.name for f in empty.schema.fields] == [
-        "event_type", "bucket_ts", "n_events",
-        "cusum_pos", "cusum_neg", "alarm_pos", "alarm_neg",
-    ]
-    sink.process_batch(events.limit(0), batch_id=0)  # empty batch: no-op
-    assert sink.read_cusum().count() == 0
-    sink.process_batch(events, batch_id=1)
-    assert sink.read_cusum().count() > 0
+    streamed = score_hourly_cusum(densify_hourly(_merged_hourly(batches)))
+    assert _rows(streamed) == _rows(event_cusum_changepoint(events))

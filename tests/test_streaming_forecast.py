@@ -1,16 +1,21 @@
-"""Streaming forecast monitor: the streamed EWMA/forecast surface over
-the maintained rollup must equal the batch operator over the same
-events, and replaying a batch must change nothing (the rollup's
-write-ahead-intent ledger is the monitor's idempotence)."""
+"""Streaming form of the forecast monitor: the hourly grain of
+`hypertable_rollup` is a lossless partial (count→sum), so hourly rollups
+built per micro-batch and sum-merged, then scored by `score_hourly_ewma`,
+must equal the batch operator over the same events."""
 
 from __future__ import annotations
+
+from functools import reduce
 
 from conftest import SF_SMALL
 from pyspark.sql import functions as F
 
-from spark_deal_observer_spark.operators.intervals import event_ewma_forecast
+from spark_deal_observer_spark.operators.intervals import (
+    event_ewma_forecast,
+    hypertable_rollup,
+    score_hourly_ewma,
+)
 from spark_deal_observer_spark.sources.tables import load_table
-from spark_deal_observer_spark.streaming.forecast import ForecastMonitorSink
 
 
 def _rows(df):
@@ -22,25 +27,17 @@ def _rows(df):
     }
 
 
-def test_streamed_forecast_equals_batch_operator(spark, tmp_path):
-    events = load_table(spark, SF_SMALL, "events")
-    sink = ForecastMonitorSink(spark, str(tmp_path / "fc"))
-    batches = [events.where(F.col("event_id") % 3 == i) for i in range(3)]
-    for i, b in enumerate(batches):
-        sink.process_batch(b, batch_id=i)
-    assert _rows(sink.read_forecast()) == _rows(event_ewma_forecast(events))
+def _merged_hourly(batches):
+    parts = (hypertable_rollup(b).where(F.col("grain") == "hour") for b in batches)
+    return (
+        reduce(lambda a, b: a.unionByName(b), parts)
+        .groupBy("event_type", "bucket_ts")
+        .agg(F.sum("n_events").cast("bigint").alias("n_events"))
+    )
 
 
-def test_replay_changes_nothing(spark, tmp_path):
+def test_streamed_forecast_equals_batch_operator(spark):
     events = load_table(spark, SF_SMALL, "events")
-    sink = ForecastMonitorSink(spark, str(tmp_path / "fc2"))
     batches = [events.where(F.col("event_id") % 3 == i) for i in range(3)]
-    for i, b in enumerate(batches):
-        sink.process_batch(b, batch_id=i)
-    before = _rows(sink.read_forecast())
-    sink.process_batch(batches[1], batch_id=1)  # at-least-once redelivery
-    assert _rows(sink.read_forecast()) == before
-    # restart (fresh instance over the same state) + replay: still fixed
-    sink2 = ForecastMonitorSink(spark, str(tmp_path / "fc2"))
-    sink2.process_batch(batches[2], batch_id=2)
-    assert _rows(sink2.read_forecast()) == before
+    streamed = score_hourly_ewma(_merged_hourly(batches))
+    assert _rows(streamed) == _rows(event_ewma_forecast(events))

@@ -1,96 +1,14 @@
-"""Streaming EXACT near-dup suppression (streaming/setsim_ingest.py):
-prefix-filtered probe against the accumulated full-postings store."""
+"""Exact set-similarity incremental dedup (operators/dedup.py
+setsim_incremental): the prefix-filtered exact probe of a new batch
+against the stored corpus, checked against the banded-LSH probe over the
+same split."""
 
 from __future__ import annotations
 
-import pytest
-from conftest import SF_SMALL, SF_ORACLE
-
-from pyspark.sql import functions as F
+from conftest import SF_ORACLE
 
 from spark_deal_observer_spark.operators import dedup as dd
 from spark_deal_observer_spark.sources.tables import load_table
-from spark_deal_observer_spark.streaming.setsim_ingest import (
-    SetSimIngestSink,
-    setsim_sets_plain,
-)
-
-
-@pytest.fixture()
-def sink(spark, tmp_path):
-    return SetSimIngestSink(spark, str(tmp_path / "setsim"))
-
-
-def _docs(spark, rows):
-    return spark.createDataFrame(rows, "doc_id BIGINT, text STRING")
-
-
-def _texts(spark, k):
-    rows = load_table(spark, SF_SMALL, "documents").select("text").limit(k).collect()
-    return [r["text"] for r in rows]
-
-
-def test_in_batch_exact_dups_collapse_to_min_id(spark, sink):
-    t0, t1 = _texts(spark, 2)
-    sink.process_batch(_docs(spark, [(1, t0), (2, t0), (3, t1)]))
-    assert {r.doc_id for r in sink.read_corpus().collect()} == {1, 3}
-
-
-def test_cross_batch_near_dup_rejected_exactly(spark, sink):
-    """A later-batch doc that is a NEAR (not byte-identical) duplicate of
-    a stored doc must be rejected; genuinely new content admitted."""
-    t0, t1, t2 = _texts(spark, 3)
-    near = t0[: int(len(t0) * 0.9)] + " tail changed here"
-    sink.process_batch(_docs(spark, [(1, t0), (2, t1)]), batch_id=0)
-    sink.process_batch(_docs(spark, [(10, near), (11, t2)]), batch_id=1)
-    assert {r.doc_id for r in sink.read_corpus().collect()} == {1, 2, 11}
-
-
-def test_replay_is_idempotent(spark, sink):
-    t0, t1 = _texts(spark, 2)
-    batch = _docs(spark, [(1, t0), (2, t1)])
-    sink.process_batch(batch, batch_id=0)
-    n1 = sink.read_corpus().count()
-    sink.process_batch(batch, batch_id=0)
-    assert sink.read_corpus().count() == n1
-    postings = sink._postings.read_all()
-    dup_tok = (
-        postings.groupBy("doc_id", "tok").count().where(F.col("count") > 1)
-    )
-    assert dup_tok.count() == 0
-
-
-def test_resent_doc_in_later_batch_self_rejects(spark, sink):
-    t0 = _texts(spark, 1)[0]
-    sink.process_batch(_docs(spark, [(1, t0)]), batch_id=0)
-    sink.process_batch(_docs(spark, [(99, t0)]), batch_id=1)
-    assert {r.doc_id for r in sink.read_corpus().collect()} == {1}
-
-
-def test_full_postings_probe_equals_prefixed_index_probe(spark):
-    """Losslessness of one-sided prefixing: probing a FULL postings store
-    (the sink's shape, value order, no df) returns the same qualifying
-    matches as the batch twin's two-sided prefixed index (df order) —
-    both are exact, so they must agree row-for-row."""
-    docs = load_table(spark, SF_ORACLE, "documents")
-    batch = docs.where(F.col("doc_id") % 10 == 0)
-    corpus = docs.where(F.col("doc_id") % 10 != 0)
-
-    twin = {
-        (r.batch_doc, r.match_doc, r.jaccard)
-        for r in dd.setsim_incremental(docs).collect()
-    }
-
-    csets = setsim_sets_plain(corpus)
-    full_postings = csets.select(F.explode("sh").alias("tok"), "doc_id", "n")
-    no_df = spark.createDataFrame([], "tok BIGINT, df BIGINT")
-    sink_shape = {
-        (r.batch_doc, r.match_doc, r.jaccard)
-        for r in dd.setsim_probe(
-            setsim_sets_plain(batch), full_postings, no_df, csets
-        ).collect()
-    }
-    assert sink_shape == twin
 
 
 def test_exact_incremental_supersets_lsh_incremental(spark):
