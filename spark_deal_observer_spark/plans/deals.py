@@ -77,16 +77,33 @@ def deals_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(DEALS_VIEW_SQL)
 
 
-def eligible_deals(deals: DataFrame) -> DataFrame:
-    """Flagship: deals eligible for egress submission.
-
-    Reference predicate P5 + computed-column projection P6
-    (`backend/lib/spark-api-submit-deals.js:51-81`):
+def eligible_rows(deals: DataFrame) -> DataFrame:
+    """The deals that pass reference predicate P5
+    (`backend/lib/spark-api-submit-deals.js:51-81`), with every column of
+    `deals` plus the computed `expires_at`:
       submitted_at IS NULL
       AND payload_cid IS NOT NULL
       AND activated_at_epoch < timestamp_to_epoch(now - 2 days)
       AND epoch_to_timestamp(term_start_epoch + term_min) > now
-    projecting (id, miner_id, client_id, piece_cid, piece_size, payload_cid,
+
+    The egress tick collects these whole rows once: it POSTs the payload
+    columns and rebuilds its mark-submitted update rows from the same
+    collected rows, with no second read of the table."""
+    expires_at = epoch_to_timestamp(F.col("term_start_epoch") + F.col("term_min"))
+    return (
+        deals.where(F.col("submitted_at").isNull())
+        .where(F.col("payload_cid").isNotNull())
+        .where(F.col("activated_at_epoch") < F.lit(SEASONED_EPOCH))
+        .where(expires_at > F.lit(REF_TS).cast("timestamp_ntz"))
+        .withColumn("expires_at", expires_at)
+    )
+
+
+def eligible_deals(deals: DataFrame) -> DataFrame:
+    """Flagship: deals eligible for egress submission.
+
+    `eligible_rows` (predicate P5) with the computed-column projection P6,
+    (id, miner_id, client_id, piece_cid, piece_size, payload_cid,
     expires_at) — payload_cid is part of SubmittableDeal
     (spark-api-submit-deals.js:62) and rides to the egress wire format.
 
@@ -95,21 +112,14 @@ def eligible_deals(deals: DataFrame) -> DataFrame:
     IS NOT NULL pushdown; column pruning trims the scan to the 9 columns
     actually referenced.
     """
-    expires_at = epoch_to_timestamp(F.col("term_start_epoch") + F.col("term_min"))
-    return (
-        deals.where(F.col("submitted_at").isNull())
-        .where(F.col("payload_cid").isNotNull())
-        .where(F.col("activated_at_epoch") < F.lit(SEASONED_EPOCH))
-        .where(expires_at > F.lit(REF_TS).cast("timestamp_ntz"))
-        .select(
-            "id",
-            "miner_id",
-            "client_id",
-            "piece_cid",
-            "piece_size",
-            "payload_cid",
-            expires_at.alias("expires_at"),
-        )
+    return eligible_rows(deals).select(
+        "id",
+        "miner_id",
+        "client_id",
+        "piece_cid",
+        "piece_size",
+        "payload_cid",
+        "expires_at",
     )
 
 

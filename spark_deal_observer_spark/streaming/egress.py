@@ -5,11 +5,13 @@ eligible deals 100 at a time, POST each batch, mark successes as submitted,
 skip (don't retry) failed batches this pass — at-least-once with partial
 failure tolerance (T7).
 
-Spark-first: the eligibility query is the declarative plan; batches come
-from `toLocalIterator` (a true cursor — one partition in flight at a time,
-no full collect); the POST is an injected callable so tests (and air-gapped
-runs) stub it; mark-submitted is the broadcast-id merge. One process talks
-to the API, so ordering and counters match the reference exactly.
+Spark-first: the eligibility query is the declarative plan, collected to
+the driver as Arrow in one job; batches are slices of that table; the POST
+is an injected callable so tests (and air-gapped runs) stub it; the mark
+rebuilds the accepted rows with `submitted_at = now` and hands them to the
+sink's merge. Driver memory is O(eligible rows) — the rows the tick offers
+the API, which it already held in full to mark them. One process talks to
+the API, so ordering and counters match the reference exactly.
 
 Per-call retry (reference S3, pRetry×5 in rpc-service/service.js:19-44)
 composes by wrapping the poster: `submit_eligible(sink,
@@ -23,28 +25,20 @@ import logging
 from collections.abc import Callable
 from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..plans.deals import eligible_deals
+from ..plans.deals import eligible_rows
 from .concurrency import table_lock
 from .sink import PartitionedDealTableSink
 
 Poster = Callable[[list[dict[str, Any]]], dict[str, int]]
 DEFAULT_BATCH_SIZE = 100  # SPARK_API_SUBMIT_DEALS_BATCH_SIZE default
 
+_PAYLOAD_COLUMNS = ["miner_id", "client_id", "piece_cid", "piece_size", "payload_cid", "expires_at"]
+
 log = logging.getLogger(__name__)
-
-
-def _batches(rows, size: int):
-    buf: list = []
-    for r in rows:
-        buf.append(r)
-        if len(buf) == size:
-            yield buf
-            buf = []
-    if buf:
-        yield buf
 
 
 def submit_eligible(
@@ -75,8 +69,10 @@ def submit_eligible(
         if not sink.exists():  # ticked before ingest's first commit: no table yet
             return result
         deals = sink.read()
-        ok_ids: list[int] = []
-        for batch in _batches(eligible_deals(deals).toLocalIterator(), batch_size):
+        rows = eligible_rows(deals).toArrow()
+        accepted: list[pa.Table] = []
+        for start in range(0, rows.num_rows, batch_size):
+            batch = rows.slice(start, batch_size)
             payload = [
                 {
                     "minerId": f"f0{r['miner_id']}",
@@ -86,25 +82,22 @@ def submit_eligible(
                     "payloadCid": r["payload_cid"],
                     "expiresAt": r["expires_at"].isoformat(),
                 }
-                for r in batch
+                for r in batch.select(_PAYLOAD_COLUMNS).to_pylist()
             ]
             try:
                 resp = poster(payload)
             except Exception:  # batch skipped, not retried this pass (T7)
-                log.exception("egress: POST of %d deals failed, batch skipped", len(batch))
+                log.exception("egress: POST of %d deals failed, batch skipped", len(payload))
                 result["failed_batches"] += 1
                 continue
-            result["submitted"] += len(batch)
-            result["ingested"] += int(resp.get("ingested", len(batch)))
+            result["submitted"] += len(payload)
+            result["ingested"] += int(resp.get("ingested", len(payload)))
             result["skipped"] += int(resp.get("skipped", 0))
-            ok_ids.extend(int(r["id"]) for r in batch)
+            accepted.append(batch)
 
-        if ok_ids:
-            ids_df = sink.spark.createDataFrame([(i,) for i in ok_ids], "id LONG")
+        if accepted:
             flag = now if now is not None else F.current_timestamp().cast("timestamp_ntz")
-            updates = (
-                deals.join(F.broadcast(ids_df), "id", "left_semi")
-                .withColumn("submitted_at", flag)
-            )
-            sink.merge_overwrite(updates.select(*deals.columns), ["id"])
+            marked = pa.concat_tables(accepted).select(deals.columns)
+            updates = sink.spark.createDataFrame(marked, deals.schema)
+            sink.merge_overwrite(updates.withColumn("submitted_at", flag), ["id"])
         return result

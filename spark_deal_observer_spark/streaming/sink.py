@@ -18,11 +18,17 @@ read-modify-write — the tradeoff SURVEY.md §7 Phase 4 documents):
 
 Both shapes first compute the batch's bucket set (micro-batches are
 epoch-contiguous, so it's a handful of values) and prune the stored-table
-read to those partitions — O(batch), not O(table), per tick. A merge's
-updates are materialized once per write (`_once`), so the plan that
-produced them (a work-queue top-k, a semi-join) runs once however many
-times the write reads them. With a Delta/Iceberg catalog the write shapes
+read to those partitions — O(batch), not O(table), per tick. A merge
+collects its updates to the driver once per write, so the plan that
+produced them (a work-queue top-k) runs once, the bucket set comes from
+the collected rows, and the anti-join against the stored partitions
+broadcasts a local relation. With a Delta/Iceberg catalog the write shapes
 become native MERGE.
+
+Reads pin the schema: a sink's first read infers it from the parquet
+footers, later reads pass it to `spark.read.schema(...)` and skip that
+job. The single-writer contract fixes the table's schema; partition and
+file listing still run on every read, so new buckets and files show up.
 
 Durability note: the staged-swap uses `os.rename`, which is atomic on a
 local POSIX filesystem but NOT on object storage (S3/GCS "rename" is
@@ -40,20 +46,12 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..operators.merge import DEAL_KEY, dedup_insert, merge_update
 from .atomic import gc_swap_debris
 from .atomic import swap_dir as _swap_dir
 from .concurrency import table_lock
-
-
-def _once(df: DataFrame) -> DataFrame:
-    """`df` materialized now, with its lineage cut. A write reads its input
-    more than once (the bucket probe, the merge's key side and its rows);
-    without this each read re-runs the input's whole plan — usually a scan
-    of the very table being rewritten. Call it inside the table lock: it
-    reads the live table, which the write swaps only afterwards."""
-    return df.localCheckpoint(eager=True)
 
 
 class PartitionedDealTableSink:
@@ -81,6 +79,7 @@ class PartitionedDealTableSink:
         self.path = path
         self.key = list(key)
         self.bucket_width = bucket_width
+        self._schema: StructType | None = None  # pinned by the first read
         # restart hygiene: a crash can orphan staged/backup dirs from an
         # interrupted merge_overwrite/compact (`__stage_*` written but
         # never swapped, `__old_*` moved aside but not yet removed,
@@ -116,7 +115,11 @@ class PartitionedDealTableSink:
         )
 
     def _read_raw(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
+        if self._schema is None:
+            df = self.spark.read.parquet(self.path)
+            self._schema = df.schema
+            return df
+        return self.spark.read.schema(self._schema).parquet(self.path)
 
     def read(self) -> DataFrame:
         return self._read_raw().drop(self.PCOL)
@@ -156,7 +159,9 @@ class PartitionedDealTableSink:
 
         Runs partition-by-partition with the same staged-swap as
         merge_overwrite, so a crash mid-compaction leaves every partition
-        either old or new, never mixed. Files are sized by row count
+        either old or new, never mixed. Holds the table lock throughout:
+        a write landing between a partition's read and its swap would be
+        overwritten by the stale stage. Files are sized by row count
         (columnar bytes vary with encoding; rows are the stable proxy).
         Returns {bucket: files_after} for the partitions it rewrote.
 
@@ -165,33 +170,43 @@ class PartitionedDealTableSink:
         parquet keeps the sink self-contained.
         """
         result: dict[int, int] = {}
-        for part in sorted(os.listdir(self.path)):
-            if not part.startswith(f"{self.PCOL}="):
-                continue
-            bucket = int(part.split("=", 1)[1])
-            live = os.path.join(self.path, part)
-            n_files = sum(f.endswith(".parquet") for f in os.listdir(live))
-            rows = self.spark.read.parquet(live)
-            n_rows = rows.count()
-            want = max(1, -(-n_rows // target_rows_per_file))  # ceil div
-            if n_files <= want:
-                continue
-            tmp = f"{live}__compact_{uuid.uuid4().hex[:8]}"
-            rows.coalesce(want).write.mode("overwrite").parquet(tmp)
-            _swap_dir(tmp, live)
-            result[bucket] = want
+        with table_lock(self.path):
+            for part in sorted(os.listdir(self.path)):
+                if not part.startswith(f"{self.PCOL}="):
+                    continue
+                bucket = int(part.split("=", 1)[1])
+                live = os.path.join(self.path, part)
+                n_files = sum(f.endswith(".parquet") for f in os.listdir(live))
+                rows = self.spark.read.parquet(live)
+                n_rows = rows.count()
+                want = max(1, -(-n_rows // target_rows_per_file))  # ceil div
+                if n_files <= want:
+                    continue
+                tmp = f"{live}__compact_{uuid.uuid4().hex[:8]}"
+                rows.coalesce(want).write.mode("overwrite").parquet(tmp)
+                _swap_dir(tmp, live)
+                result[bucket] = want
         return result
 
     def merge_overwrite(self, updates: DataFrame, on: Sequence[str]) -> None:
         """Partition-scoped MERGE: `updates` holds only the changed rows
-        (e.g. `resolve_tick`'s output). They are evaluated once — the bucket
-        probe and the staged write share one materialized copy — and only
-        the partitions they intersect are read, merged, staged and swapped.
-        merge_update keeps every update row, so each of those buckets has
-        a staged directory."""
+        (e.g. `resolve_tick`'s output). Inside the lock they are collected
+        to the driver as Arrow once — their plan runs once, the bucket set
+        comes from the collected column, and the rebuilt local relation
+        makes the merge's anti-join a broadcast. Only the partitions they
+        intersect are read, merged, staged and swapped; merge_update keeps
+        every update row, so each of those buckets has a staged directory.
+
+        The driver holds every update row: callers pass bounded sets (at
+        most `max_deals` rows per enrichment tick, at most the accepted
+        rows of an egress tick)."""
         with table_lock(self.path):
-            updates = _once(self._with_bucket(updates))
-            buckets = self._buckets_of(updates)
+            bucketed = self._with_bucket(updates)
+            rows = bucketed.toArrow()
+            if rows.num_rows == 0:
+                return
+            buckets = sorted(set(rows.column(self.PCOL).to_pylist()))
+            updates = self.spark.createDataFrame(rows, bucketed.schema)
             base = self._read_raw().where(F.col(self.PCOL).isin(buckets))
             tmp = f"{self.path}__stage_{uuid.uuid4().hex[:8]}"
             merge_update(base, updates, list(on)).write.mode(

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import sys
+import uuid
 from pathlib import Path
 
 import pytest
@@ -18,6 +19,20 @@ def spark():
 
     spark = get_spark("tests", shuffle_partitions=8)
     yield spark
+
+
+def count_jobs(spark, fn):
+    """(fn(), the number of Spark jobs fn ran): fn runs under a job group
+    of its own, read back from the status tracker."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count_jobs")
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def pytest_terminal_summary(terminalreporter):

@@ -5,14 +5,17 @@ every Spark write invents fresh part-file names)."""
 
 from __future__ import annotations
 
+import glob
 import os
+import threading
 
-from conftest import SF_SMALL
+from conftest import SF_SMALL, count_jobs
 from pyspark.sql import functions as F
 
 from spark_deal_observer_spark.operators.merge import merge_update
 from spark_deal_observer_spark.operators.state import resolve_tick
-from spark_deal_observer_spark.plans.deals import REF_TS, deals_df
+from spark_deal_observer_spark.plans.deals import REF_TS, deals_df, eligible_deals
+from spark_deal_observer_spark.streaming.concurrency import table_lock
 from spark_deal_observer_spark.streaming.egress import submit_eligible
 from spark_deal_observer_spark.streaming.sink import PartitionedDealTableSink
 
@@ -179,8 +182,8 @@ def test_merge_overwrite_equals_merge_update_over_whole_table(spark, tmp_path):
 
 
 def test_merge_overwrite_evaluates_updates_once(spark, tmp_path):
-    """The bucket probe and the staged write share one materialized copy
-    of `updates`: the plan that produced them runs once per write."""
+    """The bucket set and the staged write share one driver-side copy of
+    `updates`: the plan that produced them runs once per write."""
     deals = deals_df(spark, SF_SMALL)
     sink = PartitionedDealTableSink(spark, str(tmp_path / "table"))
     sink.append_dedup(deals)
@@ -196,3 +199,127 @@ def test_merge_overwrite_evaluates_updates_once(spark, tmp_path):
     assert sink.read().where(F.col("submitted_at") == now).count() >= seen.value
 
 
+
+
+def test_compact_waits_for_the_table_lock(spark, tmp_path):
+    """compact() reads, rewrites and swaps partitions inside the table lock:
+    while another thread holds it, compaction cannot finish, so no write
+    landing mid-compaction is overwritten by a stale stage."""
+    deals = deals_df(spark, SF_SMALL).where(F.col("activated_at_epoch") < 4622100)
+    sink = PartitionedDealTableSink(spark, str(tmp_path / "table"))
+    for i in range(2):  # one bucket, two files
+        sink.append_dedup(deals.where(F.col("id") % 2 == i))
+    rows = sink.read().orderBy("id").collect()
+    out = {}
+    worker = threading.Thread(target=lambda: out.update(done=sink.compact()))
+
+    with table_lock(sink.path):
+        worker.start()
+        worker.join(timeout=5)
+        assert worker.is_alive(), "compact() finished while another thread held the lock"
+    worker.join(timeout=120)
+    assert not worker.is_alive()
+    assert out["done"] == {4622000 // sink.bucket_width: 1}
+    assert sink.read().orderBy("id").collect() == rows
+
+
+def test_pinned_schema_reads_see_new_buckets(spark, tmp_path):
+    """After the first read pins the schema, appends into new buckets and a
+    merge over them stay visible, and reads keep hiding epoch_bucket."""
+    deals = deals_df(spark, SF_SMALL)
+    sink = PartitionedDealTableSink(spark, str(tmp_path / "table"))
+    sink.append_dedup(deals.where(F.col("activated_at_epoch") < MID_EPOCH))
+    sink.read().count()  # pins the schema
+    sink.append_dedup(deals.where(F.col("activated_at_epoch") >= MID_EPOCH))
+    before = sink.read().localCheckpoint()
+
+    now = F.lit(REF_TS).cast("timestamp_ntz")
+    updates = (
+        before.where(F.col("activated_at_epoch") >= MID_EPOCH + 200)
+        .withColumn("submitted_at", now).localCheckpoint()
+    )
+    sink.merge_overwrite(updates, ["id"])
+
+    got, want = sink.read(), merge_update(before, updates, ["id"])
+    assert "epoch_bucket" not in got.columns
+    assert got.count() == deals.select(*sink.key).dropDuplicates().count()
+    assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
+
+
+def test_empty_merge_leaves_the_table_untouched(spark, tmp_path):
+    sink = PartitionedDealTableSink(spark, str(tmp_path / "table"))
+    sink.append_dedup(deals_df(spark, SF_SMALL))
+    before = _files(sink.path)
+
+    sink.merge_overwrite(sink.read().where(F.lit(False)), ["id"])
+    assert _files(sink.path) == before
+    assert not glob.glob(os.path.join(str(tmp_path), "**", "*__stage_*"), recursive=True)
+
+
+def _wire(r) -> tuple:
+    """The egress payload fields of an eligible row, as the poster sees them."""
+    return (
+        f"f0{r['miner_id']}", f"f0{r['client_id']}", r["piece_cid"],
+        str(r["piece_size"]), r["payload_cid"], r["expires_at"].isoformat(),
+    )
+
+
+def test_egress_mark_equals_semi_join_mark(spark, tmp_path):
+    """The mark rebuilt from the accepted rows the tick collected gives the
+    table a whole-table semi-join mark gives: the stored rows merged with
+    the accepted ids' rows flagged submitted. Refused deals stay unmarked."""
+    sink = PartitionedDealTableSink(spark, str(tmp_path / "table"))
+    sink.append_dedup(deals_df(spark, SF_SMALL))
+    before = sink.read().localCheckpoint()
+    by_wire = {_wire(r): r["id"] for r in eligible_deals(before).collect()}
+    accepted: list[int] = []
+    refused: list[int] = []
+    calls = []
+
+    def poster(payload):
+        calls.append(1)
+        ids = [by_wire[tuple(p.values())] for p in payload]
+        if len(calls) == 2:
+            refused.extend(ids)
+            raise ConnectionError("spark-api 500")
+        accepted.extend(ids)
+        return {"ingested": len(payload)}
+
+    now = F.lit(REF_TS).cast("timestamp_ntz")
+    res = submit_eligible(sink, poster, now=now)
+    assert res["failed_batches"] == 1 and len(calls) > 2
+    assert len(accepted) + len(refused) == len(by_wire)
+
+    ids = spark.createDataFrame([(i,) for i in accepted], "id LONG")
+    marked = before.join(F.broadcast(ids), "id", "left_semi").withColumn("submitted_at", now)
+    got, want = sink.read(), merge_update(before, marked, ["id"])
+    assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
+    unmarked = got.where(F.col("id").isin(refused))
+    assert unmarked.count() == len(refused)
+    assert unmarked.where(F.col("submitted_at").isNotNull()).isEmpty()
+
+
+def test_egress_merge_and_read_job_budget(spark, tmp_path):
+    """Jobs per call on the tick paths: an egress tick (first read infers
+    the schema, one eligible collect, the mark's merge) runs at most 5, a
+    merge at most 3 (one updates collect, the staged write) and a read of a
+    sink whose schema is pinned none."""
+    sink = PartitionedDealTableSink(spark, str(tmp_path / "table"))
+    sink.append_dedup(deals_df(spark, SF_SMALL))
+    now = F.lit(REF_TS).cast("timestamp_ntz")
+
+    res, egress_jobs = count_jobs(
+        spark, lambda: submit_eligible(sink, lambda p: {"ingested": len(p)}, now=now)
+    )
+    assert res["submitted"] > 0
+    assert egress_jobs <= 5
+
+    updates = (
+        sink.read().where(F.col("activated_at_epoch") < 4622200)
+        .withColumn("submitted_at", now).localCheckpoint()
+    )
+    _, merge_jobs = count_jobs(spark, lambda: sink.merge_overwrite(updates, ["id"]))
+    assert merge_jobs <= 3
+
+    _, read_jobs = count_jobs(spark, sink.read)
+    assert read_jobs == 0
