@@ -30,6 +30,13 @@ REF_UNIX = 1_737_169_200
 SEASONED_EPOCH = (REF_UNIX - 2 * 86400 - GENESIS_UNIX) // EPOCH_SECONDS  # = 4623000
 REF_EPOCH = (REF_UNIX - GENESIS_UNIX) // EPOCH_SECONDS  # = 4628760
 
+# The claim-event rows the streaming ingest reads; the deal sink's schema
+# is DEAL_SELECT_EXPRS applied to them.
+EVENTS_DDL = (
+    "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, "
+    "event_type STRING, value DOUBLE, props STRING"
+)
+
 # Dialect-portable (Spark SQL + DuckDB) derivation of the deal state table.
 # Column set mirrors FIXTURES.md §3 / db/migrations/002..011. Kept as
 # (expression, name) pairs so the streaming ingest can reuse the exact same

@@ -49,8 +49,8 @@ def submit_eligible(
     batch_size: int = DEFAULT_BATCH_SIZE,
 ) -> dict[str, int]:
     """One egress tick. Returns {'submitted': n, 'ingested': n, 'skipped': n,
-    'failed_batches': n}, all zero with no POST while the table does not
-    exist yet.
+    'failed_batches': n}. An empty table has no eligible rows, so a tick
+    before ingest's first commit is a zero tick with no POST.
 
     A POST that raises skips its batch: the exception is logged, the batch
     counts in `failed_batches`, and its deals keep submitted_at NULL, so
@@ -66,8 +66,6 @@ def submit_eligible(
     """
     result = {"submitted": 0, "ingested": 0, "skipped": 0, "failed_batches": 0}
     with table_lock(sink.path):
-        if not sink.exists():  # ticked before ingest's first commit: no table yet
-            return result
         deals = sink.read()
         rows = eligible_rows(deals).toArrow()
         accepted: list[pa.Table] = []

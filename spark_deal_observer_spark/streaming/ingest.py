@@ -32,13 +32,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..plans.deals import DEAL_SELECT_EXPRS
+from ..plans.deals import DEAL_SELECT_EXPRS, EVENTS_DDL
 from .sink import PartitionedDealTableSink
-
-EVENTS_DDL = (
-    "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, "
-    "event_type STRING, value DOUBLE, props STRING"
-)
 
 
 def read_event_stream(

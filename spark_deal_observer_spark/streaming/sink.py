@@ -2,7 +2,7 @@
 
 The reference's single mutable PostgreSQL table becomes one parquet
 directory partitioned by an epoch bucket
-(`epoch_bucket = activated_at_epoch DIV bucket_width`), maintained by
+(`epoch_bucket = activated_at_epoch DIV BUCKET_WIDTH`), maintained by
 two write shapes (no Delta in this environment, so MERGE is
 read-modify-write — the tradeoff SURVEY.md §7 Phase 4 documents):
 
@@ -13,8 +13,7 @@ read-modify-write — the tradeoff SURVEY.md §7 Phase 4 documents):
     delivery × keyed dedup = effectively-once, exactly the reference's
     guarantee.
   * `merge_overwrite` — the UPDATE shapes (S7/S8): given ONLY the changed
-    rows, rewrite the partitions they intersect with merge_update applied,
-    staged to a temp dir then swapped per partition.
+    rows, rewrite the partitions they intersect with merge_update applied.
 
 Both shapes first compute the batch's bucket set (micro-batches are
 epoch-contiguous, so it's a handful of values) and prune the stored-table
@@ -25,10 +24,15 @@ the collected rows, and the anti-join against the stored partitions
 broadcasts a local relation. With a Delta/Iceberg catalog the write shapes
 become native MERGE.
 
-Reads pin the schema: a sink's first read infers it from the parquet
-footers, later reads pass it to `spark.read.schema(...)` and skip that
-job. The single-writer contract fixes the table's schema; partition and
-file listing still run on every read, so new buckets and files show up.
+The table has one fixed schema, the deal schema: `DEAL_SELECT_EXPRS` over
+`EVENTS_DDL`, every field nullable, plus `epoch_bucket INT`. Every read
+passes it to `spark.read.schema(...)`, so no read infers a schema, and a
+table with no rows yet reads as zero rows. Partition and file listing
+still run on every read, so new buckets and files show up.
+
+`merge_overwrite` and `compact` share one rewrite path: the new contents
+of whole buckets are staged to one `path__stage_*` directory, each bucket
+is swapped in with `swap_dir`, then the stage is removed.
 
 Durability note: the staged-swap uses `os.rename`, which is atomic on a
 local POSIX filesystem but NOT on object storage (S3/GCS "rename" is
@@ -39,19 +43,28 @@ partition-scoped read/merge plans are unchanged by that substitution.
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import uuid
 from collections.abc import Sequence
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ..operators.merge import DEAL_KEY, dedup_insert, merge_update
+from ..plans.deals import DEAL_SELECT_EXPRS, EVENTS_DDL
 from .atomic import gc_swap_debris
 from .atomic import swap_dir as _swap_dir
 from .concurrency import table_lock
+
+PCOL = "epoch_bucket"
+BUCKET_WIDTH = 100
+# Rewrites size files by row count (columnar bytes vary with encoding;
+# rows are the stable proxy).
+ROWS_PER_FILE = 1_000_000
 
 
 class PartitionedDealTableSink:
@@ -60,133 +73,123 @@ class PartitionedDealTableSink:
     deal-observer.js:67-122, against a table indexed on the hot keys).
 
     Layout: `path/epoch_bucket=N/…parquet` with
-    `epoch_bucket = activated_at_epoch DIV bucket_width`. Assumes
+    `epoch_bucket = activated_at_epoch DIV BUCKET_WIDTH`. Assumes
     `activated_at_epoch` (like the reference's) is immutable under updates —
     a merge never moves a row across partitions, so update merges are
     closed over the updates' bucket set.
     """
 
-    PCOL = "epoch_bucket"
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        key: Sequence[str] = DEAL_KEY,
-        bucket_width: int = 100,
-    ):
+    def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        self.key = list(key)
-        self.bucket_width = bucket_width
-        self._schema: StructType | None = None  # pinned by the first read
+        deal = spark.createDataFrame([], EVENTS_DDL).selectExpr(*DEAL_SELECT_EXPRS).schema
+        self._schema = StructType(
+            [StructField(f.name, f.dataType) for f in deal] + [StructField(PCOL, IntegerType())]
+        )
         # restart hygiene: a crash can orphan staged/backup dirs from an
-        # interrupted merge_overwrite/compact (`__stage_*` written but
-        # never swapped, `__old_*` moved aside but not yet removed,
-        # `__compact_*` partition stages). They are invisible to reads
-        # (siblings of the live dir) but leak disk forever; the single-
-        # writer contract makes construction a safe point to sweep them.
+        # interrupted rewrite (`__stage_*` written but never swapped,
+        # `__old_*` moved aside but not yet removed). They leak disk
+        # forever; the single-writer contract makes construction a safe
+        # point to sweep them. The sweep runs before `path` is created: a
+        # missing `path` is what marks a `path__old_*` backup as the only copy.
         self._gc_stale_stages()
+        os.makedirs(path, exist_ok=True)
 
     def _gc_stale_stages(self) -> None:
-        import glob
-
         gc_swap_debris(self.path)
-        if os.path.isdir(self.path):
-            for d in glob.glob(os.path.join(self.path, "*__compact_*")):
-                shutil.rmtree(d, ignore_errors=True)
-            # per-partition swap debris: group backups by their live dir
-            # so repeated crashes restore the NEWEST backup, not the
-            # glob-order-first one (see atomic.gc_swap_debris)
-            targets = {
-                d[: d.rindex("__old_")]
-                for d in glob.glob(os.path.join(self.path, "*__old_*"))
-            }
-            for t in sorted(targets):
-                gc_swap_debris(t)
-
-    def exists(self) -> bool:
-        return os.path.exists(os.path.join(self.path, "_SUCCESS"))
+        # per-partition swap debris: group backups by their live dir
+        # so repeated crashes restore the NEWEST backup, not the
+        # glob-order-first one (see atomic.gc_swap_debris)
+        targets = {
+            d[: d.rindex("__old_")]
+            for d in glob.glob(os.path.join(self.path, "*__old_*"))
+        }
+        for t in sorted(targets):
+            gc_swap_debris(t)
 
     def _with_bucket(self, df: DataFrame) -> DataFrame:
         return df.withColumn(
-            self.PCOL,
-            F.expr(f"CAST(activated_at_epoch DIV {self.bucket_width} AS INT)"),
+            PCOL, F.expr(f"CAST(activated_at_epoch DIV {BUCKET_WIDTH} AS INT)")
         )
 
     def _read_raw(self) -> DataFrame:
-        if self._schema is None:
-            df = self.spark.read.parquet(self.path)
-            self._schema = df.schema
-            return df
         return self.spark.read.schema(self._schema).parquet(self.path)
 
     def read(self) -> DataFrame:
-        return self._read_raw().drop(self.PCOL)
+        return self._read_raw().drop(PCOL)
 
     def count(self) -> int:
-        return self.read().count() if self.exists() else 0
-
-    def _buckets_of(self, df: DataFrame) -> list[int]:
-        # Micro-batches are epoch-contiguous: this is a handful of ints.
-        return [r[0] for r in df.select(self.PCOL).distinct().collect()]
+        return self.read().count()
 
     def append_dedup(self, batch: DataFrame) -> None:
         """Dedup-insert that anti-joins against ONLY the batch's partitions.
 
         The stored-table side is pruned by the partition column before the
         anti-join, so a tick reads O(batch-epoch-range) rows no matter how
-        large the table has grown. The table lock makes the exists-check +
-        anti-join + append one atomic span vs concurrent loop ticks
-        (streaming/concurrency.py)."""
-        batch = self._with_bucket(batch)
-        with table_lock(self.path):
-            if not self.exists():
-                batch.dropDuplicates(self.key).write.mode("overwrite").partitionBy(
-                    self.PCOL
-                ).parquet(self.path)
-                return
-            buckets = self._buckets_of(batch)
-            stored = self._read_raw().where(F.col(self.PCOL).isin(buckets))
-            new_rows = dedup_insert(batch, stored, self.key)
-            new_rows.write.mode("append").partitionBy(self.PCOL).parquet(self.path)
+        large the table has grown. The batch is persisted, so the bucket
+        probe and the write share one scan of it: the source is read, and
+        its `observe` metrics counted, once per micro-batch. The table lock
+        makes the anti-join + append one atomic span vs concurrent loop
+        ticks (streaming/concurrency.py)."""
+        batch = self._with_bucket(batch).persist()
+        try:
+            with table_lock(self.path):
+                # Micro-batches are epoch-contiguous: this is a handful of ints.
+                buckets = [r[0] for r in batch.select(PCOL).distinct().collect()]
+                stored = self._read_raw().where(F.col(PCOL).isin(buckets))
+                # back to the deal column order (the anti-join puts the key
+                # first): a plain parquet read of the table infers the schema
+                new_rows = dedup_insert(batch, stored, DEAL_KEY).select(*batch.columns)
+                new_rows.write.mode("append").partitionBy(PCOL).parquet(self.path)
+        finally:
+            batch.unpersist()
 
-    def compact(self, target_rows_per_file: int = 1_000_000) -> dict[int, int]:
-        """Rewrite each partition whose file count exceeds its target into
-        the minimal file count — the small-files maintenance every
-        micro-batch-appended table needs (each `append_dedup` tick adds
-        part-files; thousands of ticks make scans metadata-bound).
+    def _rewrite(self, rows: DataFrame, buckets: Sequence[int]) -> None:
+        """Replace each bucket in `buckets` with its rows in `rows`, which
+        must hold at least one row of every such bucket: stage them all to
+        one directory, swap each bucket in, remove the stage. A crash
+        leaves every bucket either old or new, never mixed."""
+        stage = f"{self.path}__stage_{uuid.uuid4().hex[:8]}"
+        try:
+            writer = rows.write.mode("overwrite").option("maxRecordsPerFile", ROWS_PER_FILE)
+            writer.partitionBy(PCOL).parquet(stage)
+            for b in buckets:
+                part = f"{PCOL}={b}"
+                _swap_dir(os.path.join(stage, part), os.path.join(self.path, part))
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
 
-        Runs partition-by-partition with the same staged-swap as
-        merge_overwrite, so a crash mid-compaction leaves every partition
-        either old or new, never mixed. Holds the table lock throughout:
-        a write landing between a partition's read and its swap would be
-        overwritten by the stale stage. Files are sized by row count
-        (columnar bytes vary with encoding; rows are the stable proxy).
-        Returns {bucket: files_after} for the partitions it rewrote.
+    def compact(self) -> dict[int, int]:
+        """Rewrite each partition with more files than
+        ceil(rows / ROWS_PER_FILE) into that many files — the small-files
+        maintenance every micro-batch-appended table needs (each
+        `append_dedup` tick adds part-files; thousands of ticks make scans
+        metadata-bound). The file listing and the parquet footers pick the
+        partitions, so a table with nothing to compact runs no Spark job;
+        the chosen partitions are read once and go through the same rewrite
+        as merge_overwrite. Holds the table lock throughout: a write landing
+        between the read and the swap would be overwritten by the stale
+        stage. Returns {bucket: files_after} for the partitions it rewrote.
 
         At deployment scale this is the OPTIMIZE/rewrite-data-files job of
         a table format, scheduled off-peak; expressing it over plain
         parquet keeps the sink self-contained.
         """
-        result: dict[int, int] = {}
+        want: dict[int, int] = {}
         with table_lock(self.path):
             for part in sorted(os.listdir(self.path)):
-                if not part.startswith(f"{self.PCOL}="):
+                if not part.startswith(f"{PCOL}="):
                     continue
-                bucket = int(part.split("=", 1)[1])
                 live = os.path.join(self.path, part)
-                n_files = sum(f.endswith(".parquet") for f in os.listdir(live))
-                rows = self.spark.read.parquet(live)
-                n_rows = rows.count()
-                want = max(1, -(-n_rows // target_rows_per_file))  # ceil div
-                if n_files <= want:
-                    continue
-                tmp = f"{live}__compact_{uuid.uuid4().hex[:8]}"
-                rows.coalesce(want).write.mode("overwrite").parquet(tmp)
-                _swap_dir(tmp, live)
-                result[bucket] = want
-        return result
+                files = [os.path.join(live, f) for f in os.listdir(live) if f.endswith(".parquet")]
+                n_rows = sum(pq.read_metadata(f).num_rows for f in files)
+                n_files = max(1, -(-n_rows // ROWS_PER_FILE))  # ceil div
+                if len(files) > n_files:
+                    want[int(part.split("=", 1)[1])] = n_files
+            if want:
+                rows = self._read_raw().where(F.col(PCOL).isin(list(want))).repartition(PCOL)
+                self._rewrite(rows, sorted(want))
+        return want
 
     def merge_overwrite(self, updates: DataFrame, on: Sequence[str]) -> None:
         """Partition-scoped MERGE: `updates` holds only the changed rows
@@ -194,8 +197,8 @@ class PartitionedDealTableSink:
         to the driver as Arrow once — their plan runs once, the bucket set
         comes from the collected column, and the rebuilt local relation
         makes the merge's anti-join a broadcast. Only the partitions they
-        intersect are read, merged, staged and swapped; merge_update keeps
-        every update row, so each of those buckets has a staged directory.
+        intersect are read, merged and rewritten; merge_update keeps every
+        update row, so each of those buckets has rows to stage.
 
         The driver holds every update row: callers pass bounded sets (at
         most `max_deals` rows per enrichment tick, at most the accepted
@@ -205,16 +208,7 @@ class PartitionedDealTableSink:
             rows = bucketed.toArrow()
             if rows.num_rows == 0:
                 return
-            buckets = sorted(set(rows.column(self.PCOL).to_pylist()))
+            buckets = sorted(set(rows.column(PCOL).to_pylist()))
             updates = self.spark.createDataFrame(rows, bucketed.schema)
-            base = self._read_raw().where(F.col(self.PCOL).isin(buckets))
-            tmp = f"{self.path}__stage_{uuid.uuid4().hex[:8]}"
-            merge_update(base, updates, list(on)).write.mode(
-                "overwrite"
-            ).partitionBy(self.PCOL).parquet(tmp)
-            try:
-                for b in buckets:
-                    part = f"{self.PCOL}={b}"
-                    _swap_dir(os.path.join(tmp, part), os.path.join(self.path, part))
-            finally:
-                shutil.rmtree(tmp, ignore_errors=True)
+            base = self._read_raw().where(F.col(PCOL).isin(buckets))
+            self._rewrite(merge_update(base, updates, list(on)), buckets)

@@ -174,8 +174,6 @@ def test_three_loops_concurrent_soak(spark, tmp_path):
     def enrich_tick(_batch, _id):
         try:
             with table_lock(table):
-                if not sink.exists():
-                    return
                 deals = sink.read()
                 peers = (
                     deals.where(F.col("miner_id") % 2 == 0)

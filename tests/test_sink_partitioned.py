@@ -12,12 +12,12 @@ import threading
 from conftest import SF_SMALL, count_jobs
 from pyspark.sql import functions as F
 
-from spark_deal_observer_spark.operators.merge import merge_update
+from spark_deal_observer_spark.operators.merge import DEAL_KEY, merge_update
 from spark_deal_observer_spark.operators.state import resolve_tick
 from spark_deal_observer_spark.plans.deals import REF_TS, deals_df, eligible_deals
 from spark_deal_observer_spark.streaming.concurrency import table_lock
 from spark_deal_observer_spark.streaming.egress import submit_eligible
-from spark_deal_observer_spark.streaming.sink import PartitionedDealTableSink
+from spark_deal_observer_spark.streaming.sink import BUCKET_WIDTH, PartitionedDealTableSink
 
 MID_EPOCH = 4622500  # sf0.001 derived epochs span [4622000, 4623000)
 
@@ -50,7 +50,7 @@ def test_append_touches_only_batch_partitions(spark, tmp_path):
     for part in lo_parts:  # old partitions byte-identical (same file set)
         assert after[part] == before[part], part
 
-    assert sink.count() == deals.select(*sink.key).dropDuplicates().count()
+    assert sink.count() == deals.select(*DEAL_KEY).dropDuplicates().count()
     assert "epoch_bucket" not in sink.read().columns
 
 
@@ -78,7 +78,7 @@ def test_merge_rewrites_only_intersected_partitions(spark, tmp_path):
 
     after = _files(sink.path)
     assert set(after) == set(before)
-    touched = {p for p in before if int(p.split("=")[1]) < 4622200 // sink.bucket_width}
+    touched = {p for p in before if int(p.split("=")[1]) < 4622200 // BUCKET_WIDTH}
     assert touched, "expected intersected partitions"
     for part in before:
         if part in touched:
@@ -122,8 +122,10 @@ def test_compact_collapses_small_files_and_preserves_data(spark, tmp_path):
     before_files = _files(sink.path)
     assert any(len(v) > 1 for v in before_files.values()), "need multi-file partitions"
 
-    rewritten = sink.compact()
+    # the footers pick the partitions; they are read once and rewritten once
+    rewritten, jobs = count_jobs(spark, sink.compact)
     assert rewritten, "expected at least one partition rewritten"
+    assert jobs <= 3
 
     after_files = _files(sink.path)
     assert set(after_files) == set(before_files)  # no partition lost
@@ -131,8 +133,9 @@ def test_compact_collapses_small_files_and_preserves_data(spark, tmp_path):
         assert len(names) == 1, part  # row counts far below the target => 1 file
     assert sink.read().orderBy("id").collect() == before_rows
 
-    # idempotent: a second compact is a no-op and rewrites nothing
-    assert sink.compact() == {}
+    # idempotent: a second compact is a no-op, rewrites nothing and runs
+    # no Spark job
+    assert count_jobs(spark, sink.compact) == ({}, 0)
     assert _files(sink.path) == after_files
 
 
@@ -170,7 +173,7 @@ def test_merge_overwrite_equals_merge_update_over_whole_table(spark, tmp_path):
     now = F.lit(REF_TS).cast("timestamp_ntz")
     updates = resolve_tick(before, peers, pays, now, max_deals=300).localCheckpoint()
     n_buckets = updates.select(
-        (F.col("activated_at_epoch") / sink.bucket_width).cast("int")
+        (F.col("activated_at_epoch") / BUCKET_WIDTH).cast("int")
     ).distinct().count()
     assert n_buckets >= 2
     assert 0 < updates.count() < before.count()
@@ -219,17 +222,18 @@ def test_compact_waits_for_the_table_lock(spark, tmp_path):
         assert worker.is_alive(), "compact() finished while another thread held the lock"
     worker.join(timeout=120)
     assert not worker.is_alive()
-    assert out["done"] == {4622000 // sink.bucket_width: 1}
+    assert out["done"] == {4622000 // BUCKET_WIDTH: 1}
     assert sink.read().orderBy("id").collect() == rows
 
 
 def test_pinned_schema_reads_see_new_buckets(spark, tmp_path):
-    """After the first read pins the schema, appends into new buckets and a
-    merge over them stay visible, and reads keep hiding epoch_bucket."""
+    """Reads pass the fixed deal schema, yet appends into new buckets after
+    a read and a merge over them stay visible, and reads keep hiding
+    epoch_bucket."""
     deals = deals_df(spark, SF_SMALL)
     sink = PartitionedDealTableSink(spark, str(tmp_path / "table"))
     sink.append_dedup(deals.where(F.col("activated_at_epoch") < MID_EPOCH))
-    sink.read().count()  # pins the schema
+    sink.read().count()
     sink.append_dedup(deals.where(F.col("activated_at_epoch") >= MID_EPOCH))
     before = sink.read().localCheckpoint()
 
@@ -242,7 +246,7 @@ def test_pinned_schema_reads_see_new_buckets(spark, tmp_path):
 
     got, want = sink.read(), merge_update(before, updates, ["id"])
     assert "epoch_bucket" not in got.columns
-    assert got.count() == deals.select(*sink.key).dropDuplicates().count()
+    assert got.count() == deals.select(*DEAL_KEY).dropDuplicates().count()
     assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
 
 
@@ -300,12 +304,19 @@ def test_egress_mark_equals_semi_join_mark(spark, tmp_path):
 
 
 def test_egress_merge_and_read_job_budget(spark, tmp_path):
-    """Jobs per call on the tick paths: an egress tick (first read infers
-    the schema, one eligible collect, the mark's merge) runs at most 5, a
-    merge at most 3 (one updates collect, the staged write) and a read of a
-    sink whose schema is pinned none."""
-    sink = PartitionedDealTableSink(spark, str(tmp_path / "table"))
+    """Jobs per call on the tick paths: an egress tick (one eligible
+    collect, the mark's merge) runs at most 5, a merge at most 3 (one
+    updates collect, the staged write) and a read none — the first read of
+    a fresh sink included, since the schema is fixed, not inferred. A sink
+    on a path that does not exist yet reads as an empty table."""
+    path = str(tmp_path / "table")
+    sink = PartitionedDealTableSink(spark, path)
+    assert sink.count() == 0
     sink.append_dedup(deals_df(spark, SF_SMALL))
+    fresh, ctor_jobs = count_jobs(spark, lambda: PartitionedDealTableSink(spark, path))
+    first, read_jobs = count_jobs(spark, fresh.read)
+    assert ctor_jobs == read_jobs == 0
+    assert first.schema == spark.read.parquet(path).drop("epoch_bucket").schema
     now = F.lit(REF_TS).cast("timestamp_ntz")
 
     res, egress_jobs = count_jobs(

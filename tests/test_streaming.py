@@ -230,13 +230,17 @@ def test_windowed_counts_finalize_and_drop_late(spark, tmp_path):
 
 def test_telemetry_listener_records_observed_metrics(spark, dirs):
     """S11: the observe() hook + StreamingQueryListener pair records per-batch
-    ingest counters without a second pass over the data."""
+    ingest counters without a second pass over the data. The source is two
+    files read one per batch, so the second batch lands on a table that
+    already holds rows: each batch's rows still count once, in the observed
+    row count and in numInputRows alike."""
     import time
 
     from spark_deal_observer_spark.streaming.telemetry import MetricsRecorder
 
     events = load_table(spark, SF_SMALL, "events")
-    events.write.mode("overwrite").parquet(dirs["source"])
+    events.repartition(2).write.mode("overwrite").parquet(dirs["source"])
+    assert len([f for f in os.listdir(dirs["source"]) if f.endswith(".parquet")]) == 2
     n_events = events.count()
 
     emitted = []
@@ -256,6 +260,8 @@ def test_telemetry_listener_records_observed_metrics(spark, dirs):
             time.sleep(0.5)
         assert rec.observed_total("ingest", "ingest", "rows") == n_events
         batches = [p for p in rec.points if p["query"] == "ingest" and p["observed"]]
+        assert len(batches) == 2
+        assert sum(p["num_input_rows"] for p in batches) == n_events
         assert all(p["duration_ms"] is not None for p in batches)
         assert emitted  # the fire-and-forget emit seam saw the same points
     finally:
