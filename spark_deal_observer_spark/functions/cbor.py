@@ -1,4 +1,4 @@
-"""Minimal dag-CBOR codec + the one mandatory Python UDF of the engine.
+"""Minimal dag-CBOR codec for the reference's raw actor events.
 
 The reference ingests chain events whose entry values are base64pad-wrapped
 dag-CBOR (backend/lib/rpc-service/utils.js:9-53): integers and CIDs (CBOR
@@ -8,10 +8,9 @@ subset — exactly the types the claim-event schema uses (unsigned/negative
 ints, byte strings, text strings, arrays, maps, tags, null/bool) — plus an
 encoder for building test fixtures.
 
-The decode runs as an Arrow-batched pandas UDF (`decode_cbor_entries`) —
-the single place the ingest pipeline leaves the JVM, as SURVEY.md §2.8
-prescribes. Everything downstream (entries pivot, reshape, dedup) is
-codegen'd column expressions.
+Plain Python, no Spark: `sources/events.py` runs the decode inside one
+Arrow-batched mapInPandas pass per decoder — one Python boundary per
+batch, as SURVEY.md §2.8 prescribes.
 """
 
 from __future__ import annotations
@@ -19,12 +18,7 @@ from __future__ import annotations
 import base64
 from typing import Any
 
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
-
 CID_TAG = 42
-_BASE32 = "abcdefghijklmnopqrstuvwxyz234567"
 
 
 class CID:
@@ -191,25 +185,3 @@ def b64pad_decode(s: str) -> bytes:
 
 def b64pad_encode(data: bytes) -> str:
     return base64.b64encode(data).decode("ascii")
-
-
-# -- the pandas UDF ---------------------------------------------------------
-
-
-# NB: returnType must be a DataType instance, not a DDL string — the string
-# form would require an active SparkContext at import time.
-@pandas_udf(StringType())
-def decode_cbor_value(col: pd.Series) -> pd.Series:
-    """base64pad(dag-CBOR) → canonical string (ints as decimal, CIDs as
-    base32 'b…'). Arrow-batched; errors yield None (PERMISSIVE-style)."""
-
-    def one(s: str | None) -> str | None:
-        if s is None:
-            return None
-        try:
-            v = cbor_decode(b64pad_decode(s))
-            return str(v)
-        except Exception:
-            return None
-
-    return col.map(one)

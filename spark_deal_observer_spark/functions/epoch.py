@@ -46,15 +46,6 @@ def timestamp_to_epoch(ts: Column | str) -> Column:
     return F.floor((secs - F.lit(GENESIS_UNIX)) / F.lit(EPOCH_SECONDS)).cast("long")
 
 
-def py_timestamp_to_epoch(unix_seconds: float) -> int:
-    """Driver-side twin for constants (mirrors backend/lib/epoch.js:9-21)."""
-    return int((unix_seconds - GENESIS_UNIX) // EPOCH_SECONDS)
-
-
-def py_epoch_to_unix(epoch: int) -> int:
-    return epoch * EPOCH_SECONDS + GENESIS_UNIX
-
-
 _TRUNC_SECONDS = {"hour": 3600, "day": 86400}
 
 

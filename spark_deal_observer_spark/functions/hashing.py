@@ -18,8 +18,6 @@ from __future__ import annotations
 
 import random
 
-HEX = "0123456789abcdef"
-
 # Fixed MinHash permutation parameters (seeded, stable across runs).
 _MINHASH_PRIME = 2_147_483_647  # 2^31 - 1
 _rng = random.Random(42)

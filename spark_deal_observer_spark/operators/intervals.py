@@ -562,7 +562,6 @@ def event_seasonal_decompose_oracle() -> str:
 
 # -- CUSUM changepoint detection --------------------------------------------
 
-CUSUM_K_HALF_SIGMA = True  # slack k = σ/2 (the standard tabular choice)
 CUSUM_H_SIGMA = 4  # alarm threshold h = 4σ
 
 

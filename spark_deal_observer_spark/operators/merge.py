@@ -12,9 +12,10 @@ Spark has no in-place UPDATE on plain parquet, so each shape becomes a pure
 dataframe-to-dataframe transform that a `foreachBatch` sink applies by
 rewriting (or MERGE-ing, when a Delta-style catalog is available). All three
 are shuffle-frugal:
-  * dedup-insert anti-joins on the natural key — with the state table
-    bucketed/partitioned by key hash this is a co-located join; the incoming
-    micro-batch is small, so Catalyst broadcast-hashes it.
+  * dedup-insert anti-joins on the natural key — the deal sink partitions
+    the state table by epoch bucket and prunes the stored side to the
+    batch's buckets before the join; the incoming micro-batch is small, so
+    Catalyst broadcast-hashes it.
   * merge-update unions the untouched rows with the updated rows — the
     updates side is the small one and is broadcast.
   * mark-submitted broadcasts the id list (the reference's unnest array).

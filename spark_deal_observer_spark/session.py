@@ -14,9 +14,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-GENESIS_UNIX = 1_598_306_400  # Filecoin genesis (reference db/migrations/005:4-7)
-EPOCH_SECONDS = 30
-
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))

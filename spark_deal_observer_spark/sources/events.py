@@ -10,14 +10,20 @@ Here:
     (FIXTURES.md §1) from the synthetic `events` table — deterministic, so
     the decoded output is oracle-checkable against a plain relational
     derivation (roundtrip identity).
-  * `decode_raw_events` is the decode: ONE Arrow-batched mapInPandas pass
-    (the single Python boundary, mirroring §2.8 — CBOR has no JVM builtin),
-    yielding typed BlockEvent/ClaimEvent columns.
+  * `_decode_claim` is the one decode of a raw row: base64pad + dag-CBOR
+    per entry, the Key/Value list pivoted into one record, the event type
+    checked, the claim fields typed from `_CLAIM_FIELDS`.
+  * `decode_raw_events` and `decode_raw_events_routed` run it as ONE
+    Arrow-batched mapInPandas pass each (the single Python boundary,
+    mirroring §2.8 — CBOR has no JVM builtin). The first drops non-claim
+    events and fails the pass on an undecodable one; the second emits every
+    raw row once, with a dead-letter reason for the rows it cannot use.
   * `claims_to_deals` is the F8 reshape (backend/lib/utils.js:11-27) as pure
     column expressions.
 
-Unknown event types are counted and dropped (strict mode raises), mirroring
-service.js:80-82's reject-unknown behavior.
+The reference rejects unknown event types (service.js:80-82); here they are
+dropped or dead-lettered, and the catalog's `event_type_filter` is the
+relational form of that check.
 """
 
 from __future__ import annotations
@@ -63,35 +69,35 @@ RAW_EVENT_SCHEMA = StructType(
     ]
 )
 
+# (claim column, CBOR entry key, Python type): the one definition of a
+# claim's fields (ClaimEvent, backend/lib/rpc-service/data-types.js:3-13).
+_CLAIM_FIELDS = (
+    ("claim_id", "id", int),
+    ("client", "client", int),
+    ("provider", "provider", int),
+    ("piece_cid", "piece-cid", str),
+    ("piece_size", "piece-size", int),
+    ("term_min", "term-min", int),
+    ("term_max", "term-max", int),
+    ("term_start", "term-start", int),
+    ("sector", "sector", int),
+)
+_CLAIM_KEYS = tuple(key for _, key, _ in _CLAIM_FIELDS)
+
 CLAIM_SCHEMA = StructType(
     [
         StructField("height", IntegerType()),
         StructField("emitter", StringType()),
         StructField("reverted", BooleanType()),
         StructField("event_type", StringType()),
-        StructField("claim_id", LongType()),
-        StructField("client", LongType()),
-        StructField("provider", LongType()),
-        StructField("piece_cid", StringType()),
-        StructField("piece_size", LongType()),
-        StructField("term_min", LongType()),
-        StructField("term_max", LongType()),
-        StructField("term_start", LongType()),
-        StructField("sector", LongType()),
+    ]
+    + [
+        StructField(col, LongType() if typ is int else StringType())
+        for col, _, typ in _CLAIM_FIELDS
     ]
 )
-
-_CLAIM_KEYS = (
-    "id",
-    "client",
-    "provider",
-    "piece-cid",
-    "piece-size",
-    "term-min",
-    "term-max",
-    "term-start",
-    "sector",
-)
+# the claim columns of a routed row that carries no claim
+_NO_CLAIM = dict.fromkeys(["event_type", *(col for col, _, _ in _CLAIM_FIELDS)])
 
 
 def _cid_for(n: int) -> CID:
@@ -151,48 +157,46 @@ def synth_raw_events(events: DataFrame) -> DataFrame:
     return spread_cpu(events).mapInPandas(encode, RAW_EVENT_SCHEMA)
 
 
-def decode_raw_events(raw: DataFrame, strict: bool = False) -> DataFrame:
-    """RawActorEvent rows → typed claim rows (the F3/F4/F7/F15 chain).
+def _decode_claim(entries) -> tuple[object, dict[str, object] | None]:
+    """One raw row's entries → (its `$type`, its claim fields), the fields
+    None when the type is not 'claim' (service.js:66-83). Decodes every
+    entry (base64pad + dag-CBOR) and pivots the Key/Value list into one
+    record. Raises ValueError on a codec other than dag-CBOR; base64 and
+    CBOR errors, and a missing claim key, propagate."""
+    record: dict[str, object] = {}
+    for e in entries:
+        if e["Codec"] != DAG_CBOR_CODEC:
+            raise ValueError(f"unsupported entry codec {e['Codec']}")
+        record[e["Key"]] = cbor_decode(b64pad_decode(e["Value"]))
+    etype = record.get("$type")
+    if etype != "claim":
+        return etype, None
+    claim: dict[str, object] = {"event_type": "claim"}
+    for col, key, typ in _CLAIM_FIELDS:
+        claim[col] = typ(record[key])
+    return etype, claim
 
-    Decodes every entry (base64pad + dag-CBOR), pivots the Key/Value list
-    into one record, validates the event type. Non-'claim' events are
-    dropped (or raise when strict), mirroring service.js:66-83."""
+
+def _envelope(r) -> dict[str, object]:
+    """The raw row's block context, which every output row carries."""
+    return {"height": int(r.height), "emitter": r.emitter, "reverted": bool(r.reverted)}
+
+
+def decode_raw_events(raw: DataFrame) -> DataFrame:
+    """RawActorEvent rows → typed claim rows (the F3/F4/F7/F15 chain).
+    Non-'claim' events are dropped; an undecodable row fails the pass."""
 
     def decode(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
 
+        cols = [f.name for f in CLAIM_SCHEMA.fields]
         for pdf in it:
             rows = []
             for r in pdf.itertuples():
-                record: dict[str, object] = {}
-                for e in r.entries:
-                    codec, _flags, key, value = e["Codec"], e["Flags"], e["Key"], e["Value"]
-                    if codec != DAG_CBOR_CODEC:
-                        raise ValueError(f"unsupported entry codec {codec}")
-                    record[key] = cbor_decode(b64pad_decode(value))
-                etype = record.get("$type")
-                if etype != "claim":
-                    if strict:
-                        raise ValueError(f"unknown event type {etype!r}")
-                    continue
-                rows.append(
-                    {
-                        "height": int(r.height),
-                        "emitter": r.emitter,
-                        "reverted": bool(r.reverted),
-                        "event_type": str(etype),
-                        "claim_id": int(record["id"]),
-                        "client": int(record["client"]),
-                        "provider": int(record["provider"]),
-                        "piece_cid": str(record["piece-cid"]),
-                        "piece_size": int(record["piece-size"]),
-                        "term_min": int(record["term-min"]),
-                        "term_max": int(record["term-max"]),
-                        "term_start": int(record["term-start"]),
-                        "sector": int(record["sector"]),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in CLAIM_SCHEMA.fields])
+                _, claim = _decode_claim(r.entries)
+                if claim is not None:
+                    rows.append({**_envelope(r), **claim})
+            yield pd.DataFrame(rows, columns=cols)
 
     return raw.mapInPandas(decode, CLAIM_SCHEMA)
 
@@ -226,78 +230,35 @@ def decode_raw_events_routed(raw: DataFrame) -> DataFrame:
     """Decode with a DEAD-LETTER route instead of drop-or-crash: every input
     row lands in the output exactly once — decoded claims with
     `dlq_reason IS NULL`, undecodable/unknown rows with their reason and
-    `msg_cid` (the reprocessing handle) and NULL claim fields.
+    `msg_cid` (the reprocessing handle), their envelope (height, emitter,
+    reverted) for triage, and NULL claim fields.
 
-    The third point on the strictness spectrum (`decode_raw_events`: lax
-    drops silently with a counter, strict raises): production ingest wants
-    neither data loss nor a poison-pill crash loop — quarantine the bad
-    rows, keep the stream moving, replay the DLQ after a codec fix. The
-    reference hard-fails on unknown types (service.js:80-82) because its
-    loop retries the same epoch forever; a micro-batch engine must instead
-    bound the blast radius of one bad event. Same Arrow-batched single
-    pass as the lax decoder; downstream splits with two narrow filters on
+    `decode_raw_events` drops unknown types and fails on an undecodable
+    row; production ingest wants neither data loss nor a poison-pill crash
+    loop — quarantine the bad rows, keep the stream moving, replay the DLQ
+    after a codec fix. The reference hard-fails on unknown types
+    (service.js:80-82) because its loop retries the same epoch forever; a
+    micro-batch engine must instead bound the blast radius of one bad
+    event. Same row decode and the same Arrow-batched single pass as
+    `decode_raw_events`; downstream splits with two narrow filters on
     `dlq_reason`."""
 
     def decode(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
 
         cols = [f.name for f in ROUTED_SCHEMA.fields]
-        empty_claim = {f.name: None for f in CLAIM_SCHEMA.fields}
-
         for pdf in it:
             rows = []
             for r in pdf.itertuples():
                 try:
-                    record: dict[str, object] = {}
-                    for e in r.entries:
-                        codec, _flags, key, value = (
-                            e["Codec"], e["Flags"], e["Key"], e["Value"],
-                        )
-                        if codec != DAG_CBOR_CODEC:
-                            raise ValueError(f"unsupported entry codec {codec}")
-                        record[key] = cbor_decode(b64pad_decode(value))
-                    etype = record.get("$type")
-                    if etype != "claim":
-                        # keep the raw row's envelope fields (they decoded
-                        # fine) so quarantined events can be triaged without
-                        # re-reading the raw stream
-                        rows.append(
-                            {**empty_claim,
-                             "height": int(r.height),
-                             "emitter": r.emitter,
-                             "reverted": bool(r.reverted),
-                             "dlq_reason": f"unknown event type {etype!r}",
-                             "msg_cid": r.msg_cid}
-                        )
-                        continue
-                    rows.append(
-                        {
-                            "height": int(r.height),
-                            "emitter": r.emitter,
-                            "reverted": bool(r.reverted),
-                            "event_type": str(etype),
-                            "claim_id": int(record["id"]),
-                            "client": int(record["client"]),
-                            "provider": int(record["provider"]),
-                            "piece_cid": str(record["piece-cid"]),
-                            "piece_size": int(record["piece-size"]),
-                            "term_min": int(record["term-min"]),
-                            "term_max": int(record["term-max"]),
-                            "term_start": int(record["term-start"]),
-                            "sector": int(record["sector"]),
-                            "dlq_reason": None,
-                            "msg_cid": r.msg_cid,
-                        }
-                    )
+                    etype, claim = _decode_claim(r.entries)
+                    reason = None if claim is not None else f"unknown event type {etype!r}"
                 except Exception as exc:  # noqa: BLE001 — quarantine, never crash
-                    rows.append(
-                        {**empty_claim,
-                         "height": int(r.height),
-                         "emitter": r.emitter,
-                         "reverted": bool(r.reverted),
-                         "dlq_reason": f"{type(exc).__name__}: {exc}",
-                         "msg_cid": r.msg_cid}
-                    )
+                    claim, reason = None, f"{type(exc).__name__}: {exc}"
+                rows.append(
+                    {**_envelope(r), **(claim or _NO_CLAIM),
+                     "dlq_reason": reason, "msg_cid": r.msg_cid}
+                )
             yield pd.DataFrame(rows, columns=cols)
 
     return raw.mapInPandas(decode, ROUTED_SCHEMA)

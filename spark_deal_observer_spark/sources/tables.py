@@ -28,8 +28,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # DataFrame plans are immutable and the corpus parquet is static, so the
 # reader output is memoized per (session, sf_dir, table). Without this every
 # query's deals_df() re-ran spark.read.parquet — file listing + footer

@@ -8,10 +8,11 @@ failure tolerance (T7).
 Spark-first: the eligibility query is the declarative plan, collected to
 the driver as Arrow in one job; batches are slices of that table; the POST
 is an injected callable so tests (and air-gapped runs) stub it; the mark
-rebuilds the accepted rows with `submitted_at = now` and hands them to the
-sink's merge. Driver memory is O(eligible rows) — the rows the tick offers
-the API, which it already held in full to mark them. One process talks to
-the API, so ordering and counters match the reference exactly.
+sets `submitted_at = now` on the accepted Arrow rows and hands that table
+to the sink's merge, which takes it as is, with no second collect. Driver
+memory is O(eligible rows) — the rows the tick offers the API, which it
+already held in full to mark them. One process talks to the API, so
+ordering and counters match the reference exactly.
 
 Per-call retry (reference S3, pRetry×5 in rpc-service/service.js:19-44)
 composes by wrapping the poster: `submit_eligible(sink,
@@ -95,7 +96,11 @@ def submit_eligible(
 
         if accepted:
             flag = now if now is not None else F.current_timestamp().cast("timestamp_ntz")
+            # over a one-row local relation the optimizer folds `flag` to a
+            # value: evaluating it runs no Spark job
+            stamp = sink.spark.createDataFrame(pa.table({"x": [0]})).select(flag).first()[0]
             marked = pa.concat_tables(accepted).select(deals.columns)
-            updates = sink.spark.createDataFrame(marked, deals.schema)
-            sink.merge_overwrite(updates.withColumn("submitted_at", flag), ["id"])
+            i = marked.schema.get_field_index("submitted_at")
+            stamps = pa.array([stamp] * marked.num_rows, marked.schema.field(i).type)
+            sink.merge_overwrite(marked.set_column(i, "submitted_at", stamps), ["id"])
         return result

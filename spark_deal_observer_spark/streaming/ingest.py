@@ -28,23 +28,12 @@ backpressure bound (T8, the reference's 1999-epoch replay cap analog).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..plans.deals import DEAL_SELECT_EXPRS, EVENTS_DDL
 from .sink import PartitionedDealTableSink
-
-
-def read_event_stream(
-    spark: SparkSession,
-    source_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    reader = spark.readStream.schema(EVENTS_DDL)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(source_dir)
 
 
 def start_ingest(
@@ -62,10 +51,12 @@ def start_ingest(
     partitions the batch intersects — O(batch) per tick regardless of
     table size."""
     sink = PartitionedDealTableSink(spark, table_dir)
-    events = read_event_stream(spark, source_dir, max_files_per_trigger)
+    reader = spark.readStream.schema(EVENTS_DDL)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     # observe() = the telemetry hook (reference S11): per-batch row counts
     # surface in StreamingQueryProgress without a second pass.
-    stream = events.selectExpr(*DEAL_SELECT_EXPRS).observe(
+    stream = reader.parquet(source_dir).selectExpr(*DEAL_SELECT_EXPRS).observe(
         "ingest", F.count(F.lit(1)).alias("rows")
     )
 

@@ -18,11 +18,12 @@ read-modify-write — the tradeoff SURVEY.md §7 Phase 4 documents):
 Both shapes first compute the batch's bucket set (micro-batches are
 epoch-contiguous, so it's a handful of values) and prune the stored-table
 read to those partitions — O(batch), not O(table), per tick. A merge
-collects its updates to the driver once per write, so the plan that
-produced them (a work-queue top-k) runs once, the bucket set comes from
-the collected rows, and the anti-join against the stored partitions
-broadcasts a local relation. With a Delta/Iceberg catalog the write shapes
-become native MERGE.
+holds its updates on the driver as Arrow: it collects a DataFrame once per
+write, so the plan that produced them (a work-queue top-k) runs once, or
+takes the Arrow rows a caller already holds (egress's mark) with no
+collect. The bucket set comes from those rows, and the anti-join against
+the stored partitions broadcasts a local relation. With a Delta/Iceberg
+catalog the write shapes become native MERGE.
 
 The table has one fixed schema, the deal schema: `DEAL_SELECT_EXPRS` over
 `EVENTS_DDL`, every field nullable, plus `epoch_bucket INT`. Every read
@@ -49,6 +50,8 @@ import shutil
 import uuid
 from collections.abc import Sequence
 
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -83,9 +86,8 @@ class PartitionedDealTableSink:
         self.spark = spark
         self.path = path
         deal = spark.createDataFrame([], EVENTS_DDL).selectExpr(*DEAL_SELECT_EXPRS).schema
-        self._schema = StructType(
-            [StructField(f.name, f.dataType) for f in deal] + [StructField(PCOL, IntegerType())]
-        )
+        self._deal_schema = StructType([StructField(f.name, f.dataType) for f in deal])
+        self._schema = StructType(self._deal_schema.fields + [StructField(PCOL, IntegerType())])
         # restart hygiene: a crash can orphan staged/backup dirs from an
         # interrupted rewrite (`__stage_*` written but never swapped,
         # `__old_*` moved aside but not yet removed). They leak disk
@@ -107,10 +109,19 @@ class PartitionedDealTableSink:
         for t in sorted(targets):
             gc_swap_debris(t)
 
+    # The bucket of a row, `activated_at_epoch DIV BUCKET_WIDTH`, in its two
+    # forms: a Spark column for writes, and the sorted bucket set of
+    # driver-held Arrow rows for pruning and swaps (pyarrow's integer divide
+    # truncates toward zero, like Spark's DIV).
     def _with_bucket(self, df: DataFrame) -> DataFrame:
         return df.withColumn(
             PCOL, F.expr(f"CAST(activated_at_epoch DIV {BUCKET_WIDTH} AS INT)")
         )
+
+    @staticmethod
+    def _buckets_of(rows: pa.Table) -> list[int]:
+        epochs = rows.column("activated_at_epoch")
+        return sorted(pc.unique(pc.divide(epochs, BUCKET_WIDTH)).to_pylist())
 
     def _read_raw(self) -> DataFrame:
         return self.spark.read.schema(self._schema).parquet(self.path)
@@ -128,14 +139,16 @@ class PartitionedDealTableSink:
         anti-join, so a tick reads O(batch-epoch-range) rows no matter how
         large the table has grown. The batch is persisted, so the bucket
         probe and the write share one scan of it: the source is read, and
-        its `observe` metrics counted, once per micro-batch. The table lock
-        makes the anti-join + append one atomic span vs concurrent loop
-        ticks (streaming/concurrency.py)."""
+        its `observe` metrics counted, once per micro-batch. The probe
+        collects the one epoch column as Arrow and takes its bucket set on
+        the driver, so it runs no shuffle. The table lock makes the
+        anti-join + append one atomic span vs concurrent loop ticks
+        (streaming/concurrency.py)."""
         batch = self._with_bucket(batch).persist()
         try:
             with table_lock(self.path):
                 # Micro-batches are epoch-contiguous: this is a handful of ints.
-                buckets = [r[0] for r in batch.select(PCOL).distinct().collect()]
+                buckets = self._buckets_of(batch.select("activated_at_epoch").toArrow())
                 stored = self._read_raw().where(F.col(PCOL).isin(buckets))
                 # back to the deal column order (the anti-join puts the key
                 # first): a plain parquet read of the table infers the schema
@@ -191,24 +204,29 @@ class PartitionedDealTableSink:
                 self._rewrite(rows, sorted(want))
         return want
 
-    def merge_overwrite(self, updates: DataFrame, on: Sequence[str]) -> None:
+    def merge_overwrite(self, updates: DataFrame | pa.Table, on: Sequence[str]) -> None:
         """Partition-scoped MERGE: `updates` holds only the changed rows
-        (e.g. `resolve_tick`'s output). Inside the lock they are collected
-        to the driver as Arrow once — their plan runs once, the bucket set
-        comes from the collected column, and the rebuilt local relation
-        makes the merge's anti-join a broadcast. Only the partitions they
-        intersect are read, merged and rewritten; merge_update keeps every
-        update row, so each of those buckets has rows to stage.
+        (e.g. `resolve_tick`'s output), as a DataFrame or as a `pyarrow.Table`
+        of deal rows the caller already holds (egress's mark). A DataFrame is
+        collected to the driver as Arrow once, inside the lock — its plan
+        runs once; an Arrow table is used as it is, with no collect. The
+        bucket set comes from the driver-held rows, and the rebuilt local
+        relation (a DataFrame's own schema, or the deal schema for Arrow
+        rows) makes the merge's anti-join a broadcast. Only the partitions
+        they intersect are read, merged and rewritten; merge_update keeps
+        every update row, so each of those buckets has rows to stage.
 
-        The driver holds every update row: callers pass bounded sets (at
-        most `max_deals` rows per enrichment tick, at most the accepted
-        rows of an egress tick)."""
+        The driver holds every update row, in either form: callers pass
+        bounded sets (at most `max_deals` rows per enrichment tick, at most
+        the accepted rows of an egress tick)."""
         with table_lock(self.path):
-            bucketed = self._with_bucket(updates)
-            rows = bucketed.toArrow()
+            if isinstance(updates, DataFrame):
+                schema, rows = updates.schema, updates.toArrow()
+            else:
+                schema, rows = self._deal_schema, updates
             if rows.num_rows == 0:
                 return
-            buckets = sorted(set(rows.column(PCOL).to_pylist()))
-            updates = self.spark.createDataFrame(rows, bucketed.schema)
+            buckets = self._buckets_of(rows)
+            local = self._with_bucket(self.spark.createDataFrame(rows, schema))
             base = self._read_raw().where(F.col(PCOL).isin(buckets))
-            self._rewrite(merge_update(base, updates, list(on)), buckets)
+            self._rewrite(merge_update(base, local, list(on)), buckets)

@@ -99,11 +99,21 @@ def test_decode_pipeline_counts_and_values(spark):
     assert deals.where("payload_cid IS NOT NULL").count() == 0
 
 
-def test_decode_pipeline_strict_raises(spark):
+def test_decode_pipeline_raises_on_undecodable_entry(spark):
+    """The lax decoder drops unknown types but never drops a corrupt entry:
+    an entry that is not base64 fails the pass."""
     from pyspark.errors import PythonException
+    from pyspark.sql import functions as F
 
     from spark_deal_observer_spark.sources.tables import load_table
 
-    events = load_table(spark, SF_SMALL, "events").where("event_type = 'signup'").limit(5)
+    events = load_table(spark, SF_SMALL, "events").where("event_type = 'purchase'").limit(5)
+    bad = synth_raw_events(events).withColumn(
+        "entries",
+        F.expr(
+            "transform(entries, e -> named_struct("
+            "'Codec', e.Codec, 'Flags', e.Flags, 'Key', e.Key, 'Value', '!!!notb64'))"
+        ),
+    )
     with pytest.raises(PythonException):
-        decode_raw_events(synth_raw_events(events), strict=True).collect()
+        decode_raw_events(bad).collect()

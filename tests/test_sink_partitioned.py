@@ -304,15 +304,21 @@ def test_egress_mark_equals_semi_join_mark(spark, tmp_path):
 
 
 def test_egress_merge_and_read_job_budget(spark, tmp_path):
-    """Jobs per call on the tick paths: an egress tick (one eligible
-    collect, the mark's merge) runs at most 5, a merge at most 3 (one
-    updates collect, the staged write) and a read none — the first read of
-    a fresh sink included, since the schema is fixed, not inferred. A sink
-    on a path that does not exist yet reads as an empty table."""
+    """Jobs per call on the tick paths: an append at most 3 into an empty
+    table and 5 as a replay (the bucket probe is one Arrow collect of the
+    cached batch, no shuffle), an egress tick at most 3 (one eligible
+    collect; the mark's merge takes the rows the tick holds, no second
+    collect), a DataFrame merge at most 3 (one updates collect, the staged
+    write) and a read none — the first read of a fresh sink included, since
+    the schema is fixed, not inferred. A sink on a path that does not exist
+    yet reads as an empty table."""
     path = str(tmp_path / "table")
     sink = PartitionedDealTableSink(spark, path)
     assert sink.count() == 0
-    sink.append_dedup(deals_df(spark, SF_SMALL))
+    deals = deals_df(spark, SF_SMALL)
+    _, append_jobs = count_jobs(spark, lambda: sink.append_dedup(deals))
+    _, replay_jobs = count_jobs(spark, lambda: sink.append_dedup(deals))
+    assert append_jobs <= 3 and replay_jobs <= 5
     fresh, ctor_jobs = count_jobs(spark, lambda: PartitionedDealTableSink(spark, path))
     first, read_jobs = count_jobs(spark, fresh.read)
     assert ctor_jobs == read_jobs == 0
@@ -323,7 +329,7 @@ def test_egress_merge_and_read_job_budget(spark, tmp_path):
         spark, lambda: submit_eligible(sink, lambda p: {"ingested": len(p)}, now=now)
     )
     assert res["submitted"] > 0
-    assert egress_jobs <= 5
+    assert egress_jobs <= 3
 
     updates = (
         sink.read().where(F.col("activated_at_epoch") < 4622200)
