@@ -10,8 +10,9 @@ LRU cache; here the whole tick is ONE dataflow:
       → broadcast join against the peer dimension (the LRU cache's analog)
       → broadcast join against the payload dimension (the piece indexer)
       → state-transition column expressions
-      → the attempted rows, which the caller merges into the state table
-        (`sink.merge_overwrite`, or `merge_update` over a frame)
+      → the attempted rows, which `enrich_tick` (streaming/enrichment.py)
+        merges into the deal table (the catalog's `resolve_state_tick`
+        merges them over a frame with `merge_update`)
 
 No per-row RPC, no Python in the loop — the dimension tables stand in for
 the external services exactly the way the reference's own test doubles do
@@ -33,29 +34,21 @@ TERMINAL = "PAYLOAD_CID_TERMINALLY_UNRETRIEVABLE"
 RETRY_BACKOFF_DAYS = 3  # resolve-payload-cids.js:20,34
 
 
-def work_queue(deals: DataFrame, now: Column, max_deals: int | None = 1000) -> DataFrame:
+def work_queue(deals: DataFrame, now: Column, max_deals: int = 1000) -> DataFrame:
     """Deals eligible for a resolution attempt this tick (predicate P4 +
-    oldest-first bound, resolve-payload-cids.js:63-66).
-
-    `max_deals=None` means "attempt everything eligible" and skips the
-    sort+limit entirely — important, because the top-k plan keeps an O(k)
-    priority queue per task, so passing a huge sentinel limit (instead of
-    None) allocates that queue for real and can OOM the executors."""
+    oldest-first bound, resolve-payload-cids.js:63-66). The bound always
+    applies, as in the reference: the tick's attempted rows are collected
+    to the driver."""
     cutoff = now - F.expr(f"INTERVAL {RETRY_BACKOFF_DAYS} DAYS")
     state = F.col("payload_retrievability_state")
-    filtered = deals.where(
+    return deals.where(
         F.col("payload_cid").isNull()
         & ((state == NOT_QUERIED) | (state == UNRESOLVED))
         & (
             F.col("last_payload_retrieval_attempt").isNull()
             | (F.col("last_payload_retrieval_attempt") < cutoff)
         )
-    )
-    if max_deals is None:
-        return filtered
-    return filtered.orderBy(F.col("activated_at_epoch").asc(), F.col("id").asc()).limit(
-        max_deals
-    )
+    ).orderBy(F.col("activated_at_epoch").asc(), F.col("id").asc()).limit(max_deals)
 
 
 def resolve_tick(
@@ -63,13 +56,13 @@ def resolve_tick(
     miner_peers: DataFrame,  # (miner_id, peer_id)
     payload_cids: DataFrame,  # (peer_id, piece_cid, payload_cid)
     now: Column,
-    max_deals: int | None = 1000,
+    max_deals: int = 1000,
 ) -> DataFrame:
     """One enrichment tick: returns ONLY the attempted rows — one per
     work-queue deal, so at most `max_deals` — in their post-transition
     state and with the `deals` schema. Merge them by `id` to get the next
-    state table: `merge_update(deals, out, ["id"])` over frames, or
-    `sink.merge_overwrite(out, ["id"])` against a stored table.
+    state table: `merge_update(deals, out, ["id"])` over frames;
+    `enrich_tick` does it against the stored table.
 
     State transitions (resolve-payload-cids.js:40-51):
       payload found                        → RESOLVED, payload_cid set

@@ -16,16 +16,20 @@ table's normalized path:
 
   * each sink write method takes it internally (torn-write protection
     even for callers that forget), and
-  * multi-call tick spans (read eligible → POST → mark submitted; read
-    state → resolve → merge) take it around the whole span — reentrancy
-    makes the nested sink-method acquisitions free.
+  * the two tick spans take it around the whole span —
+    `submit_eligible` (read eligible → POST → mark submitted) and
+    `enrich_tick` (read state → resolve → merge); reentrancy makes the
+    nested sink-method acquisitions free.
+
+Callers take no lock of their own: the ticks and the sink's eager
+methods hold it for them.
 
 Scope: one lock per driver process. The single-writer-per-table contract
 ACROSS processes is unchanged (sink.py module docstring); at deployment
 scale the same role is played by a table-format commit protocol
 (Delta/Iceberg optimistic transactions), which substitutes for the swap
 without changing any plan shapes. tests/test_end_to_end.py's concurrent
-soak drives all three loops against one table through this lock.
+soak drives all three loops against one table and takes no lock itself.
 """
 
 from __future__ import annotations

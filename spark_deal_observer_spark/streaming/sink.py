@@ -19,11 +19,11 @@ Both shapes first compute the batch's bucket set (micro-batches are
 epoch-contiguous, so it's a handful of values) and prune the stored-table
 read to those partitions — O(batch), not O(table), per tick. A merge
 holds its updates on the driver as Arrow: it collects a DataFrame once per
-write, so the plan that produced them (a work-queue top-k) runs once, or
-takes the Arrow rows a caller already holds (egress's mark) with no
-collect. The bucket set comes from those rows, and the anti-join against
-the stored partitions broadcasts a local relation. With a Delta/Iceberg
-catalog the write shapes become native MERGE.
+write, so the plan that produced them runs once, or takes the Arrow rows
+a caller already holds (both ticks' updates) with no collect. The bucket
+set comes from those rows, and the anti-join against the stored
+partitions broadcasts a local relation. With a Delta/Iceberg catalog the
+write shapes become native MERGE.
 
 The table has one fixed schema, the deal schema: `DEAL_SELECT_EXPRS` over
 `EVENTS_DDL`, every field nullable, plus `epoch_bucket INT`. Every read
@@ -127,10 +127,19 @@ class PartitionedDealTableSink:
         return self.spark.read.schema(self._schema).parquet(self.path)
 
     def read(self) -> DataFrame:
+        """The deal rows, lazily. The table lock cannot protect this read:
+        its files are listed now and opened by whatever action runs later,
+        after any lock taken around this call is released. A reader that
+        races a merge swap needs an eager method (`count`) or a caller
+        span that holds the lock through its action (the ticks)."""
         return self._read_raw().drop(PCOL)
 
     def count(self) -> int:
-        return self.read().count()
+        """The number of deal rows. An eager read, so it holds the table
+        lock through the whole action: no rewrite swaps a bucket out from
+        under it."""
+        with table_lock(self.path):
+            return self.read().count()
 
     def append_dedup(self, batch: DataFrame) -> None:
         """Dedup-insert that anti-joins against ONLY the batch's partitions.
@@ -205,9 +214,9 @@ class PartitionedDealTableSink:
         return want
 
     def merge_overwrite(self, updates: DataFrame | pa.Table, on: Sequence[str]) -> None:
-        """Partition-scoped MERGE: `updates` holds only the changed rows
-        (e.g. `resolve_tick`'s output), as a DataFrame or as a `pyarrow.Table`
-        of deal rows the caller already holds (egress's mark). A DataFrame is
+        """Partition-scoped MERGE: `updates` holds only the changed rows,
+        as a DataFrame or as a `pyarrow.Table` of deal rows the caller
+        already holds (the enrichment tick's attempted rows, egress's mark). A DataFrame is
         collected to the driver as Arrow once, inside the lock — its plan
         runs once; an Arrow table is used as it is, with no collect. The
         bucket set comes from the driver-held rows, and the rebuilt local

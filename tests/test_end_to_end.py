@@ -18,11 +18,12 @@ from spark_deal_observer_spark.operators.state import (
     RESOLVED,
     TERMINAL,
     UNRESOLVED,
-    resolve_tick,
+    state_counts,
 )
 from spark_deal_observer_spark.plans.deals import REF_TS
 from spark_deal_observer_spark.sources.tables import load_table
 from spark_deal_observer_spark.streaming.egress import submit_eligible
+from spark_deal_observer_spark.streaming.enrichment import enrich_tick
 from spark_deal_observer_spark.streaming.ingest import start_ingest
 from spark_deal_observer_spark.streaming.sink import PartitionedDealTableSink
 
@@ -45,7 +46,7 @@ def test_three_loops_end_to_end(spark, tmp_path):
     # -- loop 2: enrichment state machine over the same table --------------
     now1 = F.lit(REF_TS).cast("timestamp_ntz")
     deals = sink.read()
-    # The dims are derived from the state table here; merge_overwrite will
+    # The dims are derived from the state table here; the tick's merge will
     # REPLACE that table's files, so any plan still holding lineage into
     # them would recompute from deleted paths. localCheckpoint snapshots
     # the dims — the rule for anything read from a read-modify-write table.
@@ -62,9 +63,8 @@ def test_three_loops_end_to_end(spark, tmp_path):
         .withColumn("payload_cid", F.concat(F.lit("bafyE2E"), F.col("piece_cid")))
         .localCheckpoint()
     )
-    def state_counts(df):
-        return {r["payload_retrievability_state"]: r["n"] for r in
-                df.groupBy("payload_retrievability_state").agg(F.count("*").alias("n")).collect()}
+    def states(df):
+        return dict(state_counts(df).collect())
 
     # the work queue (P4) recomputed independently of the engine
     cutoff1 = F.expr(f"TIMESTAMP_NTZ '{REF_TS}' - INTERVAL 3 DAYS")
@@ -74,30 +74,28 @@ def test_three_loops_end_to_end(spark, tmp_path):
         & (F.col("last_payload_retrieval_attempt").isNull()
            | (F.col("last_payload_retrieval_attempt") < cutoff1))
     ).count()
-    states0 = state_counts(deals)
+    states0 = states(deals)
 
-    after1 = resolve_tick(deals, peers, pays, now1, max_deals=None)
-    sink.merge_overwrite(after1, ["id"])
+    res1 = enrich_tick(sink, peers, pays, now=now1)
+    assert res1["attempted"] == queue1
     t1 = sink.read()
     assert t1.count() == stored  # enrichment never adds or drops rows
-    states1 = state_counts(t1)
+    states1 = states(t1)
     assert states1.get(RESOLVED, 0) > states0.get(RESOLVED, 0)
     assert states1.get(UNRESOLVED, 0) > 0
     # exactly the queue was attempted, and every attempt was stamped
     assert t1.where(F.col("last_payload_retrieval_attempt") == now1).count() == queue1
 
     # second tick inside the 3-day backoff: a strict no-op
-    after2 = resolve_tick(t1, peers, pays, now1, max_deals=None)
-    sink.merge_overwrite(after2, ["id"])
-    assert state_counts(sink.read()) == states1
+    assert enrich_tick(sink, peers, pays, now=now1)["attempted"] == 0
+    assert states(sink.read()) == states1
 
     # third tick after the backoff: every retried UNRESOLVED miss absorbs to
     # TERMINAL (hits resolve) — no queue-eligible UNRESOLVED survives it
     now2 = F.expr(f"TIMESTAMP_NTZ '{REF_TS}' + INTERVAL 4 DAYS")
-    after3 = resolve_tick(sink.read(), peers, pays, now2, max_deals=None)
-    sink.merge_overwrite(after3, ["id"])
+    enrich_tick(sink, peers, pays, now=now2)
     t3 = sink.read()
-    states3 = state_counts(t3)
+    states3 = states(t3)
     assert states3.get(TERMINAL, 0) > states1.get(TERMINAL, 0)
     assert t3.where(
         F.col("payload_cid").isNull()
@@ -133,8 +131,9 @@ def test_three_loops_concurrent_soak(spark, tmp_path):
     witness the isolation story. Here all three run as concurrent
     streaming queries with overlapping 1-second triggers against the
     same state table — ingest as the file-source query, enrichment and
-    egress as rate-source-clocked tick loops — serialized per tick by
-    streaming/concurrency.table_lock. Invariants at the end: no lost
+    egress as rate-source-clocked tick loops. The engine serializes each
+    tick's span (streaming/concurrency.py); the test takes no lock of its
+    own. Invariants at the end: no lost
     updates (every ingested key present exactly once despite partition
     merge rewrites interleaving with appends), no deal both submitted
     and unresolved, and the egress counters agree with the flags in the
@@ -146,7 +145,6 @@ def test_three_loops_concurrent_soak(spark, tmp_path):
         str(tmp_path / d) for d in ("source", "table", "ck_i", "ck_e", "ck_g")
     )
     from spark_deal_observer_spark.operators.merge import DEAL_KEY
-    from spark_deal_observer_spark.streaming.concurrency import table_lock
     from spark_deal_observer_spark.streaming.ingest import DEAL_SELECT_EXPRS
 
     # Slices interleave in time (by arrival, not by ts): the ingest
@@ -159,6 +157,21 @@ def test_three_loops_concurrent_soak(spark, tmp_path):
     )
     expected = ev.selectExpr(*DEAL_SELECT_EXPRS).dropDuplicates(list(DEAL_KEY))
     n_expected = expected.count()
+    # The lookups are built once, from the expected deals, which hold no
+    # lineage into the table the ticks rewrite.
+    peers = (
+        expected.where(F.col("miner_id") % 2 == 0)
+        .select("miner_id").dropDuplicates()
+        .withColumn("peer_id", F.concat(F.lit("peer"), F.col("miner_id")))
+        .localCheckpoint()
+    )
+    pays = (
+        expected.join(peers, "miner_id")
+        .where(F.col("client_id") % 3 == 0)
+        .select("peer_id", "piece_cid").dropDuplicates()
+        .withColumn("payload_cid", F.concat(F.lit("bafySOAK"), F.col("piece_cid")))
+        .localCheckpoint()
+    )
     ev.where(F.col("__slice") == 1).drop("__slice").coalesce(2).write.mode(
         "append"
     ).parquet(source)
@@ -171,37 +184,22 @@ def test_three_loops_concurrent_soak(spark, tmp_path):
     stopping = threading.Event()  # q.stop() cancels in-flight tick jobs;
     # those cancellations are teardown noise, not isolation failures
 
-    def enrich_tick(_batch, _id):
+    def enrich_loop(_batch, _id):
         try:
-            with table_lock(table):
-                deals = sink.read()
-                peers = (
-                    deals.where(F.col("miner_id") % 2 == 0)
-                    .select("miner_id").dropDuplicates()
-                    .withColumn("peer_id", F.concat(F.lit("peer"), F.col("miner_id")))
-                    .localCheckpoint()
-                )
-                pays = (
-                    deals.join(peers, "miner_id")
-                    .where(F.col("client_id") % 3 == 0)
-                    .select("peer_id", "piece_cid").dropDuplicates()
-                    .withColumn("payload_cid", F.concat(F.lit("bafySOAK"), F.col("piece_cid")))
-                    .localCheckpoint()
-                )
-                n_before = deals.count()
-                after = resolve_tick(deals, peers, pays, now1, max_deals=None)
-                sink.merge_overwrite(after.select(*deals.columns), ["id"])
+            enrich_tick(sink, peers, pays, now=now1)
+            # The table only grows, so a count taken after the tick that
+            # is still short proves the tick read a short table.
+            n_after = sink.count()
             with lock_stats:
                 enrich_ticks.append(time.monotonic())
-                seen_counts.append(n_before)
+                seen_counts.append(n_after)
         except Exception as e:  # surfaced in the final assert
             if not stopping.is_set():
                 errors.append(("enrich", e))
 
-    def egress_tick(_batch, _id):
+    def egress_loop(_batch, _id):
         try:
-            with table_lock(table):
-                res = submit_eligible(sink, lambda p: {"ingested": len(p)}, now=now1)
+            res = submit_eligible(sink, lambda p: {"ingested": len(p)}, now=now1)
             with lock_stats:
                 egress_results.append(res)
         except Exception as e:
@@ -209,15 +207,14 @@ def test_three_loops_concurrent_soak(spark, tmp_path):
                 errors.append(("egress", e))
 
     def rate_loop(name, ckpt, body):
-        # 3 s ticks: an enrich/egress tick is a multi-second full merge;
-        # at 1 s the two tick loops monopolize the table lock and starve
-        # ingest (observed: 412/1000 rows after 120 s) — the same pacing
-        # pressure the reference handles with its loop intervals
+        # 1 s ticks, like ingest: a tick merges only its attempted or
+        # accepted rows, so the two tick loops leave the table lock free
+        # enough that every row is ingested within seconds of its slice
         return (
             spark.readStream.format("rate").option("rowsPerSecond", 1).load()
             .writeStream.queryName(name).foreachBatch(body)
             .option("checkpointLocation", ckpt)
-            .trigger(processingTime="3 seconds")
+            .trigger(processingTime="1 second")
             .start()
         )
 
@@ -225,8 +222,8 @@ def test_three_loops_concurrent_soak(spark, tmp_path):
         spark, source, table, ck_i,
         processing_time="1 second",
     )
-    q_enrich = rate_loop("soak_enrich", ck_e, enrich_tick)
-    q_egress = rate_loop("soak_egress", ck_g, egress_tick)
+    q_enrich = rate_loop("soak_enrich", ck_e, enrich_loop)
+    q_egress = rate_loop("soak_egress", ck_g, egress_loop)
     try:
         # feed the remaining slices while all three loops are live
         for i in range(2, n_slices + 1):
@@ -239,9 +236,7 @@ def test_three_loops_concurrent_soak(spark, tmp_path):
             with lock_stats:
                 done_enrich = len(enrich_ticks) >= 3
                 done_egress = sum(r["submitted"] for r in egress_results) > 0
-            # reads race the merge swaps like any other loop: take the lock
-            with table_lock(table):
-                n_now = sink.count()
+            n_now = sink.count()  # holds the table lock, like the ticks
             if done_enrich and done_egress and n_now == n_expected:
                 # one more enrichment+egress round over the final table
                 with lock_stats:
@@ -272,7 +267,8 @@ def test_three_loops_concurrent_soak(spark, tmp_path):
     assert t.count() == n_expected
     assert t.dropDuplicates(list(DEAL_KEY)).count() == n_expected
     assert t.select("id").distinct().count() == n_expected
-    # enrichment observed the table GROWING (it really ran mid-ingest)
+    # enrichment ticked while the table was still GROWING (it really ran
+    # mid-ingest): the count taken just after some tick was short
     assert min(seen_counts) < n_expected
 
     # no deal both submitted and unresolved: every row flagged this run

@@ -29,6 +29,9 @@ KEPT_UNREACHED = {
     f"{PKG}.streaming.telemetry",
     # ROADMAP item 8 wires with_retries into the egress poster.
     f"{PKG}.streaming.transport",
+    # ROADMAP item 11's benchmark change re-points perfbench's enrichment
+    # round at enrich_tick; until then only tests call it.
+    f"{PKG}.streaming.enrichment",
 }
 
 

@@ -13,10 +13,17 @@ from conftest import SF_SMALL, count_jobs
 from pyspark.sql import functions as F
 
 from spark_deal_observer_spark.operators.merge import DEAL_KEY, merge_update
-from spark_deal_observer_spark.operators.state import resolve_tick
+from spark_deal_observer_spark.operators.state import (
+    RESOLVED,
+    TERMINAL,
+    UNRESOLVED,
+    resolve_tick,
+    state_counts,
+)
 from spark_deal_observer_spark.plans.deals import REF_TS, deals_df, eligible_deals
 from spark_deal_observer_spark.streaming.concurrency import table_lock
 from spark_deal_observer_spark.streaming.egress import submit_eligible
+from spark_deal_observer_spark.streaming.enrichment import enrich_tick
 from spark_deal_observer_spark.streaming.sink import BUCKET_WIDTH, PartitionedDealTableSink
 
 MID_EPOCH = 4622500  # sf0.001 derived epochs span [4622000, 4623000)
@@ -152,6 +159,24 @@ def _counting_filter(spark):
     return seen, F.udf(keep, "boolean")
 
 
+def _lookups(deals):
+    """(miner_peers, payload_cids) covering part of `deals`: every third
+    miner has no peer, and only even clients' pieces have a payload. Both
+    are snapshots, as a tick's lookups should be."""
+    peers = (
+        deals.where(F.col("miner_id") % 3 != 0).select("miner_id").dropDuplicates()
+        .withColumn("peer_id", F.concat(F.lit("peer"), F.col("miner_id").cast("string")))
+        .localCheckpoint()
+    )
+    pays = (
+        deals.join(peers, "miner_id").where(F.col("client_id") % 2 == 0)
+        .select("peer_id", "piece_cid").dropDuplicates()
+        .withColumn("payload_cid", F.concat(F.lit("bafyres"), F.col("piece_cid")))
+        .localCheckpoint()
+    )
+    return peers, pays
+
+
 def test_merge_overwrite_equals_merge_update_over_whole_table(spark, tmp_path):
     """Handing the sink ONLY the attempted rows of an enrichment tick
     yields exactly the table a whole-table merge_update gives, even when
@@ -161,15 +186,7 @@ def test_merge_overwrite_equals_merge_update_over_whole_table(spark, tmp_path):
     sink.append_dedup(deals)
     before = sink.read().localCheckpoint()  # pin rows: the swap replaces the files
 
-    peers = (
-        before.where(F.col("miner_id") % 3 != 0).select("miner_id").dropDuplicates()
-        .withColumn("peer_id", F.concat(F.lit("peer"), F.col("miner_id").cast("string")))
-    )
-    pays = (
-        before.join(peers, "miner_id").where(F.col("client_id") % 2 == 0)
-        .select("peer_id", "piece_cid").dropDuplicates()
-        .withColumn("payload_cid", F.concat(F.lit("bafyres"), F.col("piece_cid")))
-    )
+    peers, pays = _lookups(before)
     now = F.lit(REF_TS).cast("timestamp_ntz")
     updates = resolve_tick(before, peers, pays, now, max_deals=300).localCheckpoint()
     n_buckets = updates.select(
@@ -224,6 +241,69 @@ def test_compact_waits_for_the_table_lock(spark, tmp_path):
     assert not worker.is_alive()
     assert out["done"] == {4622000 // BUCKET_WIDTH: 1}
     assert sink.read().orderBy("id").collect() == rows
+
+
+def test_count_waits_for_the_table_lock(spark, tmp_path):
+    """count() is an eager read, so it holds the table lock through its
+    action: while another thread holds the lock it cannot return, and no
+    merge swaps a bucket out from under it."""
+    sink = PartitionedDealTableSink(spark, str(tmp_path / "table"))
+    sink.append_dedup(deals_df(spark, SF_SMALL))
+    n = sink.count()
+    out = {}
+    worker = threading.Thread(target=lambda: out.update(n=sink.count()))
+
+    with table_lock(sink.path):
+        worker.start()
+        worker.join(timeout=3)
+        assert worker.is_alive(), "count() finished while another thread held the lock"
+    worker.join(timeout=120)
+    assert out == {"n": n}
+
+
+def test_enrich_tick_equals_the_hand_composition(spark, tmp_path):
+    """enrich_tick leaves the table that resolve_tick → merge_overwrite,
+    composed by hand, leaves; it counts the attempted rows by the state
+    each moved to; and it runs no more jobs than the composition. The
+    lookups come from the source, so they hold no lineage into either
+    table."""
+    deals = deals_df(spark, SF_SMALL)
+    peers, pays = _lookups(deals)
+    now = F.lit(REF_TS).cast("timestamp_ntz")
+    hand = PartitionedDealTableSink(spark, str(tmp_path / "hand"))
+    tick = PartitionedDealTableSink(spark, str(tmp_path / "tick"))
+    hand.append_dedup(deals)
+    tick.append_dedup(deals)
+
+    _, hand_jobs = count_jobs(
+        spark, lambda: hand.merge_overwrite(resolve_tick(hand.read(), peers, pays, now), ["id"])
+    )
+    res, tick_jobs = count_jobs(spark, lambda: enrich_tick(tick, peers, pays, now=now))
+    assert tick_jobs <= hand_jobs and tick_jobs <= 5
+
+    got, want = tick.read(), hand.read()
+    assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
+    # the corpus stamps no attempt at REF_TS, so these are the attempted rows
+    moved = dict(state_counts(got.where(F.col("last_payload_retrieval_attempt") == now)).collect())
+    assert res == {
+        "attempted": sum(moved.values()),
+        "resolved": moved.get(RESOLVED, 0),
+        "unresolved": moved.get(UNRESOLVED, 0),
+        "terminal": moved.get(TERMINAL, 0),
+    }
+    assert res["resolved"] > 0 and res["unresolved"] > 0 and res["terminal"] > 0
+
+
+def test_enrich_tick_before_first_ingest_commit_is_a_zero_tick(spark, tmp_path):
+    """Enrichment may tick before ingest has committed anything: on an
+    empty table it returns zero counts and writes nothing, not even a
+    stage directory."""
+    sink = PartitionedDealTableSink(spark, str(tmp_path / "table"))
+    peers, pays = _lookups(deals_df(spark, SF_SMALL))
+    res = enrich_tick(sink, peers, pays, now=F.lit(REF_TS).cast("timestamp_ntz"))
+    assert res == {"attempted": 0, "resolved": 0, "unresolved": 0, "terminal": 0}
+    assert os.listdir(tmp_path) == ["table"]
+    assert os.listdir(sink.path) == []
 
 
 def test_pinned_schema_reads_see_new_buckets(spark, tmp_path):

@@ -137,7 +137,7 @@ def test_resolve_tick_returns_only_the_work_queue(spark):
     ]
     deals = mkdeals(spark, queued + idle)
     peers, payloads = dims(spark)
-    for max_deals, want in ((4, 4), (1000, 6), (None, 6)):
+    for max_deals, want in ((4, 4), (1000, 6)):
         queue = {r.id for r in work_queue(deals, now, max_deals).collect()}
         out = resolve_tick(deals, peers, payloads, now, max_deals).collect()
         assert len(out) == want == len(queue)
