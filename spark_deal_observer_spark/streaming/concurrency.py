@@ -4,12 +4,12 @@ The reference runs its three loops — ingest, enrichment, egress —
 CONCURRENTLY against one PostgreSQL table
 (backend/bin/deal-observer-backend.js:165-173, `Promise.all` over the
 three interval loops) and leans on Postgres transactions for isolation.
-This engine's parquet table sinks are read-modify-write with an atomic
-directory swap as the commit point, so concurrent loop ticks inside one
-driver process must serialize their read→transform→swap SPANS — a lock
-around the swap alone is not enough, because a merge that started from a
-stale read commits a table that silently drops the other loop's rows
-(the lost-update anomaly).
+This engine's deal table commits each write as one entry of a version
+log (streaming/sink.py), so a reader always sees a committed version and
+needs no lock. Its writes are still read-modify-write: a merge that
+started from a stale version commits a table that silently drops the
+other loop's rows (the lost-update anomaly). So concurrent writers inside
+one driver process must serialize their read→transform→commit SPANS.
 
 `table_lock(path)` returns a process-wide REENTRANT lock keyed by the
 table's normalized path:
@@ -21,15 +21,15 @@ table's normalized path:
     `enrich_tick` (read state → resolve → merge); reentrancy makes the
     nested sink-method acquisitions free.
 
-Callers take no lock of their own: the ticks and the sink's eager
-methods hold it for them.
+Callers take no lock of their own: the ticks and the sink's write
+methods hold it for them, and reads need none.
 
-Scope: one lock per driver process. The single-writer-per-table contract
-ACROSS processes is unchanged (sink.py module docstring); at deployment
-scale the same role is played by a table-format commit protocol
-(Delta/Iceberg optimistic transactions), which substitutes for the swap
-without changing any plan shapes. tests/test_end_to_end.py's concurrent
-soak drives all three loops against one table and takes no lock itself.
+Scope: one lock per driver process. Across processes the log's
+put-if-absent commit makes a second writer's commit fail rather than
+overwrite a version; turning that failure into an optimistic retry (a
+writer re-applies its rows to the version that beat it) is what removes
+this lock. tests/test_end_to_end.py's concurrent soak drives all three
+loops against one table and takes no lock itself.
 """
 
 from __future__ import annotations

@@ -35,7 +35,7 @@ from .concurrency import table_lock
 from .sink import PartitionedDealTableSink
 
 Poster = Callable[[list[dict[str, Any]]], dict[str, int]]
-DEFAULT_BATCH_SIZE = 100  # SPARK_API_SUBMIT_DEALS_BATCH_SIZE default
+BATCH_SIZE = 100  # SPARK_API_SUBMIT_DEALS_BATCH_SIZE default
 
 _PAYLOAD_COLUMNS = ["miner_id", "client_id", "piece_cid", "piece_size", "payload_cid", "expires_at"]
 
@@ -47,31 +47,33 @@ def submit_eligible(
     poster: Poster,
     *,
     now: Column | None = None,
-    batch_size: int = DEFAULT_BATCH_SIZE,
 ) -> dict[str, int]:
     """One egress tick. Returns {'submitted': n, 'ingested': n, 'skipped': n,
     'failed_batches': n}. An empty table has no eligible rows, so a tick
     before ingest's first commit is a zero tick with no POST.
 
-    A POST that raises skips its batch: the exception is logged, the batch
-    counts in `failed_batches`, and its deals keep submitted_at NULL, so
-    the next tick retries them — the reference's semantics
+    Eligible deals are POSTed BATCH_SIZE at a time. A POST that raises
+    skips its batch: the exception is logged, the batch counts in
+    `failed_batches`, and its deals keep submitted_at NULL, so the next
+    tick retries them — the reference's semantics
     (spark-api-submit-deals.js:17-29).
 
-    The whole read-eligible → POST → mark-submitted span holds the table
-    lock: under the reference's concurrent three-loop deployment, an
-    enrichment merge landing between our read and our mark would base the
-    mark's rewrite on rows the merge already replaced (lost update) —
-    the span lock serializes ticks, and its reentrancy makes the nested
-    merge_overwrite acquisition free (streaming/concurrency.py).
+    The tick reads one version of the table and commits its mark as a
+    later one, so the whole read-eligible → POST → mark-submitted span
+    holds the table lock, as every writer does: under the reference's
+    concurrent three-loop deployment, an enrichment merge committed
+    between our read and our mark would be overwritten by mark rows read
+    before it (lost update). The lock's reentrancy makes the nested
+    merge_overwrite acquisition free (streaming/concurrency.py). Readers
+    of the table take no lock.
     """
     result = {"submitted": 0, "ingested": 0, "skipped": 0, "failed_batches": 0}
     with table_lock(sink.path):
         deals = sink.read()
         rows = eligible_rows(deals).toArrow()
         accepted: list[pa.Table] = []
-        for start in range(0, rows.num_rows, batch_size):
-            batch = rows.slice(start, batch_size)
+        for start in range(0, rows.num_rows, BATCH_SIZE):
+            batch = rows.slice(start, BATCH_SIZE)
             payload = [
                 {
                     "minerId": f"f0{r['miner_id']}",

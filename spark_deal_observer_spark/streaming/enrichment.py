@@ -36,14 +36,15 @@ def enrich_tick(
     the state each one moved to. An empty table, or one with nothing due,
     gives a zero tick that rewrites nothing.
 
-    The two dimension frames must not hold lineage into the deal table
-    (build them from another source, or `localCheckpoint()` them): the
-    merge replaces the table's files, and a plan still reading those
-    files would fail on, or recompute from, paths that are gone.
+    The two dimension frames may hold lineage into the deal table: the
+    version they read stays readable until `compact()` collects it,
+    `RETAIN_S` after a newer version is committed (streaming/sink.py).
+    Frames kept longer than that must be snapshots (`localCheckpoint()`)
+    or built from another source.
 
     The whole read → resolve → merge span holds the table lock, for the
-    reason `submit_eligible` does: an egress mark landing between the read
-    and the merge would be overwritten by rows read before it (lost
+    reason `submit_eligible` does: an egress mark committed between the
+    read and the merge would be overwritten by rows read before it (lost
     update). The lock is reentrant, so the merge's own acquisition is free
     (streaming/concurrency.py).
     """

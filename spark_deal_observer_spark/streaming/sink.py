@@ -8,16 +8,15 @@ read-modify-write — the tradeoff SURVEY.md §7 Phase 4 documents):
 
   * `append_dedup` — the ON-CONFLICT-DO-NOTHING ingest sink (T6): anti-join
     the incoming batch against the stored keys of the batch's partitions,
-    append only new rows. Plain parquet append is atomic-enough here (new
-    part-files), and the anti-join makes replays idempotent — at-least-once
-    delivery × keyed dedup = effectively-once, exactly the reference's
-    guarantee.
+    append only new rows, as one commit. The anti-join makes replays
+    idempotent — at-least-once delivery × keyed dedup = effectively-once,
+    exactly the reference's guarantee.
   * `merge_overwrite` — the UPDATE shapes (S7/S8): given ONLY the changed
     rows, rewrite the partitions they intersect with merge_update applied.
 
 Both shapes first compute the batch's bucket set (micro-batches are
 epoch-contiguous, so it's a handful of values) and prune the stored-table
-read to those partitions — O(batch), not O(table), per tick. A merge
+read to those partitions' files — O(batch), not O(table), per tick. A merge
 holds its updates on the driver as Arrow: it collects a DataFrame once per
 write, so the plan that produced them runs once, or takes the Arrow rows
 a caller already holds (both ticks' updates) with no collect. The bucket
@@ -28,27 +27,46 @@ write shapes become native MERGE.
 The table has one fixed schema, the deal schema: `DEAL_SELECT_EXPRS` over
 `EVENTS_DDL`, every field nullable, plus `epoch_bucket INT`. Every read
 passes it to `spark.read.schema(...)`, so no read infers a schema, and a
-table with no rows yet reads as zero rows. Partition and file listing
-still run on every read, so new buckets and files show up.
+table with no commit yet reads as zero rows.
 
-`merge_overwrite` and `compact` share one rewrite path: the new contents
-of whole buckets are staged to one `path__stage_*` directory, each bucket
-is swapped in with `swap_dir`, then the stage is removed.
+The commit point is a version log. `_log/<v>.json` holds the whole live
+file list of version v (`epoch_bucket=N/<part file>`, relative to the
+table). A write stages its part files under a `_stage_*` directory
+inside the table, moves them into their bucket directories (keeping
+Spark's names), then commits `<v+1>.json`: the entry is written in full
+in the stage and hard-linked to its name, a put-if-absent write that
+never shows a reader a partial entry and fails if another writer took
+v+1. An append adds files; a merge or a compaction replaces the files of
+the buckets it rewrote, all of them in one commit. So a crash before the
+link leaves version v, and a file no entry names is invisible.
 
-Durability note: the staged-swap uses `os.rename`, which is atomic on a
-local POSIX filesystem but NOT on object storage (S3/GCS "rename" is
-copy+delete). At deployment scale, point the sink at an HDFS-compatible
-path or replace the swap with a table-format commit (Delta/Iceberg); the
-partition-scoped read/merge plans are unchanged by that substitution.
+A read opens the latest entry and hands its files to Spark: it takes no
+lock, lists no data directory and replays nothing, and its DataFrame is a
+snapshot of that version that later commits neither change nor break.
+Spark still checks each file it is handed, and for more than 32 files
+(`spark.sql.sources.parallelPartitionDiscovery.threshold`) it does so in
+a Spark job; `compact()` keeps the count down.
+Retired files stay on disk until `compact()` collects garbage: a version
+whose successor was committed more than `RETAIN_S` ago goes, then every
+data file no remaining version names (crash orphans too) and every
+stage. The latest version is never collected.
+
+Durability note: the commit relies on `os.link` failing on an existing
+name and on `os.rename` within one filesystem, as on a local POSIX
+filesystem. On object storage the entry needs a conditional put
+(create-if-absent) and the data files are written in place of the moves;
+the partition-scoped read/merge plans are unchanged by that substitution.
 """
 
 from __future__ import annotations
 
 import glob
+import json
 import os
 import shutil
+import time
 import uuid
-from collections.abc import Sequence
+from collections.abc import Iterable, Sequence
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -59,8 +77,6 @@ from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ..operators.merge import DEAL_KEY, dedup_insert, merge_update
 from ..plans.deals import DEAL_SELECT_EXPRS, EVENTS_DDL
-from .atomic import gc_swap_debris
-from .atomic import swap_dir as _swap_dir
 from .concurrency import table_lock
 
 PCOL = "epoch_bucket"
@@ -68,6 +84,17 @@ BUCKET_WIDTH = 100
 # Rewrites size files by row count (columnar bytes vary with encoding;
 # rows are the stable proxy).
 ROWS_PER_FILE = 1_000_000
+LOG = "_log"
+STAGE = "_stage_"
+# How long a version stays readable once a newer one is committed: the
+# time a reader that resolved it (a lazy DataFrame, a tick's lookups
+# derived from the table) has to finish.
+RETAIN_S = 3600.0
+
+
+def _in_buckets(files: Iterable[str], buckets: Iterable[int]) -> list[str]:
+    parts = {f"{PCOL}={b}" for b in buckets}
+    return [f for f in files if f.split("/", 1)[0] in parts]
 
 
 class PartitionedDealTableSink:
@@ -76,7 +103,8 @@ class PartitionedDealTableSink:
     deal-observer.js:67-122, against a table indexed on the hot keys).
 
     Layout: `path/epoch_bucket=N/…parquet` with
-    `epoch_bucket = activated_at_epoch DIV BUCKET_WIDTH`. Assumes
+    `epoch_bucket = activated_at_epoch DIV BUCKET_WIDTH`, named by the
+    version log `path/_log/` (module docstring). Assumes
     `activated_at_epoch` (like the reference's) is immutable under updates —
     a merge never moves a row across partitions, so update merges are
     closed over the updates' bucket set.
@@ -88,30 +116,11 @@ class PartitionedDealTableSink:
         deal = spark.createDataFrame([], EVENTS_DDL).selectExpr(*DEAL_SELECT_EXPRS).schema
         self._deal_schema = StructType([StructField(f.name, f.dataType) for f in deal])
         self._schema = StructType(self._deal_schema.fields + [StructField(PCOL, IntegerType())])
-        # restart hygiene: a crash can orphan staged/backup dirs from an
-        # interrupted rewrite (`__stage_*` written but never swapped,
-        # `__old_*` moved aside but not yet removed). They leak disk
-        # forever; the single-writer contract makes construction a safe
-        # point to sweep them. The sweep runs before `path` is created: a
-        # missing `path` is what marks a `path__old_*` backup as the only copy.
-        self._gc_stale_stages()
         os.makedirs(path, exist_ok=True)
-
-    def _gc_stale_stages(self) -> None:
-        gc_swap_debris(self.path)
-        # per-partition swap debris: group backups by their live dir
-        # so repeated crashes restore the NEWEST backup, not the
-        # glob-order-first one (see atomic.gc_swap_debris)
-        targets = {
-            d[: d.rindex("__old_")]
-            for d in glob.glob(os.path.join(self.path, "*__old_*"))
-        }
-        for t in sorted(targets):
-            gc_swap_debris(t)
 
     # The bucket of a row, `activated_at_epoch DIV BUCKET_WIDTH`, in its two
     # forms: a Spark column for writes, and the sorted bucket set of
-    # driver-held Arrow rows for pruning and swaps (pyarrow's integer divide
+    # driver-held Arrow rows for pruning (pyarrow's integer divide
     # truncates toward zero, like Spark's DIV).
     def _with_bucket(self, df: DataFrame) -> DataFrame:
         return df.withColumn(
@@ -123,75 +132,129 @@ class PartitionedDealTableSink:
         epochs = rows.column("activated_at_epoch")
         return sorted(pc.unique(pc.divide(epochs, BUCKET_WIDTH)).to_pylist())
 
-    def _read_raw(self) -> DataFrame:
-        return self.spark.read.schema(self._schema).parquet(self.path)
+    def _entry(self, version: int) -> str:
+        return os.path.join(self.path, LOG, f"{version}.json")
+
+    def _versions(self) -> list[int]:
+        try:
+            names = os.listdir(os.path.join(self.path, LOG))
+        except FileNotFoundError:
+            return []
+        return sorted(int(n[: -len(".json")]) for n in names if n.endswith(".json"))
+
+    def _files(self, version: int) -> list[str]:
+        with open(self._entry(version)) as f:
+            return json.load(f)["files"]
+
+    def _snapshot(self) -> tuple[int, list[str]]:
+        """(latest version, its live files relative to the table); version
+        0 is the empty table before the first commit."""
+        versions = self._versions()
+        return (versions[-1], self._files(versions[-1])) if versions else (0, [])
+
+    def _scan(self, files: Sequence[str]) -> DataFrame:
+        """The rows of `files`, with `epoch_bucket` taken from their paths.
+        No files is an empty frame, and no Spark job."""
+        reader = self.spark.read.schema(self._schema).option("basePath", self.path)
+        return reader.parquet(*(os.path.join(self.path, f) for f in files))
 
     def read(self) -> DataFrame:
-        """The deal rows, lazily. The table lock cannot protect this read:
-        its files are listed now and opened by whatever action runs later,
-        after any lock taken around this call is released. A reader that
-        races a merge swap needs an eager method (`count`) or a caller
-        span that holds the lock through its action (the ticks)."""
-        return self._read_raw().drop(PCOL)
+        """The deal rows of the latest version, lazily. The DataFrame is a
+        snapshot of that version: later commits neither change it nor
+        break it, until `compact()` collects the version (`RETAIN_S` after
+        a newer one is committed)."""
+        return self._scan(self._snapshot()[1]).drop(PCOL)
 
     def count(self) -> int:
-        """The number of deal rows. An eager read, so it holds the table
-        lock through the whole action: no rewrite swaps a bucket out from
-        under it."""
-        with table_lock(self.path):
-            return self.read().count()
+        """The number of deal rows in the latest version."""
+        return self.read().count()
+
+    def _commit(
+        self, rows: DataFrame, version: int, files: list[str], replace: Sequence[int] = ()
+    ) -> None:
+        """Write `rows` as new part files and commit them over `version`,
+        whose files are `files`: the next version lists those, less the
+        files of the buckets in `replace`, plus the new ones. A write that
+        adds and replaces nothing commits nothing. Runs under the table
+        lock, so `version` is still the latest; a writer in another
+        process that took the next number first makes the link raise
+        FileExistsError."""
+        stage = os.path.join(self.path, f"{STAGE}{uuid.uuid4().hex[:8]}")
+        try:
+            writer = rows.write.option("maxRecordsPerFile", ROWS_PER_FILE)
+            writer.partitionBy(PCOL).parquet(stage)
+            added = []
+            for staged in glob.glob(os.path.join(stage, f"{PCOL}=*", "*.parquet")):
+                rel = os.path.relpath(staged, stage)
+                os.makedirs(os.path.join(self.path, os.path.dirname(rel)), exist_ok=True)
+                os.rename(staged, os.path.join(self.path, rel))
+                added.append(rel)
+            if not added and not replace:
+                return
+            gone = set(_in_buckets(files, replace))
+            live = sorted([p for p in files if p not in gone] + added)
+            entry = os.path.join(stage, "entry.json")
+            with open(entry, "w") as f:
+                json.dump({"files": live}, f)
+            os.makedirs(os.path.join(self.path, LOG), exist_ok=True)
+            os.link(entry, self._entry(version + 1))
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
+
+    def _collect_garbage(self) -> None:
+        """Delete each version whose successor was committed more than
+        `RETAIN_S` ago (never the latest), then every data file that no
+        remaining version names and every stage. Runs under the table
+        lock, so no write of this process sits between its moves and its
+        commit: an unnamed file is a retired or a crashed write's."""
+        versions = self._versions()
+        for old, successor in zip(versions, versions[1:]):
+            if time.time() - os.path.getmtime(self._entry(successor)) > RETAIN_S:
+                os.remove(self._entry(old))
+        live = {f for v in self._versions() for f in self._files(v)}
+        for f in glob.glob(os.path.join(self.path, f"{PCOL}=*", "*")):
+            if os.path.relpath(f, self.path) not in live:
+                os.remove(f)
+        for stage in glob.glob(os.path.join(self.path, f"{STAGE}*")):
+            shutil.rmtree(stage, ignore_errors=True)
 
     def append_dedup(self, batch: DataFrame) -> None:
         """Dedup-insert that anti-joins against ONLY the batch's partitions.
 
-        The stored-table side is pruned by the partition column before the
-        anti-join, so a tick reads O(batch-epoch-range) rows no matter how
-        large the table has grown. The batch is persisted, so the bucket
-        probe and the write share one scan of it: the source is read, and
-        its `observe` metrics counted, once per micro-batch. The probe
-        collects the one epoch column as Arrow and takes its bucket set on
-        the driver, so it runs no shuffle. The table lock makes the
-        anti-join + append one atomic span vs concurrent loop ticks
-        (streaming/concurrency.py)."""
+        The stored side is the batch's buckets' files, so a tick reads
+        O(batch-epoch-range) rows no matter how large the table has grown.
+        The batch is persisted, so the bucket probe and the write share
+        one scan of it: the source is read, and its `observe` metrics
+        counted, once per micro-batch. The probe collects the one epoch
+        column as Arrow and takes its bucket set on the driver, so it runs
+        no shuffle. The table lock makes the anti-join + commit one atomic
+        span vs concurrent loop ticks (streaming/concurrency.py)."""
         batch = self._with_bucket(batch).persist()
         try:
             with table_lock(self.path):
+                version, files = self._snapshot()
                 # Micro-batches are epoch-contiguous: this is a handful of ints.
                 buckets = self._buckets_of(batch.select("activated_at_epoch").toArrow())
-                stored = self._read_raw().where(F.col(PCOL).isin(buckets))
-                # back to the deal column order (the anti-join puts the key
-                # first): a plain parquet read of the table infers the schema
+                stored = self._scan(_in_buckets(files, buckets))
+                # back to the deal column order (the anti-join puts the key first)
                 new_rows = dedup_insert(batch, stored, DEAL_KEY).select(*batch.columns)
-                new_rows.write.mode("append").partitionBy(PCOL).parquet(self.path)
+                self._commit(new_rows, version, files)
         finally:
             batch.unpersist()
-
-    def _rewrite(self, rows: DataFrame, buckets: Sequence[int]) -> None:
-        """Replace each bucket in `buckets` with its rows in `rows`, which
-        must hold at least one row of every such bucket: stage them all to
-        one directory, swap each bucket in, remove the stage. A crash
-        leaves every bucket either old or new, never mixed."""
-        stage = f"{self.path}__stage_{uuid.uuid4().hex[:8]}"
-        try:
-            writer = rows.write.mode("overwrite").option("maxRecordsPerFile", ROWS_PER_FILE)
-            writer.partitionBy(PCOL).parquet(stage)
-            for b in buckets:
-                part = f"{PCOL}={b}"
-                _swap_dir(os.path.join(stage, part), os.path.join(self.path, part))
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
 
     def compact(self) -> dict[int, int]:
         """Rewrite each partition with more files than
         ceil(rows / ROWS_PER_FILE) into that many files — the small-files
         maintenance every micro-batch-appended table needs (each
         `append_dedup` tick adds part-files; thousands of ticks make scans
-        metadata-bound). The file listing and the parquet footers pick the
-        partitions, so a table with nothing to compact runs no Spark job;
-        the chosen partitions are read once and go through the same rewrite
-        as merge_overwrite. Holds the table lock throughout: a write landing
-        between the read and the swap would be overwritten by the stale
-        stage. Returns {bucket: files_after} for the partitions it rewrote.
+        metadata-bound). The latest version's file list and the parquet
+        footers pick the partitions, so a table with nothing to compact
+        runs no Spark job; the chosen partitions are read once and
+        committed like a merge. Then it collects garbage: the table's
+        maintenance operation is where retired versions and crash debris
+        go. Holds the table lock throughout: a write landing between the
+        read and the commit would be dropped by the stale file list.
+        Returns {bucket: files_after} for the partitions it rewrote.
 
         At deployment scale this is the OPTIMIZE/rewrite-data-files job of
         a table format, scheduled off-peak; expressing it over plain
@@ -199,18 +262,19 @@ class PartitionedDealTableSink:
         """
         want: dict[int, int] = {}
         with table_lock(self.path):
-            for part in sorted(os.listdir(self.path)):
-                if not part.startswith(f"{PCOL}="):
-                    continue
-                live = os.path.join(self.path, part)
-                files = [os.path.join(live, f) for f in os.listdir(live) if f.endswith(".parquet")]
-                n_rows = sum(pq.read_metadata(f).num_rows for f in files)
+            version, files = self._snapshot()
+            by_part: dict[str, list[str]] = {}
+            for f in files:
+                by_part.setdefault(f.split("/", 1)[0], []).append(f)
+            for part, in_part in by_part.items():
+                n_rows = sum(pq.read_metadata(os.path.join(self.path, f)).num_rows for f in in_part)
                 n_files = max(1, -(-n_rows // ROWS_PER_FILE))  # ceil div
-                if len(files) > n_files:
+                if len(in_part) > n_files:
                     want[int(part.split("=", 1)[1])] = n_files
             if want:
-                rows = self._read_raw().where(F.col(PCOL).isin(list(want))).repartition(PCOL)
-                self._rewrite(rows, sorted(want))
+                rows = self._scan(_in_buckets(files, want)).repartition(PCOL)
+                self._commit(rows, version, files, sorted(want))
+            self._collect_garbage()
         return want
 
     def merge_overwrite(self, updates: DataFrame | pa.Table, on: Sequence[str]) -> None:
@@ -222,8 +286,9 @@ class PartitionedDealTableSink:
         bucket set comes from the driver-held rows, and the rebuilt local
         relation (a DataFrame's own schema, or the deal schema for Arrow
         rows) makes the merge's anti-join a broadcast. Only the partitions
-        they intersect are read, merged and rewritten; merge_update keeps
-        every update row, so each of those buckets has rows to stage.
+        they intersect are read, merged and rewritten, in one commit;
+        merge_update keeps every update row, so each of those buckets has
+        rows to write.
 
         The driver holds every update row, in either form: callers pass
         bounded sets (at most `max_deals` rows per enrichment tick, at most
@@ -237,5 +302,6 @@ class PartitionedDealTableSink:
                 return
             buckets = self._buckets_of(rows)
             local = self._with_bucket(self.spark.createDataFrame(rows, schema))
-            base = self._read_raw().where(F.col(PCOL).isin(buckets))
-            self._rewrite(merge_update(base, local, list(on)), buckets)
+            version, files = self._snapshot()
+            stored = self._scan(_in_buckets(files, buckets))
+            self._commit(merge_update(stored, local, list(on)), version, files, buckets)

@@ -1,10 +1,9 @@
 """Crash-interruption recovery for the deal sink — not replay
-idempotence (tests/test_sink_partitioned.py) but the partial-write
-protocol itself: a process killed mid-append leaves some part files in
-their partition, and one killed mid-swap leaves stage/backup dirs.
-Restart + redelivery must yield effectively-once output: a partial
-append healed without duplicates, orphaned stage/backup dirs swept (and
-a backup whose live dir vanished RESTORED, never deleted)."""
+idempotence (tests/test_sink_partitioned.py) but the commit protocol
+itself: a process killed mid-write leaves part files in bucket
+directories that no log entry names. Restart must read the old version
+or the new one, never a mix, and redelivery must yield each DEAL_KEY
+once, with no key lost."""
 
 from __future__ import annotations
 
@@ -12,32 +11,95 @@ import pytest
 
 pytestmark = pytest.mark.slow  # r10 test tier: see pytest.ini
 
+import glob
 import os
 import shutil
+from urllib.parse import urlparse
 
 from conftest import SF_SMALL
 from pyspark.sql import functions as F
 
-from spark_deal_observer_spark.operators.merge import DEAL_KEY
-from spark_deal_observer_spark.plans.deals import deals_df
+from spark_deal_observer_spark.operators.merge import DEAL_KEY, merge_update
+from spark_deal_observer_spark.plans.deals import REF_TS, deals_df
 from spark_deal_observer_spark.streaming.sink import PartitionedDealTableSink
 
 
-def test_deal_sink_append_heals_partial_append(spark, tmp_path):
-    """append_dedup after a crash mid-append-commit: some of the batch's
-    part files landed, the rest didn't. Redelivery must complete the
-    batch without duplicating the rows whose files made it in (the
-    anti-join self-heal at whole-file granularity)."""
+class Killed(Exception):
+    """The process died here."""
+
+
+def _kill_at(monkeypatch, name: str, after: int = 0) -> None:
+    """Kill the next write at its `after`-th call of `os.<name>`: `rename`
+    moves a staged part file into its bucket directory, `link` commits
+    the log entry that names the moved files."""
+    calls = []
+    real = getattr(os, name)
+
+    def dying(*args, **kwargs):
+        calls.append(1)
+        if len(calls) > after:
+            raise Killed(name)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(os, name, dying)
+
+
+def _on_disk(path: str) -> set[str]:
+    return set(glob.glob(os.path.join(path, "epoch_bucket=*", "*")))
+
+
+def _committed(sink) -> set[str]:
+    return {urlparse(u).path for u in sink.read().inputFiles()}
+
+
+def _n_keys(df) -> tuple[int, int]:
+    return df.count(), df.select(*DEAL_KEY).dropDuplicates().count()
+
+
+@pytest.mark.parametrize("point", [("rename", 1), ("link", 0)], ids=["mid-moves", "at-commit"])
+def test_deal_sink_crash_mid_merge_leaves_the_old_version(spark, tmp_path, monkeypatch, point):
+    """A merge over several buckets killed after moving some or all of
+    its part files, but before its commit, leaves the old version: every
+    bucket old, none new. After restart the same merge commits the new
+    version whole."""
+    path = str(tmp_path / "table")
+    sink = PartitionedDealTableSink(spark, path)
+    sink.append_dedup(deals_df(spark, SF_SMALL))
+    before = sink.read().localCheckpoint()
+    rows = before.orderBy("id").collect()
+    now = F.lit(REF_TS).cast("timestamp_ntz")
+    updates = (
+        before.where(F.col("activated_at_epoch") < 4622200)  # 2 buckets
+        .withColumn("submitted_at", now).localCheckpoint()
+    )
+
+    _kill_at(monkeypatch, *point)
+    with pytest.raises(Killed):
+        sink.merge_overwrite(updates, ["id"])
+    monkeypatch.undo()
+    assert _on_disk(path) > _committed(sink)  # the moved files are there, unnamed
+
+    restarted = PartitionedDealTableSink(spark, path)
+    assert restarted.read().orderBy("id").collect() == rows
+    restarted.merge_overwrite(updates, ["id"])
+    got, want = restarted.read(), merge_update(before, updates, ["id"])
+    assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
+
+
+def test_deal_sink_uncommitted_file_in_a_bucket_is_invisible(spark, tmp_path):
+    """A part file of a killed append in a bucket directory is not read:
+    the restarted table holds only the committed rows, and redelivery of
+    the whole batch yields every key once."""
     deals = deals_df(spark, SF_SMALL)
     first = deals.where(F.col("id") % 2 == 0)
     second = deals.where(F.col("id") % 2 == 1)
     path = str(tmp_path / "table")
     sink = PartitionedDealTableSink(spark, path)
     sink.append_dedup(first)
+    n_first = sink.count()
 
-    # crash mid-append of `second`: half its rows of epoch bucket 46220
-    # land as a committed part file inside that partition dir (no marker
-    # semantics for appends — parquet append is new-files-only)
+    # half of `second`'s rows of epoch bucket 46220, as a part file that
+    # landed in that partition's directory before the kill
     partial = second.where(
         (F.col("id") % 4 == 1) & (F.col("activated_at_epoch") < 4622100)
     )
@@ -51,49 +113,40 @@ def test_deal_sink_append_heals_partial_append(spark, tmp_path):
     )
 
     restarted = PartitionedDealTableSink(spark, path)
+    assert restarted.count() == n_first
     restarted.append_dedup(second)  # redelivery
-    got = restarted.read()
     n_keys = deals.select(*DEAL_KEY).dropDuplicates().count()
-    assert got.count() == got.select(*DEAL_KEY).dropDuplicates().count() == n_keys
+    assert _n_keys(restarted.read()) == (n_keys, n_keys)
 
 
-def test_deal_sink_gc_restores_lost_live_dir_and_sweeps_orphans(
-    spark, tmp_path
+def test_deal_sink_redelivery_after_a_killed_append_gives_each_key_once(
+    spark, tmp_path, monkeypatch
 ):
+    """An append killed at its commit leaves its part files moved in and
+    unnamed. Redelivery after restart appends the batch once; compact()
+    then deletes the killed write's files and keeps every row."""
+    deals = deals_df(spark, SF_SMALL)
     path = str(tmp_path / "table")
     sink = PartitionedDealTableSink(spark, path)
-    sink.append_dedup(deals_df(spark, SF_SMALL))
-    n = sink.count()
+    sink.append_dedup(deals.where(F.col("id") % 2 == 0))
+    n_first = sink.count()
 
-    # crash window A: staged dir written, swap never started
-    os.makedirs(f"{path}__stage_deadbeef")
-    # crash window B: live moved aside, staged rename never happened —
-    # the backup is the only copy
-    os.rename(path, f"{path}__old_cafef00d")
-    assert not os.path.exists(path)
+    second = deals.where(F.col("id") % 2 == 1)
+    _kill_at(monkeypatch, "link")
+    with pytest.raises(Killed):
+        sink.append_dedup(second)
+    monkeypatch.undo()
 
-    restarted = PartitionedDealTableSink(spark, path)
-    assert restarted.count() == n  # backup restored, not deleted
-    assert not os.path.exists(f"{path}__stage_deadbeef")
-    assert not os.path.exists(f"{path}__old_cafef00d")
-
-
-def test_partitioned_sink_sweeps_compact_orphans(spark, tmp_path):
-    path = str(tmp_path / "ptable")
-    sink = PartitionedDealTableSink(spark, path)
-    sink.append_dedup(deals_df(spark, SF_SMALL))
-    n = sink.count()
-    parts = sorted(d for d in os.listdir(path) if d.startswith("epoch_bucket="))
-
-    # crash mid-rewrite (compact or merge): the staged buckets orphaned,
-    # and one partition's backup left with its live dir missing
-    stage = f"{path}__stage_ab12"
-    os.makedirs(os.path.join(stage, parts[0]))
-    live = os.path.join(path, parts[1])
-    os.rename(live, live + "__old_ff00")
+    orphans = _on_disk(path) - _committed(sink)
+    assert orphans
 
     restarted = PartitionedDealTableSink(spark, path)
-    assert restarted.count() == n
-    assert not os.path.exists(stage)
-    assert os.path.isdir(live)
-    assert not os.path.exists(live + "__old_ff00")
+    assert restarted.count() == n_first
+    restarted.append_dedup(second)  # redelivery
+    n_keys = deals.select(*DEAL_KEY).dropDuplicates().count()
+    assert _n_keys(restarted.read()) == (n_keys, n_keys)
+
+    rows = restarted.read().orderBy("id").collect()
+    restarted.compact()
+    assert not orphans & _on_disk(path)
+    assert restarted.read().orderBy("id").collect() == rows

@@ -46,10 +46,11 @@ def test_three_loops_end_to_end(spark, tmp_path):
     # -- loop 2: enrichment state machine over the same table --------------
     now1 = F.lit(REF_TS).cast("timestamp_ntz")
     deals = sink.read()
-    # The dims are derived from the state table here; the tick's merge will
-    # REPLACE that table's files, so any plan still holding lineage into
-    # them would recompute from deleted paths. localCheckpoint snapshots
-    # the dims — the rule for anything read from a read-modify-write table.
+    # The dims are derived from the state table here, so they hold lineage
+    # into the version read above. That version stays readable until
+    # compact() collects it (RETAIN_S after a newer commit); the
+    # localCheckpoint snapshots free the dims from it, and each tick from
+    # re-deriving them.
     peers = (
         deals.where(F.col("miner_id") % 2 == 0)  # partial coverage, like fixtures
         .select("miner_id").dropDuplicates()
@@ -106,7 +107,7 @@ def test_three_loops_end_to_end(spark, tmp_path):
     # -- loop 3: egress of the now-eligible deals --------------------------
     res = submit_eligible(sink, lambda p: {"ingested": len(p)}, now=now1)
     # rows flagged THIS tick (some deals arrive pre-submitted in the corpus)
-    flagged = t3.sparkSession.read.parquet(table).where(F.col("submitted_at") == now1)
+    flagged = sink.read().where(F.col("submitted_at") == now1)
     # every submitted deal was resolved and not previously submitted
     assert res["submitted"] > 0
     assert flagged.count() == res["submitted"]
@@ -116,7 +117,7 @@ def test_three_loops_end_to_end(spark, tmp_path):
     assert res2["submitted"] == 0
 
     # -- layout: every loop's write kept the table epoch-partitioned -------
-    entries = os.listdir(table)
+    entries = [e for e in os.listdir(table) if not e.startswith("_")]  # _log is not data
     assert not [e for e in entries if e.endswith(".parquet")]  # no flat part files
     parts = [e for e in entries if os.path.isdir(os.path.join(table, e))]
     assert parts and all(p.startswith("epoch_bucket=") for p in parts), parts
@@ -236,7 +237,7 @@ def test_three_loops_concurrent_soak(spark, tmp_path):
             with lock_stats:
                 done_enrich = len(enrich_ticks) >= 3
                 done_egress = sum(r["submitted"] for r in egress_results) > 0
-            n_now = sink.count()  # holds the table lock, like the ticks
+            n_now = sink.count()
             if done_enrich and done_egress and n_now == n_expected:
                 # one more enrichment+egress round over the final table
                 with lock_stats:

@@ -1,13 +1,16 @@
 """Partition-scoped sink semantics: a micro-batch's writes touch ONLY the
-epoch-bucket partitions it intersects — asserted by listing the table's data
-files before/after (untouched partitions keep an identical file set, since
-every Spark write invents fresh part-file names)."""
+epoch-bucket partitions it intersects — asserted by listing the table's
+committed data files before/after (untouched partitions keep an identical
+file set, since every Spark write invents fresh part-file names)."""
 
 from __future__ import annotations
 
 import glob
 import os
+import shutil
 import threading
+import time
+from urllib.parse import urlparse
 
 from conftest import SF_SMALL, count_jobs
 from pyspark.sql import functions as F
@@ -24,20 +27,31 @@ from spark_deal_observer_spark.plans.deals import REF_TS, deals_df, eligible_dea
 from spark_deal_observer_spark.streaming.concurrency import table_lock
 from spark_deal_observer_spark.streaming.egress import submit_eligible
 from spark_deal_observer_spark.streaming.enrichment import enrich_tick
-from spark_deal_observer_spark.streaming.sink import BUCKET_WIDTH, PartitionedDealTableSink
+from spark_deal_observer_spark.streaming.sink import (
+    BUCKET_WIDTH,
+    RETAIN_S,
+    PartitionedDealTableSink,
+)
 
 MID_EPOCH = 4622500  # sf0.001 derived epochs span [4622000, 4623000)
 
 
-def _files(path: str) -> dict[str, set[str]]:
-    """{partition_dir: {parquet file names}} for a partitioned table."""
+def _paths(df) -> set[str]:
+    """The local paths of the files `df` reads."""
+    return {urlparse(u).path for u in df.inputFiles()}
+
+
+def _files(sink) -> dict[str, set[str]]:
+    """{partition_dir: {parquet file names}} of the table's latest version:
+    the committed files, not whatever the directories hold."""
     out: dict[str, set[str]] = {}
-    for root, _, files in os.walk(path):
-        part = os.path.relpath(root, path)
-        names = {f for f in files if f.endswith(".parquet")}
-        if names and part.startswith("epoch_bucket="):
-            out[part] = names
+    for f in _paths(sink.read()):
+        out.setdefault(os.path.basename(os.path.dirname(f)), set()).add(os.path.basename(f))
     return out
+
+
+def _on_disk(sink) -> set[str]:
+    return set(glob.glob(os.path.join(sink.path, "epoch_bucket=*", "*")))
 
 
 def test_append_touches_only_batch_partitions(spark, tmp_path):
@@ -47,11 +61,11 @@ def test_append_touches_only_batch_partitions(spark, tmp_path):
     sink = PartitionedDealTableSink(spark, str(tmp_path / "table"))
 
     sink.append_dedup(lo)
-    before = _files(sink.path)
+    before = _files(sink)
     assert before, "expected partition dirs"
 
     sink.append_dedup(hi)
-    after = _files(sink.path)
+    after = _files(sink)
     lo_parts = set(before)
     assert set(after) > lo_parts  # new partitions appeared
     for part in lo_parts:  # old partitions byte-identical (same file set)
@@ -74,16 +88,15 @@ def test_merge_rewrites_only_intersected_partitions(spark, tmp_path):
     deals = deals_df(spark, SF_SMALL)
     sink = PartitionedDealTableSink(spark, str(tmp_path / "table"))
     sink.append_dedup(deals)
-    before = _files(sink.path)
+    before = _files(sink)
 
     touched_pred = F.col("activated_at_epoch") < 4622200  # 2 buckets of ~10
     now = F.lit(REF_TS).cast("timestamp_ntz")
     updates = sink.read().where(touched_pred).withColumn("submitted_at", now)
     n_updates = updates.count()
-    updates = updates.localCheckpoint()  # pin rows: the swap replaces the files
     sink.merge_overwrite(updates, ["id"])
 
-    after = _files(sink.path)
+    after = _files(sink)
     assert set(after) == set(before)
     touched = {p for p in before if int(p.split("=")[1]) < 4622200 // BUCKET_WIDTH}
     assert touched, "expected intersected partitions"
@@ -126,7 +139,7 @@ def test_compact_collapses_small_files_and_preserves_data(spark, tmp_path):
         sink.append_dedup(s)
 
     before_rows = sink.read().orderBy("id").collect()
-    before_files = _files(sink.path)
+    before_files = _files(sink)
     assert any(len(v) > 1 for v in before_files.values()), "need multi-file partitions"
 
     # the footers pick the partitions; they are read once and rewritten once
@@ -134,7 +147,7 @@ def test_compact_collapses_small_files_and_preserves_data(spark, tmp_path):
     assert rewritten, "expected at least one partition rewritten"
     assert jobs <= 3
 
-    after_files = _files(sink.path)
+    after_files = _files(sink)
     assert set(after_files) == set(before_files)  # no partition lost
     for part, names in after_files.items():
         assert len(names) == 1, part  # row counts far below the target => 1 file
@@ -143,7 +156,7 @@ def test_compact_collapses_small_files_and_preserves_data(spark, tmp_path):
     # idempotent: a second compact is a no-op, rewrites nothing and runs
     # no Spark job
     assert count_jobs(spark, sink.compact) == ({}, 0)
-    assert _files(sink.path) == after_files
+    assert _files(sink) == after_files
 
 
 def _counting_filter(spark):
@@ -184,7 +197,7 @@ def test_merge_overwrite_equals_merge_update_over_whole_table(spark, tmp_path):
     deals = deals_df(spark, SF_SMALL)
     sink = PartitionedDealTableSink(spark, str(tmp_path / "table"))
     sink.append_dedup(deals)
-    before = sink.read().localCheckpoint()  # pin rows: the swap replaces the files
+    before = sink.read()  # a snapshot: the merge below does not change it
 
     peers, pays = _lookups(before)
     now = F.lit(REF_TS).cast("timestamp_ntz")
@@ -222,9 +235,9 @@ def test_merge_overwrite_evaluates_updates_once(spark, tmp_path):
 
 
 def test_compact_waits_for_the_table_lock(spark, tmp_path):
-    """compact() reads, rewrites and swaps partitions inside the table lock:
-    while another thread holds it, compaction cannot finish, so no write
-    landing mid-compaction is overwritten by a stale stage."""
+    """compact() reads, rewrites and commits partitions inside the table
+    lock: while another thread holds it, compaction cannot finish, so no
+    write landing mid-compaction is dropped by a stale file list."""
     deals = deals_df(spark, SF_SMALL).where(F.col("activated_at_epoch") < 4622100)
     sink = PartitionedDealTableSink(spark, str(tmp_path / "table"))
     for i in range(2):  # one bucket, two files
@@ -243,22 +256,70 @@ def test_compact_waits_for_the_table_lock(spark, tmp_path):
     assert sink.read().orderBy("id").collect() == rows
 
 
-def test_count_waits_for_the_table_lock(spark, tmp_path):
-    """count() is an eager read, so it holds the table lock through its
-    action: while another thread holds the lock it cannot return, and no
-    merge swaps a bucket out from under it."""
+def test_read_is_a_snapshot_and_takes_no_lock(spark, tmp_path):
+    """A read resolves one committed version: an append and a merge
+    committed after it neither change its DataFrame nor break it (the
+    merge's files replace the ones it reads). Neither it nor count()
+    waits for the table lock."""
+    deals = deals_df(spark, SF_SMALL)
     sink = PartitionedDealTableSink(spark, str(tmp_path / "table"))
-    sink.append_dedup(deals_df(spark, SF_SMALL))
-    n = sink.count()
-    out = {}
-    worker = threading.Thread(target=lambda: out.update(n=sink.count()))
+    sink.append_dedup(deals.where(F.col("activated_at_epoch") < MID_EPOCH))
+    now = F.lit(REF_TS).cast("timestamp_ntz")
+    df = sink.read()
+    old = (df.count(), df.where(F.col("submitted_at") == now).count())
 
+    sink.append_dedup(deals.where(F.col("activated_at_epoch") >= MID_EPOCH))
+    sink.merge_overwrite(sink.read().withColumn("submitted_at", now), ["id"])
+    out = {}
+
+    def reads():
+        out["old"] = (df.count(), df.where(F.col("submitted_at") == now).count())
+        out["new"] = sink.count()
+
+    worker = threading.Thread(target=reads)
     with table_lock(sink.path):
         worker.start()
-        worker.join(timeout=3)
-        assert worker.is_alive(), "count() finished while another thread held the lock"
-    worker.join(timeout=120)
-    assert out == {"n": n}
+        worker.join(timeout=120)
+        assert not worker.is_alive(), "a read waited for the table lock"
+    n_keys = deals.select(*DEAL_KEY).dropDuplicates().count()
+    assert out == {"old": old, "new": n_keys}
+    assert old[0] < n_keys and old[1] < old[0]
+
+
+def test_compact_collects_versions_past_retention(spark, tmp_path):
+    """compact() collects garbage: a version's files survive while its
+    successor is younger than RETAIN_S, so a read of it still runs, and
+    go once the successor is older. Files no version names (a crashed
+    write's part file, a stage) go at once."""
+    deals = deals_df(spark, SF_SMALL)
+    sink = PartitionedDealTableSink(spark, str(tmp_path / "table"))
+    sink.append_dedup(deals)
+    old = sink.read()
+    rows = old.orderBy("id").collect()
+    now = F.lit(REF_TS).cast("timestamp_ntz")
+    updates = old.where(F.col("activated_at_epoch") < 4622200).withColumn("submitted_at", now)
+    sink.merge_overwrite(updates, ["id"])
+    committed = _paths(old) | _paths(sink.read())
+    assert _paths(old) - _paths(sink.read()), "expected files the merge retired"
+
+    bucket = os.path.join(sink.path, f"epoch_bucket={4622000 // BUCKET_WIDTH}")
+    orphan = os.path.join(bucket, "part-orphan.parquet")
+    shutil.copy(min(_paths(old)), orphan)
+    os.makedirs(os.path.join(sink.path, "_stage_deadbeef"))
+
+    sink.compact()
+    committed |= _paths(sink.read())
+    assert _on_disk(sink) == committed
+    assert not glob.glob(os.path.join(sink.path, "_stage_*"))
+    assert old.orderBy("id").collect() == rows
+
+    aged = time.time() - RETAIN_S - 60
+    for entry in glob.glob(os.path.join(sink.path, "_log", "*.json")):
+        os.utime(entry, (aged, aged))
+    latest = sink.read().orderBy("id").collect()
+    assert sink.compact() == {}
+    assert _on_disk(sink) == _paths(sink.read())
+    assert sink.read().orderBy("id").collect() == latest
 
 
 def test_enrich_tick_equals_the_hand_composition(spark, tmp_path):
@@ -333,11 +394,11 @@ def test_pinned_schema_reads_see_new_buckets(spark, tmp_path):
 def test_empty_merge_leaves_the_table_untouched(spark, tmp_path):
     sink = PartitionedDealTableSink(spark, str(tmp_path / "table"))
     sink.append_dedup(deals_df(spark, SF_SMALL))
-    before = _files(sink.path)
+    before = _files(sink)
 
     sink.merge_overwrite(sink.read().where(F.lit(False)), ["id"])
-    assert _files(sink.path) == before
-    assert not glob.glob(os.path.join(str(tmp_path), "**", "*__stage_*"), recursive=True)
+    assert _files(sink) == before
+    assert not glob.glob(os.path.join(str(tmp_path), "**", "_stage_*"), recursive=True)
 
 
 def _wire(r) -> tuple:
