@@ -31,7 +31,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..plans.deals import eligible_rows
-from .concurrency import table_lock
 from .sink import PartitionedDealTableSink
 
 Poster = Callable[[list[dict[str, Any]]], dict[str, int]]
@@ -59,50 +58,49 @@ def submit_eligible(
     (spark-api-submit-deals.js:17-29).
 
     The tick reads one version of the table and commits its mark as a
-    later one, so the whole read-eligible → POST → mark-submitted span
-    holds the table lock, as every writer does: under the reference's
-    concurrent three-loop deployment, an enrichment merge committed
-    between our read and our mark would be overwritten by mark rows read
-    before it (lost update). The lock's reentrancy makes the nested
-    merge_overwrite acquisition free (streaming/concurrency.py). Readers
-    of the table take no lock.
+    later one; ingest appends and enrichment merges commit meanwhile,
+    during the POSTs too. The mark is a merge of the rows the tick read,
+    and no other loop changes them — enrichment updates only rows with
+    `payload_cid IS NULL`, and these have one — so if another merge
+    rewrote one of their files first, the mark re-applies the same rows
+    over the latest version (streaming/sink.py's commit rule), with no
+    second POST.
     """
     result = {"submitted": 0, "ingested": 0, "skipped": 0, "failed_batches": 0}
-    with table_lock(sink.path):
-        deals = sink.read()
-        rows = eligible_rows(deals).toArrow()
-        accepted: list[pa.Table] = []
-        for start in range(0, rows.num_rows, BATCH_SIZE):
-            batch = rows.slice(start, BATCH_SIZE)
-            payload = [
-                {
-                    "minerId": f"f0{r['miner_id']}",
-                    "clientId": f"f0{r['client_id']}",
-                    "pieceCid": r["piece_cid"],
-                    "pieceSize": str(r["piece_size"]),  # bigint→string (F10)
-                    "payloadCid": r["payload_cid"],
-                    "expiresAt": r["expires_at"].isoformat(),
-                }
-                for r in batch.select(_PAYLOAD_COLUMNS).to_pylist()
-            ]
-            try:
-                resp = poster(payload)
-            except Exception:  # batch skipped, not retried this pass (T7)
-                log.exception("egress: POST of %d deals failed, batch skipped", len(payload))
-                result["failed_batches"] += 1
-                continue
-            result["submitted"] += len(payload)
-            result["ingested"] += int(resp.get("ingested", len(payload)))
-            result["skipped"] += int(resp.get("skipped", 0))
-            accepted.append(batch)
+    deals = sink.read()
+    rows = eligible_rows(deals).toArrow()
+    accepted: list[pa.Table] = []
+    for start in range(0, rows.num_rows, BATCH_SIZE):
+        batch = rows.slice(start, BATCH_SIZE)
+        payload = [
+            {
+                "minerId": f"f0{r['miner_id']}",
+                "clientId": f"f0{r['client_id']}",
+                "pieceCid": r["piece_cid"],
+                "pieceSize": str(r["piece_size"]),  # bigint→string (F10)
+                "payloadCid": r["payload_cid"],
+                "expiresAt": r["expires_at"].isoformat(),
+            }
+            for r in batch.select(_PAYLOAD_COLUMNS).to_pylist()
+        ]
+        try:
+            resp = poster(payload)
+        except Exception:  # batch skipped, not retried this pass (T7)
+            log.exception("egress: POST of %d deals failed, batch skipped", len(payload))
+            result["failed_batches"] += 1
+            continue
+        result["submitted"] += len(payload)
+        result["ingested"] += int(resp.get("ingested", len(payload)))
+        result["skipped"] += int(resp.get("skipped", 0))
+        accepted.append(batch)
 
-        if accepted:
-            flag = now if now is not None else F.current_timestamp().cast("timestamp_ntz")
-            # over a one-row local relation the optimizer folds `flag` to a
-            # value: evaluating it runs no Spark job
-            stamp = sink.spark.createDataFrame(pa.table({"x": [0]})).select(flag).first()[0]
-            marked = pa.concat_tables(accepted).select(deals.columns)
-            i = marked.schema.get_field_index("submitted_at")
-            stamps = pa.array([stamp] * marked.num_rows, marked.schema.field(i).type)
-            sink.merge_overwrite(marked.set_column(i, "submitted_at", stamps), ["id"])
-        return result
+    if accepted:
+        flag = now if now is not None else F.current_timestamp().cast("timestamp_ntz")
+        # over a one-row local relation the optimizer folds `flag` to a
+        # value: evaluating it runs no Spark job
+        stamp = sink.spark.createDataFrame(pa.table({"x": [0]})).select(flag).first()[0]
+        marked = pa.concat_tables(accepted).select(deals.columns)
+        i = marked.schema.get_field_index("submitted_at")
+        stamps = pa.array([stamp] * marked.num_rows, marked.schema.field(i).type)
+        sink.merge_overwrite(marked.set_column(i, "submitted_at", stamps), ["id"])
+    return result

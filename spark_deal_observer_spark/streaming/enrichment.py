@@ -20,7 +20,6 @@ import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 
 from ..operators.state import RESOLVED, TERMINAL, UNRESOLVED, resolve_tick
-from .concurrency import table_lock
 from .sink import PartitionedDealTableSink
 
 
@@ -42,15 +41,14 @@ def enrich_tick(
     Frames kept longer than that must be snapshots (`localCheckpoint()`)
     or built from another source.
 
-    The whole read → resolve → merge span holds the table lock, for the
-    reason `submit_eligible` does: an egress mark committed between the
-    read and the merge would be overwritten by rows read before it (lost
-    update). The lock is reentrant, so the merge's own acquisition is free
-    (streaming/concurrency.py).
+    Other loops commit between the tick's read and its merge. The merge
+    re-applies the same attempted rows over the latest version if another
+    merge rewrote one of their files first (streaming/sink.py's commit
+    rule). No other loop changes those rows — egress marks only rows
+    with a `payload_cid`, and the queue takes only rows without one.
     """
-    with table_lock(sink.path):
-        rows = resolve_tick(sink.read(), miner_peers, payload_cids, now).toArrow()
-        sink.merge_overwrite(rows, ["id"])
+    rows = resolve_tick(sink.read(), miner_peers, payload_cids, now).toArrow()
+    sink.merge_overwrite(rows, ["id"])
     states = rows.column("payload_retrievability_state")
     return {
         "attempted": rows.num_rows,

@@ -29,27 +29,48 @@ The table has one fixed schema, the deal schema: `DEAL_SELECT_EXPRS` over
 passes it to `spark.read.schema(...)`, so no read infers a schema, and a
 table with no commit yet reads as zero rows.
 
-The commit point is a version log. `_log/<v>.json` holds the whole live
-file list of version v (`epoch_bucket=N/<part file>`, relative to the
-table). A write stages its part files under a `_stage_*` directory
+The commit point is a version log, and it is the only concurrency
+control. `_log/<v>.json` holds the whole live file list of version v
+(`epoch_bucket=N/<part file>`, relative to the table). A write records
+the version it read, stages its part files under a `_stage_*` directory
 inside the table, moves them into their bucket directories (keeping
 Spark's names), then commits `<v+1>.json`: the entry is written in full
 in the stage and hard-linked to its name, a put-if-absent write that
 never shows a reader a partial entry and fails if another writer took
-v+1. An append adds files; a merge or a compaction replaces the files of
-the buckets it rewrote, all of them in one commit. So a crash before the
-link leaves version v, and a file no entry names is invisible.
+v+1. An append adds files; a merge or a compaction removes exactly the
+files it read and adds their rewrite, all in one commit. So a crash
+before the link leaves version v, and a file no entry names is
+invisible.
 
-A read opens the latest entry and hands its files to Spark: it takes no
-lock, lists no data directory and replays nothing, and its DataFrame is a
-snapshot of that version that later commits neither change nor break.
+A link that fails means another write committed first; the write reads
+the latest version again (optimistic concurrency over a put-if-absent
+log, as in Delta Lake):
+  * if every file it removes is still live, it rebases — the latest
+    list, less its removed files, plus its added ones — and links again
+    with no rewrite. An append removes nothing, so it always rebases: a
+    merge changes no key, so its anti-join stays valid across a merge,
+    and appends come from the one ingest query, so none races another.
+  * otherwise another merge or compaction rewrote a file it read: it
+    deletes what it staged and redoes against the latest version. A
+    merge re-applies the same driver-held update rows (no second collect,
+    POST or lookup); a compaction recomputes. The enrichment and egress
+    ticks update disjoint rows (`payload_cid IS NULL` against
+    `IS NOT NULL`), so re-applying one's rows over the other's commit
+    loses neither.
+Each failed link is another writer's commit, so the table always moves
+forward.
+
+A read opens the latest entry and hands its files to Spark: it lists no
+data directory and replays nothing, and its DataFrame is a snapshot of
+that version that later commits neither change nor break.
 Spark still checks each file it is handed, and for more than 32 files
 (`spark.sql.sources.parallelPartitionDiscovery.threshold`) it does so in
 a Spark job; `compact()` keeps the count down.
 Retired files stay on disk until `compact()` collects garbage: a version
 whose successor was committed more than `RETAIN_S` ago goes, then every
-data file no remaining version names (crash orphans too) and every
-stage. The latest version is never collected.
+data file no remaining version names and every stage, once older than
+`RETAIN_S` — a younger one may be a write in flight. The latest version
+is never collected.
 
 Durability note: the commit relies on `os.link` failing on an existing
 name and on `os.rename` within one filesystem, as on a local POSIX
@@ -66,7 +87,7 @@ import os
 import shutil
 import time
 import uuid
-from collections.abc import Iterable, Sequence
+from collections.abc import Callable, Iterable, Sequence
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -77,7 +98,6 @@ from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ..operators.merge import DEAL_KEY, dedup_insert, merge_update
 from ..plans.deals import DEAL_SELECT_EXPRS, EVENTS_DDL
-from .concurrency import table_lock
 
 PCOL = "epoch_bucket"
 BUCKET_WIDTH = 100
@@ -169,54 +189,69 @@ class PartitionedDealTableSink:
         """The number of deal rows in the latest version."""
         return self.read().count()
 
-    def _commit(
-        self, rows: DataFrame, version: int, files: list[str], replace: Sequence[int] = ()
-    ) -> None:
-        """Write `rows` as new part files and commit them over `version`,
-        whose files are `files`: the next version lists those, less the
-        files of the buckets in `replace`, plus the new ones. A write that
-        adds and replaces nothing commits nothing. Runs under the table
-        lock, so `version` is still the latest; a writer in another
-        process that took the next number first makes the link raise
-        FileExistsError."""
-        stage = os.path.join(self.path, f"{STAGE}{uuid.uuid4().hex[:8]}")
-        try:
-            writer = rows.write.option("maxRecordsPerFile", ROWS_PER_FILE)
-            writer.partitionBy(PCOL).parquet(stage)
-            added = []
-            for staged in glob.glob(os.path.join(stage, f"{PCOL}=*", "*.parquet")):
-                rel = os.path.relpath(staged, stage)
-                os.makedirs(os.path.join(self.path, os.path.dirname(rel)), exist_ok=True)
-                os.rename(staged, os.path.join(self.path, rel))
-                added.append(rel)
-            if not added and not replace:
-                return
-            gone = set(_in_buckets(files, replace))
-            live = sorted([p for p in files if p not in gone] + added)
-            entry = os.path.join(stage, "entry.json")
-            with open(entry, "w") as f:
-                json.dump({"files": live}, f)
-            os.makedirs(os.path.join(self.path, LOG), exist_ok=True)
-            os.link(entry, self._entry(version + 1))
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
+    def _commit(self, plan: Callable[[list[str]], tuple[DataFrame | None, list[str]]]) -> None:
+        """Commit one write over the latest version. `plan(files)` gets
+        that version's live files and returns (rows, removed): the rows
+        to write as new part files (None for none) and the files of
+        `files` they replace. The next version lists `files`, less
+        `removed`, plus the new ones; a write that adds and removes
+        nothing commits nothing.
+
+        When the link finds the next version taken, the write reads the
+        latest version: if `removed` is all still live it rebases onto it
+        and links again; otherwise it deletes its staged files and calls
+        `plan` again over the latest files (the module docstring's rule)."""
+        version, files = self._snapshot()
+        while True:
+            rows, removed = plan(files)
+            stage = os.path.join(self.path, f"{STAGE}{uuid.uuid4().hex[:8]}")
+            try:
+                added = []
+                if rows is not None:
+                    writer = rows.write.option("maxRecordsPerFile", ROWS_PER_FILE)
+                    writer.partitionBy(PCOL).parquet(stage)
+                for staged in glob.glob(os.path.join(stage, f"{PCOL}=*", "*.parquet")):
+                    rel = os.path.relpath(staged, stage)
+                    os.makedirs(os.path.join(self.path, os.path.dirname(rel)), exist_ok=True)
+                    os.rename(staged, os.path.join(self.path, rel))
+                    added.append(rel)
+                if not added and not removed:
+                    return
+                entry = os.path.join(stage, "entry.json")
+                os.makedirs(os.path.join(self.path, LOG), exist_ok=True)
+                while set(removed) <= set(files):
+                    with open(entry, "w") as f:
+                        json.dump({"files": sorted((set(files) - set(removed)) | set(added))}, f)
+                    try:
+                        os.link(entry, self._entry(version + 1))
+                        return
+                    except FileExistsError:
+                        version, files = self._snapshot()
+                for rel in added:
+                    os.remove(os.path.join(self.path, rel))
+            finally:
+                shutil.rmtree(stage, ignore_errors=True)
 
     def _collect_garbage(self) -> None:
         """Delete each version whose successor was committed more than
         `RETAIN_S` ago (never the latest), then every data file that no
-        remaining version names and every stage. Runs under the table
-        lock, so no write of this process sits between its moves and its
-        commit: an unnamed file is a retired or a crashed write's."""
+        remaining version names and every stage, once its mtime is older
+        than `RETAIN_S`. A younger unnamed file or stage may belong to a
+        write between its moves and its link; an older one is a retired
+        or a crashed write's (a retired file is older than the successor
+        that retired it)."""
+        old = time.time() - RETAIN_S
         versions = self._versions()
-        for old, successor in zip(versions, versions[1:]):
-            if time.time() - os.path.getmtime(self._entry(successor)) > RETAIN_S:
-                os.remove(self._entry(old))
+        for v, successor in zip(versions, versions[1:]):
+            if os.path.getmtime(self._entry(successor)) < old:
+                os.remove(self._entry(v))
         live = {f for v in self._versions() for f in self._files(v)}
         for f in glob.glob(os.path.join(self.path, f"{PCOL}=*", "*")):
-            if os.path.relpath(f, self.path) not in live:
+            if os.path.relpath(f, self.path) not in live and os.path.getmtime(f) < old:
                 os.remove(f)
         for stage in glob.glob(os.path.join(self.path, f"{STAGE}*")):
-            shutil.rmtree(stage, ignore_errors=True)
+            if os.path.getmtime(stage) < old:
+                shutil.rmtree(stage, ignore_errors=True)
 
     def append_dedup(self, batch: DataFrame) -> None:
         """Dedup-insert that anti-joins against ONLY the batch's partitions.
@@ -227,18 +262,19 @@ class PartitionedDealTableSink:
         one scan of it: the source is read, and its `observe` metrics
         counted, once per micro-batch. The probe collects the one epoch
         column as Arrow and takes its bucket set on the driver, so it runs
-        no shuffle. The table lock makes the anti-join + commit one atomic
-        span vs concurrent loop ticks (streaming/concurrency.py)."""
+        no shuffle. The append removes no file, so a commit that beats it
+        never makes it redo: it rebases its new files onto that commit."""
         batch = self._with_bucket(batch).persist()
         try:
-            with table_lock(self.path):
-                version, files = self._snapshot()
-                # Micro-batches are epoch-contiguous: this is a handful of ints.
-                buckets = self._buckets_of(batch.select("activated_at_epoch").toArrow())
+            # Micro-batches are epoch-contiguous: this is a handful of ints.
+            buckets = self._buckets_of(batch.select("activated_at_epoch").toArrow())
+
+            def plan(files: list[str]) -> tuple[DataFrame, list[str]]:
                 stored = self._scan(_in_buckets(files, buckets))
                 # back to the deal column order (the anti-join puts the key first)
-                new_rows = dedup_insert(batch, stored, DEAL_KEY).select(*batch.columns)
-                self._commit(new_rows, version, files)
+                return dedup_insert(batch, stored, DEAL_KEY).select(*batch.columns), []
+
+            self._commit(plan)
         finally:
             batch.unpersist()
 
@@ -249,20 +285,22 @@ class PartitionedDealTableSink:
         `append_dedup` tick adds part-files; thousands of ticks make scans
         metadata-bound). The latest version's file list and the parquet
         footers pick the partitions, so a table with nothing to compact
-        runs no Spark job; the chosen partitions are read once and
-        committed like a merge. Then it collects garbage: the table's
-        maintenance operation is where retired versions and crash debris
-        go. Holds the table lock throughout: a write landing between the
-        read and the commit would be dropped by the stale file list.
-        Returns {bucket: files_after} for the partitions it rewrote.
+        runs no Spark job; the chosen partitions' files are read once and
+        replaced in one commit. A write committed meanwhile that left
+        those files live (an append) is kept by the rebase; one that
+        rewrote them makes the compaction recompute. Then it collects
+        garbage: the table's maintenance operation is where retired
+        versions and crash debris go. Returns {bucket: files_after} for
+        the partitions it rewrote.
 
         At deployment scale this is the OPTIMIZE/rewrite-data-files job of
         a table format, scheduled off-peak; expressing it over plain
         parquet keeps the sink self-contained.
         """
         want: dict[int, int] = {}
-        with table_lock(self.path):
-            version, files = self._snapshot()
+
+        def plan(files: list[str]) -> tuple[DataFrame | None, list[str]]:
+            want.clear()
             by_part: dict[str, list[str]] = {}
             for f in files:
                 by_part.setdefault(f.split("/", 1)[0], []).append(f)
@@ -271,37 +309,42 @@ class PartitionedDealTableSink:
                 n_files = max(1, -(-n_rows // ROWS_PER_FILE))  # ceil div
                 if len(in_part) > n_files:
                     want[int(part.split("=", 1)[1])] = n_files
-            if want:
-                rows = self._scan(_in_buckets(files, want)).repartition(PCOL)
-                self._commit(rows, version, files, sorted(want))
-            self._collect_garbage()
+            read = _in_buckets(files, want)
+            return (self._scan(read).repartition(PCOL) if want else None), read
+
+        self._commit(plan)
+        self._collect_garbage()
         return want
 
     def merge_overwrite(self, updates: DataFrame | pa.Table, on: Sequence[str]) -> None:
         """Partition-scoped MERGE: `updates` holds only the changed rows,
         as a DataFrame or as a `pyarrow.Table` of deal rows the caller
-        already holds (the enrichment tick's attempted rows, egress's mark). A DataFrame is
-        collected to the driver as Arrow once, inside the lock — its plan
-        runs once; an Arrow table is used as it is, with no collect. The
-        bucket set comes from the driver-held rows, and the rebuilt local
-        relation (a DataFrame's own schema, or the deal schema for Arrow
-        rows) makes the merge's anti-join a broadcast. Only the partitions
-        they intersect are read, merged and rewritten, in one commit;
-        merge_update keeps every update row, so each of those buckets has
-        rows to write.
+        already holds (the enrichment tick's attempted rows, egress's
+        mark). A DataFrame is collected to the driver as Arrow once — its
+        plan runs once; an Arrow table is used as it is, with no collect.
+        The bucket set comes from the driver-held rows, and the rebuilt
+        local relation (a DataFrame's own schema, or the deal schema for
+        Arrow rows) makes the merge's anti-join a broadcast. Only the
+        files of the partitions they intersect are read, merged and
+        replaced, in one commit; merge_update keeps every update row, so
+        each of those buckets has rows to write. If another merge or a
+        compaction replaced one of those files first, the merge redoes
+        over the latest version with the same local rows.
 
         The driver holds every update row, in either form: callers pass
         bounded sets (at most `max_deals` rows per enrichment tick, at most
         the accepted rows of an egress tick)."""
-        with table_lock(self.path):
-            if isinstance(updates, DataFrame):
-                schema, rows = updates.schema, updates.toArrow()
-            else:
-                schema, rows = self._deal_schema, updates
-            if rows.num_rows == 0:
-                return
-            buckets = self._buckets_of(rows)
-            local = self._with_bucket(self.spark.createDataFrame(rows, schema))
-            version, files = self._snapshot()
-            stored = self._scan(_in_buckets(files, buckets))
-            self._commit(merge_update(stored, local, list(on)), version, files, buckets)
+        if isinstance(updates, DataFrame):
+            schema, rows = updates.schema, updates.toArrow()
+        else:
+            schema, rows = self._deal_schema, updates
+        if rows.num_rows == 0:
+            return
+        buckets = self._buckets_of(rows)
+        local = self._with_bucket(self.spark.createDataFrame(rows, schema))
+
+        def plan(files: list[str]) -> tuple[DataFrame, list[str]]:
+            read = _in_buckets(files, buckets)
+            return merge_update(self._scan(read), local, list(on)), read
+
+        self._commit(plan)

@@ -14,6 +14,7 @@ pytestmark = pytest.mark.slow  # r10 test tier: see pytest.ini
 import glob
 import os
 import shutil
+import time
 from urllib.parse import urlparse
 
 from conftest import SF_SMALL
@@ -21,7 +22,7 @@ from pyspark.sql import functions as F
 
 from spark_deal_observer_spark.operators.merge import DEAL_KEY, merge_update
 from spark_deal_observer_spark.plans.deals import REF_TS, deals_df
-from spark_deal_observer_spark.streaming.sink import PartitionedDealTableSink
+from spark_deal_observer_spark.streaming.sink import RETAIN_S, PartitionedDealTableSink
 
 
 class Killed(Exception):
@@ -124,7 +125,9 @@ def test_deal_sink_redelivery_after_a_killed_append_gives_each_key_once(
 ):
     """An append killed at its commit leaves its part files moved in and
     unnamed. Redelivery after restart appends the batch once; compact()
-    then deletes the killed write's files and keeps every row."""
+    keeps the killed write's files while they are younger than RETAIN_S
+    (they could be a write in flight), deletes them once older, and keeps
+    every row."""
     deals = deals_df(spark, SF_SMALL)
     path = str(tmp_path / "table")
     sink = PartitionedDealTableSink(spark, path)
@@ -147,6 +150,11 @@ def test_deal_sink_redelivery_after_a_killed_append_gives_each_key_once(
     assert _n_keys(restarted.read()) == (n_keys, n_keys)
 
     rows = restarted.read().orderBy("id").collect()
+    restarted.compact()
+    assert orphans <= _on_disk(path)
+    aged = time.time() - RETAIN_S - 60
+    for f in orphans:
+        os.utime(f, (aged, aged))
     restarted.compact()
     assert not orphans & _on_disk(path)
     assert restarted.read().orderBy("id").collect() == rows

@@ -132,9 +132,10 @@ def test_three_loops_concurrent_soak(spark, tmp_path):
     witness the isolation story. Here all three run as concurrent
     streaming queries with overlapping 1-second triggers against the
     same state table — ingest as the file-source query, enrichment and
-    egress as rate-source-clocked tick loops. The engine serializes each
-    tick's span (streaming/concurrency.py); the test takes no lock of its
-    own. Invariants at the end: no lost
+    egress as rate-source-clocked tick loops. Each write commits through
+    the table's version log, rebasing over or redoing after a commit that
+    beat it (streaming/sink.py); nothing else orders the loops.
+    Invariants at the end: no lost
     updates (every ingested key present exactly once despite partition
     merge rewrites interleaving with appends), no deal both submitted
     and unresolved, and the egress counters agree with the flags in the
@@ -208,9 +209,9 @@ def test_three_loops_concurrent_soak(spark, tmp_path):
                 errors.append(("egress", e))
 
     def rate_loop(name, ckpt, body):
-        # 1 s ticks, like ingest: a tick merges only its attempted or
-        # accepted rows, so the two tick loops leave the table lock free
-        # enough that every row is ingested within seconds of its slice
+        # 1 s ticks, like ingest: no tick holds up an append, which
+        # rebases over a tick's commit, so every row is ingested within
+        # seconds of its slice
         return (
             spark.readStream.format("rate").option("rowsPerSecond", 1).load()
             .writeStream.queryName(name).foreachBatch(body)
@@ -276,7 +277,7 @@ def test_three_loops_concurrent_soak(spark, tmp_path):
     # had a payload at flag time (the eligibility predicate keys on
     # payload_cid, matching the reference — corpus rows are BORN in any
     # state, some with payloads, so a bare state assert would be wrong).
-    # The lost-update anomaly the lock prevents would surface as a row
+    # The lost-update anomaly the commit rule prevents would surface as a row
     # BOTH flagged AND attempted-this-run-with-a-miss (enrichment clears
     # the payload and sets UNRESOLVED/TERMINAL on a miss; a flagged row
     # has a payload, so the queue can never pick it up afterward — the

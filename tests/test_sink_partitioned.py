@@ -8,10 +8,12 @@ from __future__ import annotations
 import glob
 import os
 import shutil
+import sys
 import threading
 import time
 from urllib.parse import urlparse
 
+import pytest
 from conftest import SF_SMALL, count_jobs
 from pyspark.sql import functions as F
 
@@ -24,7 +26,6 @@ from spark_deal_observer_spark.operators.state import (
     state_counts,
 )
 from spark_deal_observer_spark.plans.deals import REF_TS, deals_df, eligible_deals
-from spark_deal_observer_spark.streaming.concurrency import table_lock
 from spark_deal_observer_spark.streaming.egress import submit_eligible
 from spark_deal_observer_spark.streaming.enrichment import enrich_tick
 from spark_deal_observer_spark.streaming.sink import (
@@ -232,35 +233,10 @@ def test_merge_overwrite_evaluates_updates_once(spark, tmp_path):
     assert sink.read().where(F.col("submitted_at") == now).count() >= seen.value
 
 
-
-
-def test_compact_waits_for_the_table_lock(spark, tmp_path):
-    """compact() reads, rewrites and commits partitions inside the table
-    lock: while another thread holds it, compaction cannot finish, so no
-    write landing mid-compaction is dropped by a stale file list."""
-    deals = deals_df(spark, SF_SMALL).where(F.col("activated_at_epoch") < 4622100)
-    sink = PartitionedDealTableSink(spark, str(tmp_path / "table"))
-    for i in range(2):  # one bucket, two files
-        sink.append_dedup(deals.where(F.col("id") % 2 == i))
-    rows = sink.read().orderBy("id").collect()
-    out = {}
-    worker = threading.Thread(target=lambda: out.update(done=sink.compact()))
-
-    with table_lock(sink.path):
-        worker.start()
-        worker.join(timeout=5)
-        assert worker.is_alive(), "compact() finished while another thread held the lock"
-    worker.join(timeout=120)
-    assert not worker.is_alive()
-    assert out["done"] == {4622000 // BUCKET_WIDTH: 1}
-    assert sink.read().orderBy("id").collect() == rows
-
-
-def test_read_is_a_snapshot_and_takes_no_lock(spark, tmp_path):
+def test_read_is_a_snapshot(spark, tmp_path):
     """A read resolves one committed version: an append and a merge
     committed after it neither change its DataFrame nor break it (the
-    merge's files replace the ones it reads). Neither it nor count()
-    waits for the table lock."""
+    merge's files replace the ones it reads)."""
     deals = deals_df(spark, SF_SMALL)
     sink = PartitionedDealTableSink(spark, str(tmp_path / "table"))
     sink.append_dedup(deals.where(F.col("activated_at_epoch") < MID_EPOCH))
@@ -270,19 +246,9 @@ def test_read_is_a_snapshot_and_takes_no_lock(spark, tmp_path):
 
     sink.append_dedup(deals.where(F.col("activated_at_epoch") >= MID_EPOCH))
     sink.merge_overwrite(sink.read().withColumn("submitted_at", now), ["id"])
-    out = {}
-
-    def reads():
-        out["old"] = (df.count(), df.where(F.col("submitted_at") == now).count())
-        out["new"] = sink.count()
-
-    worker = threading.Thread(target=reads)
-    with table_lock(sink.path):
-        worker.start()
-        worker.join(timeout=120)
-        assert not worker.is_alive(), "a read waited for the table lock"
     n_keys = deals.select(*DEAL_KEY).dropDuplicates().count()
-    assert out == {"old": old, "new": n_keys}
+    assert (df.count(), df.where(F.col("submitted_at") == now).count()) == old
+    assert sink.count() == n_keys
     assert old[0] < n_keys and old[1] < old[0]
 
 
@@ -290,7 +256,9 @@ def test_compact_collects_versions_past_retention(spark, tmp_path):
     """compact() collects garbage: a version's files survive while its
     successor is younger than RETAIN_S, so a read of it still runs, and
     go once the successor is older. Files no version names (a crashed
-    write's part file, a stage) go at once."""
+    write's part file, a stage) go once they are older than RETAIN_S; a
+    younger one may be a write between its moves and its commit, and
+    stays."""
     deals = deals_df(spark, SF_SMALL)
     sink = PartitionedDealTableSink(spark, str(tmp_path / "table"))
     sink.append_dedup(deals)
@@ -303,22 +271,29 @@ def test_compact_collects_versions_past_retention(spark, tmp_path):
     assert _paths(old) - _paths(sink.read()), "expected files the merge retired"
 
     bucket = os.path.join(sink.path, f"epoch_bucket={4622000 // BUCKET_WIDTH}")
-    orphan = os.path.join(bucket, "part-orphan.parquet")
-    shutil.copy(min(_paths(old)), orphan)
-    os.makedirs(os.path.join(sink.path, "_stage_deadbeef"))
+    aged = time.time() - RETAIN_S - 60
+    orphans, stages = [], []
+    for age in ("young", "aged"):
+        orphans.append(os.path.join(bucket, f"part-{age}.parquet"))
+        shutil.copy(min(_paths(old)), orphans[-1])
+        stages.append(os.path.join(sink.path, f"_stage_{age}"))
+        os.makedirs(stages[-1])
+    for p in (orphans[1], stages[1]):
+        os.utime(p, (aged, aged))
 
     sink.compact()
     committed |= _paths(sink.read())
-    assert _on_disk(sink) == committed
-    assert not glob.glob(os.path.join(sink.path, "_stage_*"))
+    assert _on_disk(sink) == committed | {orphans[0]}
+    assert glob.glob(os.path.join(sink.path, "_stage_*")) == [stages[0]]
     assert old.orderBy("id").collect() == rows
 
-    aged = time.time() - RETAIN_S - 60
-    for entry in glob.glob(os.path.join(sink.path, "_log", "*.json")):
-        os.utime(entry, (aged, aged))
+    # RETAIN_S passes: every log entry, data file and stage ages
+    for p in glob.glob(os.path.join(sink.path, "**"), recursive=True):
+        os.utime(p, (aged, aged))
     latest = sink.read().orderBy("id").collect()
     assert sink.compact() == {}
     assert _on_disk(sink) == _paths(sink.read())
+    assert not glob.glob(os.path.join(sink.path, "_stage_*"))
     assert sink.read().orderBy("id").collect() == latest
 
 
@@ -481,3 +456,188 @@ def test_egress_merge_and_read_job_budget(spark, tmp_path):
 
     _, read_jobs = count_jobs(spark, sink.read)
     assert read_jobs == 0
+
+
+def _race_cases(deals):
+    """{case: (setup, racer, write, rebases)}: each a write on a sink,
+    over rows of one epoch bucket. `rebases` says whether `write` keeps
+    the files it staged before the racer's commit (it removes no file
+    the racer removed) or redoes over the racer's version."""
+    rows = deals.where(F.col("activated_at_epoch") < 4622100)  # epoch bucket 46220
+    now = F.lit(REF_TS).cast("timestamp_ntz")
+    thirds = [rows.where(F.col("id") % 3 == i) for i in range(3)]
+
+    def stored(parts):
+        return lambda s: [s.append_dedup(p) for p in parts]
+
+    def append(df):
+        return lambda s: s.append_dedup(df)
+
+    def mark(df):  # an egress mark of the even ids
+        u = df.where(F.col("id") % 2 == 0).withColumn("submitted_at", now)
+        return lambda s: s.merge_overwrite(u, ["id"])
+
+    def attempt(df):  # an enrichment tick's rows: the odd ids, as Arrow
+        u = df.where(F.col("id") % 2 == 1).withColumn("last_payload_retrieval_attempt", now)
+        return lambda s: s.merge_overwrite(u.toArrow(), ["id"])
+
+    compact = PartitionedDealTableSink.compact
+    return {
+        # the append replays the stored third and adds two new ones
+        "append-vs-merge": (stored(thirds[:1]), mark(thirds[0]), append(rows), True),
+        "merge-vs-append": (stored(thirds[:1]), append(rows), mark(thirds[0]), True),
+        "merge-vs-merge": (stored([rows]), mark(rows), attempt(rows), False),
+        "merge-vs-compact": (stored(thirds[:2]), compact, mark(thirds[0]), False),
+        "compact-vs-append": (stored(thirds[:2]), append(rows), compact, True),
+    }
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["append-vs-merge", "merge-vs-append", "merge-vs-merge", "merge-vs-compact", "compact-vs-append"],
+)
+def test_a_write_raced_by_another_writer_commits_the_serial_table(spark, tmp_path, monkeypatch, case):
+    """A second sink on the same path commits just before a write's
+    first commit link, as another process would. The write then commits
+    the table the two writes give run one after the other — the racer
+    first — with each key once. A write that removes no file the racer
+    removed rebases: it commits the files it had staged. One that does
+    (a merge after another merge or a compaction of its bucket) redoes:
+    its first files are deleted, and the result is merge_update applied
+    twice."""
+    deals = deals_df(spark, SF_SMALL)
+    setup, racer, write, rebases = _race_cases(deals)[case]
+    serial = PartitionedDealTableSink(spark, str(tmp_path / "serial"))
+    for w in (setup, racer, write):
+        w(serial)
+
+    path = str(tmp_path / "table")
+    sink = PartitionedDealTableSink(spark, path)
+    setup(sink)
+    link, rename = os.link, os.rename
+    pending = [lambda: racer(PartitionedDealTableSink(spark, path))]
+    moved: list[str] = []
+
+    def racing_link(src, dst):
+        if pending:
+            pending.pop()()
+        return link(src, dst)
+
+    def recording_rename(src, dst):
+        if pending:
+            moved.append(dst)
+        return rename(src, dst)
+
+    monkeypatch.setattr(os, "link", racing_link)
+    monkeypatch.setattr(os, "rename", recording_rename)
+    write(sink)
+    monkeypatch.undo()
+
+    assert moved and not pending
+    got, want = sink.read(), serial.read()
+    assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
+    assert got.count() == got.select(*DEAL_KEY).dropDuplicates().count()
+    if rebases:
+        assert set(moved) <= _paths(got)
+    else:
+        assert not set(moved) & _on_disk(sink)
+
+
+def test_append_commits_while_an_egress_tick_posts(spark, tmp_path):
+    """Ingest does not wait for egress: an append into the buckets an
+    egress tick is posting from commits while the tick's poster is
+    blocked, and the mark committed after it keeps the appended rows."""
+    deals = deals_df(spark, SF_SMALL)
+    sink = PartitionedDealTableSink(spark, str(tmp_path / "table"))
+    sink.append_dedup(deals.where(F.col("id") % 2 == 0))
+    now = F.lit("2099-01-01 00:00:00").cast("timestamp_ntz")
+    posting, appended = threading.Event(), threading.Event()
+    out: dict = {}
+
+    def poster(payload):
+        if not posting.is_set():  # the first POST blocks until the append returns
+            posting.set()
+            out["append_during_post"] = appended.wait(60)
+        return {"ingested": len(payload)}
+
+    def tick():
+        try:
+            out["egress"] = submit_eligible(sink, poster, now=now)
+        except Exception as e:  # re-raised below
+            out["egress"] = e
+
+    egress = threading.Thread(target=tick)
+    egress.start()
+    try:
+        assert posting.wait(60), "the egress tick never posted"
+        sink.append_dedup(deals)
+    finally:
+        appended.set()
+        egress.join(120)
+    assert not egress.is_alive()
+    assert out["append_during_post"], "the append waited for the egress tick"
+    res = out["egress"]
+    if isinstance(res, Exception):
+        raise res
+    assert res["failed_batches"] == 0 and res["submitted"] > 0
+
+    t = sink.read()
+    n_keys = deals.select(*DEAL_KEY).dropDuplicates().count()
+    assert t.count() == t.select(*DEAL_KEY).dropDuplicates().count() == n_keys
+    assert t.where(F.col("submitted_at") == now).count() == res["submitted"]
+
+
+def test_concurrent_writers_on_one_bucket_lose_no_update(spark, tmp_path, monkeypatch):
+    """Five threads each merge a disjoint fifth of one bucket's rows while
+    a sixth appends new rows to it, all at once through one sink: commits
+    lose races to each other (a link finds its version taken), and every
+    merge and the append still land, each key once."""
+    rows = deals_df(spark, SF_SMALL).where(F.col("activated_at_epoch") < 4622100)
+    sink = PartitionedDealTableSink(spark, str(tmp_path / "table"))
+    sink.append_dedup(rows.where(F.col("id") % 2 == 0))
+    stored = sink.read().localCheckpoint()
+    now = F.lit("2099-01-01 00:00:00").cast("timestamp_ntz")
+    updates = [
+        stored.where(F.col("id") % 5 == k).withColumn("last_payload_retrieval_attempt", now).toArrow()
+        for k in range(5)
+    ]
+    writes = [lambda u=u: sink.merge_overwrite(u, ["id"]) for u in updates]
+    writes.append(lambda: sink.append_dedup(rows))
+    link, lost = os.link, []
+
+    def counting_link(src, dst):
+        try:
+            return link(src, dst)
+        except FileExistsError:
+            lost.append(dst)
+            raise
+
+    monkeypatch.setattr(os, "link", counting_link)
+    start, errors = threading.Barrier(len(writes), timeout=60), []
+
+    def run(write):
+        try:
+            start.wait()
+            write()
+        except Exception as e:  # re-raised below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)
+    try:
+        threads = [threading.Thread(target=run, args=(w,)) for w in writes]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert lost, "no commit lost a race"
+
+    t = sink.read()
+    n_keys = rows.select(*DEAL_KEY).dropDuplicates().count()
+    assert t.count() == t.select(*DEAL_KEY).dropDuplicates().count() == n_keys
+    attempted = t.where(F.col("last_payload_retrieval_attempt") == now)
+    assert attempted.count() == stored.count()
