@@ -10,6 +10,17 @@ driver process hosts it next to the SparkSession, each request runs a
 REGISTERED query by name — never caller-supplied SQL, so the API can't be
 used to smuggle arbitrary jobs — and results are JSON with a hard row cap
 (it's a read API, not an export path; exports go through the egress sink).
+
+Each registered query is built once per server, on its first request, and
+the built DataFrame is held for the server's life. Every request then plans
+and runs a fresh `.limit()` Dataset over it, so no request re-runs the
+query's Python plan building and Catalyst analysis, two requests never
+execute one plan object, and no finished stage or result is reused. The
+corpus under `sf_dir` is treated as static: a rewritten corpus needs a new
+`create_app` (live routes over the deal table will key the held DataFrame
+on the version log's latest version instead). A held DataFrame that fails
+to run, say because a published checkpoint behind it died or its files
+went, is dropped, rebuilt and run once more within the same request.
 """
 
 from __future__ import annotations
@@ -19,7 +30,7 @@ import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_ROW_CAP = 1000
 
@@ -31,8 +42,33 @@ def create_app(
     port: int = 0,
     row_cap: int = DEFAULT_ROW_CAP,
 ) -> ThreadingHTTPServer:
-    """Build the HTTP server (not yet serving). `port=0` = ephemeral."""
+    """Build the HTTP server (not yet serving). `port=0` = ephemeral.
+
+    Queries are built once per server, each under a lock of its own so one
+    build never blocks another's, and each request runs a fresh `.limit()`
+    Dataset over the held DataFrame. The corpus under `sf_dir` must stay
+    as it is for the server's life."""
     from .plans.registry import REGISTRY
+
+    held: dict[str, DataFrame] = {}
+    build_locks: dict[str, threading.Lock] = {}
+
+    def built(name: str, stale: DataFrame | None = None) -> DataFrame:
+        """`name`'s held DataFrame, built on first use or when the held one
+        is `stale` (a DataFrame that failed to run)."""
+        with build_locks.setdefault(name, threading.Lock()):
+            df = held.get(name)
+            if df is None or df is stale:
+                held.pop(name, None)
+                df = held[name] = REGISTRY[name].fn(spark, sf_dir)
+            return df
+
+    def run(name: str, limit: int) -> list:
+        df = built(name)
+        try:
+            return df.limit(limit).collect()
+        except Exception:  # noqa: BLE001 — a dead held plan gets one fresh build
+            return built(name, stale=df).limit(limit).collect()
 
     class Handler(BaseHTTPRequestHandler):
         def log_message(self, *_args) -> None:  # quiet test output
@@ -75,8 +111,7 @@ def create_app(
                     return
                 limit = min(limit, row_cap)
                 try:
-                    df = REGISTRY[name].fn(spark, sf_dir).limit(limit)
-                    rows = [r.asDict(recursive=True) for r in df.collect()]
+                    rows = [r.asDict(recursive=True) for r in run(name, limit)]
                 except Exception as exc:  # noqa: BLE001 — surface as 500
                     self._send_json(500, {"error": str(exc)})
                     return
